@@ -19,7 +19,10 @@ from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.sources import osb  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.sql_frontend import Engine  # noqa: E402
 
-EXAMPLES = os.path.dirname(os.path.abspath(__file__))
+# the reference's SQL scripts, adapted to the engine's SQL front-end
+SCRIPTS = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "tests", "fixtures"
+)
 
 
 def main() -> None:
@@ -33,11 +36,12 @@ def main() -> None:
     eng.bind_source("pg_osb_movies", dirs["movies"], osb.MOVIES_SCHEMA)
 
     for script in ("movies-cdc.sql", "tickets-cdc.sql"):
-        with open(os.path.join(EXAMPLES, script)) as f:
+        with open(os.path.join(SCRIPTS, script)) as f:
             eng.execute(f.read())
     eng.await_all()
-    with open(os.path.join(EXAMPLES, "revenue-analytics.sql")) as f:
+    with open(os.path.join(SCRIPTS, "revenue-analytics.sql")) as f:
         eng.execute(f.read())
+    eng.await_all()
 
     served = eng.snapshot("movie_revenue_realtime")
     print(f"\nmovie_revenue_realtime ({served.count()} movies):")

@@ -46,7 +46,7 @@ from dataclasses import dataclass, field
 from datetime import datetime
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from flink_cdc_fluss_quickstart_spark.sources.osb import changelog_stream
@@ -427,9 +427,15 @@ class IncrementalAggView:
         target = eng.stores[self.target_name]
         spec = eng.tables[self.target_name]
         anchor_key = shape.key_by_table[shape.anchor_table]
-        affected = affected.distinct().localCheckpoint(eager=True)
-        # bounded: one row per distinct group key in the micro-batch
-        n_affected = affected.count()
+        # the pinning job also counts the keys (one row per distinct group
+        # key in the micro-batch): no second job for the stat
+        obs = Observation()
+        affected = (
+            affected.distinct()
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_affected = obs.get["n"]
 
         for tbl, vname in shape.view_names.items():
             snap = eng.stores[tbl].snapshot()

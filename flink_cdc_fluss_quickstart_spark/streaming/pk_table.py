@@ -11,6 +11,10 @@ collapses those three roles into one structure, Spark-first:
   readers see an atomic snapshot; writers only rewrite CHANGED buckets
   (the 100 TB property: a micro-batch touching 2 of 1024 buckets rewrites
   2/1024ths of the table, not all of it),
+- the manifest also carries the payload schema of the last data commit, so
+  every read hands it to the scan and no read runs a Spark job to infer it
+  from file footers (a manifest written before the field existed reads by
+  inference until its next commit records it),
 - the manifest records the last applied `batch_id` per writer id, making
   foreachBatch upserts idempotent under replay -- the exactly-once story
   (reference: EXACTLY_ONCE checkpointing, tickets-cdc.sql:2-5) without
@@ -21,7 +25,8 @@ Batch reads of the table ARE the "lakehouse" surface: plain parquet scans
 with partition/bucket pruning available to Catalyst. Two further lakehouse
 semantics ride the same manifest:
 
-- **time travel**: the manifest keeps per-commit bucket-pointer deltas, so
+- **time travel**: the manifest keeps per-commit bucket-pointer deltas (and
+  the prior bucket count / schema of a commit that changed them), so
   `snapshot(version=)` / `snapshot_at_batch(writer, batch)` reconstruct any
   retained past state (Iceberg snapshot reads; expiry via GC grace +
   HISTORY_KEEP, expired reads raise rather than silently mis-answer),
@@ -48,6 +53,13 @@ base+deltas with a latest-per-key merge-on-read keyed by commit version.
 folds deltas back into the base -- amortizing the rewrite over many
 ingests instead of paying it on every one. Tables never ingested into
 have no composite keys and keep the exact pre-delta read path.
+
+**Metadata costs no Spark job.** Writers pin their input with one eager
+`localCheckpoint` whose job also reports, through an observation, the set
+of touched buckets and the row count (bounded by n_buckets, never per
+row). merge folds with the same anti-join recipe the merge-on-read uses
+(`_fold`): the touched buckets' old rows minus the batch's keys, plus the
+batch's surviving rows -- no window over old and new rows together.
 """
 
 from __future__ import annotations
@@ -61,7 +73,8 @@ import time
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from flink_cdc_fluss_quickstart_spark.operators.changelog import (
     OP_DELETE,
@@ -125,7 +138,28 @@ def _bucket_expr(keys: Sequence[str], n_buckets: int) -> F.Column:
 # sort-merge. Sized well under the session's 64m autoBroadcastJoinThreshold:
 # the key projection of 32 MiB of columnar delta decompresses toward the
 # threshold, never past the r15 audit's observed 2x overshoot regime.
+# merge() gates its batch key set on the same bound (see _fold).
 DELTA_BROADCAST_MAX_BYTES = 32 * 1024 * 1024
+
+
+def _as_nullable(t):
+    """A schema's JSON (``DataType.jsonValue()``) with every field, array
+    element and map value nullable: the form file sources read a written
+    schema back in, so equal payloads always record equal schemas."""
+    if not isinstance(t, dict):
+        return t
+    t = dict(t)
+    if t["type"] == "struct":
+        t["fields"] = [
+            {**f, "nullable": True, "type": _as_nullable(f["type"])}
+            for f in t["fields"]
+        ]
+    elif t["type"] == "array":
+        t.update(containsNull=True, elementType=_as_nullable(t["elementType"]))
+    elif t["type"] == "map":
+        t.update(valueContainsNull=True, keyType=_as_nullable(t["keyType"]),
+                 valueType=_as_nullable(t["valueType"]))
+    return t
 
 
 def _bucket_colocate(df: DataFrame, n_partitions: int) -> DataFrame:
@@ -344,6 +378,7 @@ class PKTable:
             buckets = m["buckets"]
         else:
             buckets = self._buckets_at(m, version)
+        schema = self._at(m, version, "schema", m.get("schema"))
         dirs = [os.path.join(self.path, d) for d in buckets.values()]
         if version is not None:
             gone = [d for d in dirs if not os.path.exists(d)]
@@ -368,8 +403,8 @@ class PKTable:
             # behavior every table had before ingest() existed
             if not base_dirs:
                 return None
-            return self.spark.read.format(self.data_format).load(base_dirs)
-        return self._resolve_dirs(base_dirs, delta_dirs)
+            return self._read(base_dirs, schema)
+        return self._resolve_dirs(base_dirs, delta_dirs, schema)
 
     def lookup(self, probe: DataFrame, version: int | None = None) -> DataFrame | None:
         """Bucket-pruned point read -- the Fluss PK-table lookup serving
@@ -377,10 +412,14 @@ class PKTable:
         this, flink-gen.sh:118-142): resolve ONLY the buckets the probed
         keys hash into and return those keys' current rows.
 
-        Cost: hash the probe keys to bucket ids (row-local), one
-        driver-side distinct bounded by n_buckets scalars, a scan of the
-        touched buckets' base + pending delta files, and one left-semi
-        join. A k-key lookup against an N-bucket table reads at most
+        Cost: one Spark job to build the read -- the eager pin of the
+        probe keys (cast to the stored key types the manifest's schema
+        records), whose observation reports the set of bucket ids they
+        hash to (bounded by n_buckets scalars, never per key) -- then, when
+        the result is read, a scan of the touched buckets' base + pending
+        delta files in the recorded schema and one left-semi join (which
+        ignores duplicate probe keys, so the probe is not deduplicated
+        first). A k-key lookup against an N-bucket table reads at most
         min(k, N)/N of it -- at 100 TB that is the difference between a
         point read and a table scan -- and nothing table-sized shuffles
         (the delta fold is the anti/union resolve). Missing keys have no
@@ -400,35 +439,34 @@ class PKTable:
             # bucket count IN EFFECT at that version -- the current count
             # would route keys to buckets that did not exist then
             buckets = self._buckets_at(m, version)
-            nb = self._n_buckets_at(m, version)
+            nb = self._at(m, version, "nb", m.get("n_buckets", self.n_buckets))
         # xxhash64 is TYPE-sensitive (hash(1 int) != hash(1 bigint)), so a
         # probe whose key columns arrive in a different-but-compatible type
         # would hash into the WRONG buckets and silently miss every row:
-        # align the probe to the stored key types first (one footer read).
-        schema_src = self._empty_frame(buckets)
+        # align the probe to the stored key types first (from the
+        # manifest's schema; a footer read only for a legacy manifest).
+        schema_src = self._empty_frame(
+            buckets, self._at(m, version, "schema", m.get("schema"))
+        )
         if schema_src is None:
             return None  # table has no data dirs at all: nothing to serve
         stored = {f.name: f.dataType for f in schema_src.schema.fields}
-        # pin the probe key set before collecting the bucket ids: the same
-        # materialized keys must feed BOTH the pruning collect and the semi
-        # join below. A non-deterministic or transient probe (sampled /
-        # rand-derived / a re-evaluated micro-batch) re-run differently
+        # pin the probe key set, observing its bucket ids in the same job:
+        # the same materialized keys must feed BOTH the pruning set and the
+        # semi join below. A non-deterministic or transient probe (sampled
+        # / rand-derived / a re-evaluated micro-batch) re-run differently
         # between the two would join keys whose buckets were never
         # selected -- silently missing rows. merge()/ingest() pin their
         # batch for the same reason.
+        obs = Observation()
         keysel = (
             probe.select(
                 *[F.col(k).cast(stored[k]).alias(k) for k in self.keys]
             )
-            .distinct()
+            .observe(obs, F.collect_set(_bucket_expr(self.keys, nb)).alias("b"))
             .localCheckpoint(eager=True)
         )
-        wanted = {
-            r["__b"]
-            for r in keysel.select(
-                _bucket_expr(self.keys, nb).alias("__b")
-            ).distinct().collect()
-        }
+        wanted = set(obs.get["b"])
         sel = {
             k: d for k, d in buckets.items()
             if int(k.split("#", 1)[0]) in wanted
@@ -453,29 +491,59 @@ class PKTable:
         if not base_dirs and not delta_dirs:
             return schema_src  # every probed bucket empty: zero rows
         if not delta_dirs:
-            resolved = self.spark.read.format(self.data_format).load(base_dirs)
+            resolved = self._read(base_dirs, schema_src.schema)
         else:
-            resolved = self._resolve_dirs(base_dirs, delta_dirs)
+            resolved = self._resolve_dirs(base_dirs, delta_dirs, schema_src.schema)
         # the semi join reorders the key columns first; serve the stored
         # column order so both "no rows" shapes and the hit path agree
         return resolved.join(keysel, list(self.keys), "left_semi").select(
             *schema_src.columns
         )
 
-    def _empty_frame(self, buckets: dict) -> DataFrame | None:
-        """Zero-row frame in the table's serving schema, sourced from any
-        live data dir (base dirs preferred; a delta dir's internal
-        __op/__dv columns are dropped). None only when the table has no
-        data dirs at all -- the schema is unknowable then."""
+    def _empty_frame(self, buckets: dict,
+                     schema: dict | StructType | None) -> DataFrame | None:
+        """Zero-row frame in the table's serving schema over any live data
+        dir (base dirs preferred; a delta dir's internal __op/__dv columns
+        are dropped). None only when the table has no data dirs at all,
+        matching snapshot()'s empty-table contract."""
         for k, d in sorted(buckets.items(), key=lambda kv: "#" in kv[0]):
             p = os.path.join(self.path, d)
             if os.path.exists(p):
-                df = self.spark.read.format(self.data_format).load(p).limit(0)
-                return df.drop("__op", "__dv") if "#" in k else df
+                df = self._read([p], schema, delta="#" in k).limit(0)
+                return df.drop("__op", "__dv")
         return None
 
+    def _read(self, dirs: list[str], schema: dict | StructType | None,
+              delta: bool = False) -> DataFrame:
+        """Scan ``dirs`` in the recorded payload ``schema`` -- plus the
+        __op/__dv columns for delta dirs -- so the scan infers nothing from
+        file footers (that inference is a Spark job per read). ``None``
+        (a manifest that predates schema recording) reads by inference."""
+        reader = self.spark.read.format(self.data_format)
+        if schema is not None:
+            st = StructType.fromJson(schema) if isinstance(schema, dict) else schema
+            if delta:
+                st = StructType([*st.fields, StructField("__op", StringType()),
+                                 StructField("__dv", LongType())])
+            reader = reader.schema(st)
+        return reader.load(dirs)
+
+    def _fold(self, base: DataFrame, newer_keys: DataFrame, newer: DataFrame,
+              small: bool) -> DataFrame:
+        """Last-writer-wins fold of unique-per-key ``base`` rows under a
+        newer set: ``base`` ANTI JOIN ``newer_keys`` UNION ``newer``. A base
+        row survives only when no newer row (a delete included) has its
+        key, so nothing is windowed and only ``newer`` needs a per-key
+        order. The key side broadcasts when ``small`` (the caller's size
+        gate against DELTA_BROADCAST_MAX_BYTES) and pins sort-merge
+        otherwise -- the one shape whose memory stays partition-bounded
+        when the newer set scales with the table."""
+        newer_keys = F.broadcast(newer_keys) if small else newer_keys.hint("merge")
+        return base.join(newer_keys, list(self.keys), "left_anti").unionByName(newer)
+
     def _resolve_dirs(
-        self, base_dirs: list[str], delta_dirs: list[str]
+        self, base_dirs: list[str], delta_dirs: list[str],
+        schema: dict | StructType | None,
     ) -> DataFrame | None:
         """Merge-on-read over base + delta files: latest row per key by
         commit version (delta files carry their commit version in the
@@ -490,19 +558,16 @@ class PKTable:
 
             base ANTI-JOIN (distinct delta keys)  UNION  latest(deltas)
 
-        -- ONE pruned scan of the base streaming through an anti join
-        (broadcast when the delta key set is small, the daily-ingest case)
-        and a window over the delta rows alone. Nothing table-sized is
-        ever shuffled or windowed at any delta depth; the pre-r14 plan
-        folded the whole base through the latest-by-key window, a
-        full-table shuffle per snapshot read (A/B in SCALE.md)."""
-        base = (
-            self.spark.read.format(self.data_format).load(base_dirs)
-            if base_dirs else None
-        )
+        -- the _fold recipe merge() shares: ONE pruned scan of the base
+        streaming through an anti join (broadcast when the delta key set
+        is small, the daily-ingest case) and a window over the delta rows
+        alone. Nothing table-sized is ever shuffled or windowed at any
+        delta depth; the pre-r14 plan folded the whole base through the
+        latest-by-key window, a full-table shuffle per snapshot read (A/B
+        in SCALE.md)."""
+        base = self._read(base_dirs, schema) if base_dirs else None
         deltas = (
-            self.spark.read.format(self.data_format).load(delta_dirs)
-            if delta_dirs else None
+            self._read(delta_dirs, schema, delta=True) if delta_dirs else None
         )
         if deltas is None:
             return base
@@ -513,21 +578,17 @@ class PKTable:
         )
         if base is None:
             return resolved
-        dkeys = deltas.select(*self.keys).distinct()
-        # join-strategy pin, gated on the TRUE on-disk delta size (r15
-        # audit, tools/audit_delta_read.py --wide): the distinct delta-key
-        # frame is an aggregate over a pruned scan -- the static estimate
-        # undershoots so badly that the planner (and even the AQE-final
-        # plan) broadcast a 16M-key build side at 2x the 64m threshold.
-        # Daily-ingest deltas broadcast (the designed-for case: no exchange
-        # added over the compacted fast path); a bulk-backfill backlog pins
-        # sort-merge -- the only shape whose memory stays partition-bounded
-        # when the backlog scales with the table.
-        if _dir_bytes(delta_dirs) <= DELTA_BROADCAST_MAX_BYTES:
-            dkeys = F.broadcast(dkeys)
-        else:
-            dkeys = dkeys.hint("merge")
-        return base.join(dkeys, list(self.keys), "left_anti").unionByName(resolved)
+        # join-strategy gate on the TRUE on-disk delta size (r15 audit,
+        # tools/audit_delta_read.py --wide): the distinct delta-key frame is
+        # an aggregate over a pruned scan -- the static estimate undershoots
+        # so badly that the planner (and even the AQE-final plan) broadcast
+        # a 16M-key build side at 2x the 64m threshold. Daily-ingest deltas
+        # broadcast (the designed-for case: no exchange added over the
+        # compacted fast path); a bulk-backfill backlog pins sort-merge.
+        return self._fold(
+            base, deltas.select(*self.keys).distinct(), resolved,
+            _dir_bytes(delta_dirs) <= DELTA_BROADCAST_MAX_BYTES,
+        )
 
     def version_at(self, ts: float) -> int:
         """The largest committed version whose commit time is <= ``ts`` --
@@ -589,19 +650,23 @@ class PKTable:
                     buckets[b] = old
         return buckets
 
-    def _n_buckets_at(self, m: dict, version: int) -> int:
-        """The bucket count in effect at manifest ``version`` -- the same
-        backwards history walk as _buckets_at, undoing each later rescale
-        commit (the only commit kind that records an ``nb`` field: the
-        PRE-rescale count). Bounds/floor checks ride on _buckets_at, which
-        every caller runs first."""
-        nb = m.get("n_buckets", self.n_buckets)
+    @staticmethod
+    def _at(m: dict, version: int | None, field: str, current):
+        """A table property in effect at manifest ``version`` (``current``
+        when ``version`` is None) -- the same backwards history walk as
+        _buckets_at, undoing each later commit that recorded the property's
+        PRIOR value under ``field``: a rescale records its pre-rescale
+        count as ``nb``, a schema-changing data commit its prior schema as
+        ``schema``. Bounds/floor checks ride on _buckets_at, which every
+        versioned caller runs first."""
+        if version is None:
+            return current
         for e in sorted(m.get("history", []), key=lambda e: -e["v"]):
             if e["v"] <= version:
                 break
-            if e.get("nb") is not None:
-                nb = e["nb"]
-        return nb
+            if field in e:
+                current = e[field]
+        return current
 
     def snapshot_at_batch(self, writer_id: str, batch_id: int) -> DataFrame | None:
         """Read-at-batch: the table state right after `writer_id` committed
@@ -622,7 +687,13 @@ class PKTable:
         return self.snapshot(version=max(versions))
 
     def _record_commit(self, m: dict, version: int, writer_id: str | None,
-                       batch_id: int | None, changed: dict) -> None:
+                       batch_id: int | None, changed: dict,
+                       schema: StructType | None = None) -> None:
+        """Append the commit's history entry. ``schema`` is the payload
+        schema the commit wrote (None: it wrote no data files); when it
+        differs from the manifest's, the entry keeps the prior one (None
+        for a fresh or legacy manifest: read by inference) so versioned
+        reads use the schema in effect at their version."""
         # first commit over a legacy (pre-history) manifest: versions below
         # the previous one are unreconstructable -- pin the floor there so
         # they raise as expired instead of walking a partial history
@@ -637,10 +708,14 @@ class PKTable:
         ts = time.time()
         if hist and hist[-1].get("ts") is not None:
             ts = max(ts, hist[-1]["ts"])
-        hist.append(
-            {"v": version, "writer": writer_id, "batch": batch_id,
-             "changed": changed, "ts": ts}
-        )
+        entry = {"v": version, "writer": writer_id, "batch": batch_id,
+                 "changed": changed, "ts": ts}
+        if schema is not None:
+            written = _as_nullable(schema.jsonValue())
+            if written != m.get("schema"):
+                entry["schema"] = m.get("schema")
+                m["schema"] = written
+        hist.append(entry)
         if len(hist) > HISTORY_KEEP:
             dropped = hist[: len(hist) - HISTORY_KEEP]
             hist = hist[len(hist) - HISTORY_KEEP:]
@@ -653,6 +728,24 @@ class PKTable:
         return self._read_manifest()["txn"].get(writer_id, -1)
 
     # -- write ------------------------------------------------------------
+
+    def _pin_batch(self, changes: DataFrame) -> tuple[DataFrame, list[int], int]:
+        """Collapse a changelog batch to its latest row per key (a batch
+        may touch a key twice), tag each row's bucket and pin it -- the
+        source micro-batch is transient, so every later read must see the
+        same rows. The pinning job also reports the touched buckets and
+        the row count through an observation: no extra job, and the set is
+        bounded by n_buckets (one int per DISTINCT bucket, never per row)."""
+        obs = Observation()
+        pinned = (
+            latest_by_key(changes, self.keys, self.order_by)
+            .withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
+            .observe(obs, F.collect_set("__bucket").alias("b"),
+                     F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        seen = obs.get
+        return pinned, sorted(seen["b"]), seen["n"]
 
     def merge(self, changes: DataFrame, batch_id: int | None = None,
               writer_id: str = "default", op_col: str = "op") -> None:
@@ -686,19 +779,7 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        # collapse the batch itself first (a batch may touch a key twice)
-        batch_latest = latest_by_key(changes, self.keys, self.order_by)
-        batch_latest = batch_latest.withColumn(
-            "__bucket", _bucket_expr(self.keys, self.n_buckets)
-        ).localCheckpoint(eager=True)  # pin: source micro-batch is transient
-
-        # driver-side collect is bounded by n_buckets (one int per DISTINCT
-        # bucket, never per row): <= 4 values here, <= a few thousand at a
-        # realistic production bucket count -- metadata-sized by construction
-        affected = [
-            r["__bucket"]
-            for r in batch_latest.select("__bucket").distinct().collect()
-        ]
+        batch_latest, affected, n_rows = self._pin_batch(changes)
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)
@@ -708,31 +789,34 @@ class PKTable:
         payload_cols = [c for c in batch_latest.columns
                         if c not in (op_col, "__bucket")]
 
-        # union the CURRENT state of only the affected buckets (bucket
-        # pruning: untouched buckets are never read or rewritten) with the
-        # batch, take latest per key, drop deleted keys
+        # fold the CURRENT state of only the affected buckets (bucket
+        # pruning: untouched buckets are never read or rewritten) under the
+        # batch: an old row survives unless the batch carries its key; the
+        # batch's non-delete rows are the new state of the keys it carries
         old_dirs = [
             os.path.join(self.path, m["buckets"][str(b)])
             for b in affected
             if str(b) in m["buckets"]
         ]
         old_dirs = [d for d in old_dirs if os.path.exists(d)]
-        batch_rows = batch_latest.drop("__bucket").withColumn("__gen", F.lit(1))
+        written = batch_latest.filter(F.col(op_col) != OP_DELETE).select(
+            *payload_cols
+        )
         if old_dirs:
-            old = (
-                self.spark.read.format(self.data_format).load(old_dirs)
-                .withColumn(op_col, F.lit("I"))
-                .withColumn("__gen", F.lit(0))
+            # the batch key set broadcasts under the merge-on-read's gate,
+            # sized from the pinned row count and Spark's per-type key width
+            key_bytes = sum(
+                batch_latest._jdf.schema().apply(k).dataType().defaultSize()
+                for k in self.keys
             )
-            merged = latest_by_key(
-                old.unionByName(batch_rows), self.keys, ["__gen"]
-            )
-        else:
-            merged = batch_rows
-        result = (
-            merged.filter(F.col(op_col) != OP_DELETE)
-            .select(*payload_cols)
-            .withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
+            written = self._fold(
+                self._read(old_dirs, m.get("schema")),
+                batch_latest.select(*self.keys),
+                written,
+                n_rows * key_bytes <= DELTA_BROADCAST_MAX_BYTES,
+            ).select(*payload_cols)
+        result = written.withColumn(
+            "__bucket", _bucket_expr(self.keys, self.n_buckets)
         )
         # ONE partitioned write job for all affected buckets -- co-located
         # so each bucket lands as ONE file (see _bucket_colocate: the r15
@@ -762,7 +846,8 @@ class PKTable:
                 m["buckets"].pop(str(b), None)
         m["version"] = version
         m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed)
+        self._record_commit(m, version, writer_id, batch_id, changed,
+                            written.schema)
         expired = self._queue_gc(m, superseded)
         self._write_manifest(m)
         for d in expired:
@@ -777,7 +862,7 @@ class PKTable:
         write cost, nothing existing read or rewritten (vs merge(), whose
         bucket folds cost O(table) for a uniformly-hashed batch). Reads
         resolve base+deltas latest-per-key by commit version (same
-        last-writer-wins rule as merge's __gen fold); delete ops are
+        last-writer-wins rule as merge's fold); delete ops are
         retained as markers until compaction. Idempotent per
         (writer_id, batch_id), fenced, time-travelable -- identical
         guarantees to merge because the delta pointers live in the same
@@ -813,14 +898,7 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        batch_latest = latest_by_key(changes, self.keys, self.order_by)
-        batch_latest = batch_latest.withColumn(
-            "__bucket", _bucket_expr(self.keys, self.n_buckets)
-        ).localCheckpoint(eager=True)
-        affected = [
-            r["__bucket"]
-            for r in batch_latest.select("__bucket").distinct().collect()
-        ]
+        batch_latest, affected, _ = self._pin_batch(changes)
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)
@@ -855,7 +933,8 @@ class PKTable:
                 changed[key] = None  # new pointer: undo = pop
         m["version"] = version
         m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed)
+        self._record_commit(m, version, writer_id, batch_id, changed,
+                            batch_latest.select(*payload_cols).schema)
         self._write_manifest(m)
 
         depth: dict[str, int] = {}
@@ -889,7 +968,7 @@ class PKTable:
         base_dirs = [d for d in base_dirs if os.path.exists(d)]
         delta_dirs = [os.path.join(self.path, m["buckets"][k]) for k in delta_keys]
         delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        resolved = self._resolve_dirs(base_dirs, delta_dirs)
+        resolved = self._resolve_dirs(base_dirs, delta_dirs, m.get("schema"))
 
         version = m["version"] + 1
         vdir = f"v{version}"
@@ -920,7 +999,8 @@ class PKTable:
             superseded.append(m["buckets"][k])
             m["buckets"].pop(k)
         m["version"] = version
-        self._record_commit(m, version, None, None, changed)
+        self._record_commit(m, version, None, None, changed,
+                            resolved.schema if resolved is not None else None)
         expired = self._queue_gc(m, superseded)
         self._write_manifest(m)
         for d in expired:
@@ -970,6 +1050,7 @@ class PKTable:
         self._record_commit(
             m, version, None, None,
             {b: old.get(b) for b in set(old) | set(m["buckets"])},
+            df.schema,
         )
         # a full replace starts a new txn epoch: keeping the per-writer
         # high-watermarks would silently no-op every merge from a stream
@@ -1047,8 +1128,9 @@ class PKTable:
         self._record_commit(
             m, version, None, None,
             {b: old.get(b) for b in set(old) | set(m["buckets"])},
+            snap.schema if snap is not None else None,
         )
-        # undo info for _n_buckets_at: reads at versions BEFORE this commit
+        # undo info for _at: reads at versions BEFORE this commit
         # hash with the pre-rescale count
         m["history"][-1]["nb"] = prev_nb
         expired = self._queue_gc(m, list(old.values()))

@@ -4,6 +4,7 @@ should fail CI, not the demo."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -40,3 +41,18 @@ def test_model_lifecycle_example_runs(tmp_path):
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "lifecycle complete" in proc.stdout
     assert "day-1 state" in proc.stdout
+
+
+def test_reference_pipeline_example_runs(tmp_path):
+    """The flagship example: the reference's CDC scripts and revenue view,
+    run through the SQL front-end, serve a non-empty revenue table."""
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "examples" / "run_pipeline.py"),
+         str(tmp_path / "osb")],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    served = re.search(r"movie_revenue_realtime \((\d+) movies\)", proc.stdout)
+    assert served and int(served.group(1)) > 0, proc.stdout[-2000:]

@@ -160,6 +160,44 @@ def test_overwrite_participates_in_time_travel(spark, tmp_path):
     assert _state(t, version=2) == {2: "seeded"}
 
 
+def test_time_travel_across_a_schema_changing_overwrite(spark, tmp_path):
+    """The manifest carries the payload schema; a commit that changes it
+    keeps the prior one in its history entry, so every version reads in
+    its own schema -- including the KEY type a versioned lookup casts and
+    hashes its probe with (xxhash64 is type-sensitive)."""
+    import json as _json
+
+    t = PKTable(spark, str(tmp_path / "t"), keys=["k"], order_by=["seq"])
+    t.merge(_batch(spark, [("I", 1, 1, "a"), ("I", 1, 2, "b")]), batch_id=0)
+    t.overwrite(spark.createDataFrame(
+        [(1, 0.5, 0), (3, 1.5, 0)], "k int, score double, seq long"))
+    t.merge(spark.createDataFrame(
+        [("U", 3, 2.5, 1)], "op string, k int, score double, seq long"),
+        batch_id=0)
+
+    v1, v2, v3 = (t.snapshot(version=v) for v in (1, 2, 3))
+    assert [(f.name, f.dataType.simpleString()) for f in v1.schema] == [
+        ("seq", "bigint"), ("k", "bigint"), ("v", "string")]
+    assert sorted((r.k, r.v) for r in v1.collect()) == [(1, "a"), (2, "b")]
+    for snap in (v2, v3, t.snapshot()):
+        assert [(f.name, f.dataType.simpleString()) for f in snap.schema] == [
+            ("k", "int"), ("score", "double"), ("seq", "bigint")]
+    assert sorted((r.k, r.score) for r in v2.collect()) == [(1, 0.5), (3, 1.5)]
+    assert sorted((r.k, r.score) for r in v3.collect()) == [(1, 0.5), (3, 2.5)]
+
+    probe = spark.createDataFrame([(1,), (2,), (3,)], "k string")
+    assert sorted((r.k, r.v) for r in t.lookup(probe, version=1).collect()) == [
+        (1, "a"), (2, "b")]
+    assert sorted((r.k, r.score) for r in t.lookup(probe).collect()) == [
+        (1, 0.5), (3, 2.5)]
+
+    # only the schema-changing commits record a prior schema
+    hist = {e["v"]: e for e in _json.load(open(t._manifest_path))["history"]}
+    assert hist[1]["schema"] is None  # the table had none before v1
+    assert [f["name"] for f in hist[2]["schema"]["fields"]] == ["seq", "k", "v"]
+    assert "schema" not in hist[3]
+
+
 # --- mid-write fence race (r10 verdict item 5 / advice) -----------------------
 
 
@@ -241,10 +279,12 @@ def test_legacy_manifest_versions_raise_instead_of_misanswering(spark, tmp_path)
     t.merge(_batch(spark, [("U", 2, 1, "a2")]), batch_id=1)
 
     # simulate the legacy on-disk layout: strip the history bookkeeping
+    # (and the schema, which postdates it)
     mp = t._manifest_path
     m = _json.load(open(mp))
     m.pop("history", None)
     m.pop("history_floor", None)
+    m.pop("schema", None)
     _json.dump(m, open(mp, "w"))
 
     legacy = PKTable(spark, path, keys=["k"], order_by=["seq"])
@@ -262,6 +302,29 @@ def test_legacy_manifest_versions_raise_instead_of_misanswering(spark, tmp_path)
     for v in range(cur):
         with pytest.raises(ValueError, match="expired"):
             legacy.snapshot(version=v)
+
+    # a manifest with history but no schema field (written before the
+    # manifest carried the schema) reads by inference -- snapshot, versioned
+    # snapshot and lookup -- and its next data commit records the schema
+    path2 = str(tmp_path / "no_schema")
+    t2 = PKTable(spark, path2, keys=["k"], order_by=["seq"])
+    t2.merge(_batch(spark, [("I", 1, 1, "a")]), batch_id=0)
+    t2.merge(_batch(spark, [("I", 2, 2, "b")]), batch_id=1)
+    m2 = _json.load(open(t2._manifest_path))
+    assert m2.pop("schema")["fields"]  # this build records it
+    _json.dump(m2, open(t2._manifest_path, "w"))
+
+    no_schema = PKTable(spark, path2, keys=["k"], order_by=["seq"])
+    assert _state(no_schema) == {1: "a", 2: "b"}
+    assert _state(no_schema, version=1) == {1: "a"}
+    probe = spark.createDataFrame([(2,)], "k int")  # cast to the stored long
+    assert [(r.k, r.v) for r in no_schema.lookup(probe).collect()] == [(2, "b")]
+    no_schema.merge(_batch(spark, [("U", 3, 1, "a2")]), batch_id=2)
+    m3 = _json.load(open(no_schema._manifest_path))
+    assert [f["name"] for f in m3["schema"]["fields"]] == ["seq", "k", "v"]
+    assert m3["history"][-1]["schema"] is None  # earlier versions: inference
+    assert _state(no_schema) == {1: "a2", 2: "b"}
+    assert _state(no_schema, version=2) == {1: "a", 2: "b"}
 
 
 # --- post-overwrite read-at-batch epoch isolation (r10 advice, low) -----------
