@@ -50,7 +50,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 from flink_cdc_fluss_quickstart_spark.sources.osb import changelog_stream
-from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable, _commit_lock
+from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
+    affected_keys,
+    commit_refresh,
+    strip_before,
+)
+from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
 # Flink type -> Spark type (SURVEY.md 1.3)
 _TYPE_MAP = {
@@ -160,8 +165,8 @@ class AggViewShape:
     anchor_table: str
     key_by_table: dict[str, str]  # staging table -> its join-key column name
     pk_col: str                   # target PK column name
-    rewritten_sql: str            # SELECT with table names -> temp view names
-    view_names: dict[str, str]    # staging table -> temp view name
+    rewritten_sql: str            # SELECT with table names -> {placeholders}
+    view_names: dict[str, str]    # staging table -> its placeholder's name
 
 
 def _split_select_items(select_list: str) -> list[str]:
@@ -278,11 +283,11 @@ def _parse_agg_view_shape(select_sql: str, target_spec: "TableSpec",
     for tbl_raw in (m.group(1), m.group(3)):
         rewritten_span = re.sub(
             rf"(?<![\w.]){re.escape(tbl_raw)}(?![\w.])",
-            view_names[tbl_raw.split(".")[-1].lower()],
+            "{" + view_names[tbl_raw.split(".")[-1].lower()] + "}",
             rewritten_span,
             count=1,
         )
-    rewritten_sql = select_sql.replace(span, rewritten_span, 1)
+    rewritten_sql = _escape_braces(select_sql).replace(span, rewritten_span, 1)
     return AggViewShape(
         tables=tables,
         anchor_alias=anchor_alias,
@@ -355,7 +360,9 @@ def _parse_single_table_agg_shape(select_sql: str, target_spec: "TableSpec",
     vname = f"__ivw_{target_name}_{tbl}"
     # alias the view back to the original alias (which defaults to the
     # table name) so both bare and qualified column refs keep resolving
-    rewritten_sql = select_sql.replace(m.group(0), f"FROM {vname} {alias} ", 1)
+    rewritten_sql = _escape_braces(select_sql).replace(
+        m.group(0), f"FROM {{{vname}}} {alias} ", 1
+    )
     return AggViewShape(
         tables={alias: tbl},
         anchor_alias=alias,
@@ -367,6 +374,35 @@ def _parse_single_table_agg_shape(select_sql: str, target_spec: "TableSpec",
     )
 
 
+def _escape_braces(sql: str) -> str:
+    """SQL text as a literal ``str.format`` template: the form
+    ``spark.sql(text, **frames)`` takes, where ``{name}`` binds a frame."""
+    return sql.replace("{", "{{").replace("}", "}}")
+
+
+def _sql_over(spark: SparkSession, sql: str, tables: dict[str, DataFrame]) -> DataFrame:
+    """Run ``sql`` with each name in ``tables`` bound to its DataFrame for
+    this call only. Each name becomes a CTE over a ``spark.sql`` frame
+    argument, which pyspark registers as a uniquely named temp view and
+    drops once the statement is analyzed: concurrent callers never see
+    each other's bindings, nothing stays registered, and qualified column
+    references (``t.col``) resolve because the CTE carries the table's
+    own name."""
+    if not tables:
+        return spark.sql(sql)
+    frames = {f"__bound_{i}": df for i, df in enumerate(tables.values())}
+    ctes = ", ".join(
+        f"`{name}` AS (SELECT * FROM {{{arg}}})" for name, arg in zip(tables, frames)
+    )
+    text = _escape_braces(sql)
+    head = re.match(r"\s*WITH\s+(?:RECURSIVE\s+)?", text, re.I)
+    if head:
+        text = f"{text[: head.end()]}{ctes}, {text[head.end():]}"
+    else:
+        text = f"WITH {ctes} {text}"
+    return spark.sql(text, **frames)
+
+
 def _align_to_schema(df: DataFrame, spec: "TableSpec") -> DataFrame:
     """Positional rename to the DDL order + cast to the declared types
     (e.g. SUM widens DECIMAL; the DDL pins (15,2))."""
@@ -376,22 +412,19 @@ def _align_to_schema(df: DataFrame, spec: "TableSpec") -> DataFrame:
     )
 
 
-def _merge_refresh(
-    target: "PKTable",
+def _refresh_changes(
+    keys: list[str],
     spec: "TableSpec",
     aligned: DataFrame,
     gone_keys: DataFrame | None,
     batch_id: int,
-    writer_id: str,
-) -> None:
-    """The ONE upsert+retract merge recipe both refresh paths share (the
-    incremental affected-keys view and the full-requery fallback used to
-    hand-roll identical copies that could drift): aligned rows become
-    op='U' upserts, `gone_keys` (the target's key columns for groups that
-    vanished) become null-padded op='D' deletes, and the union merges at
-    `batch_id`."""
+) -> DataFrame:
+    """The ONE upsert+retract changes recipe both refresh paths share (the
+    incremental affected-keys view and the full-requery fallback): aligned
+    rows become op='U' upserts, `gone_keys` (the target's key columns for
+    groups that vanished) become null-padded op='D' deletes, and the union
+    carries `batch_id` as its `seq`."""
     cols = [f.name for f in spec.schema.fields]
-    keys = target.keys
     changes = aligned.withColumn("op", F.lit("U"))
     if gone_keys is not None:
         pad = [
@@ -401,8 +434,7 @@ def _merge_refresh(
         ]
         deletes = gone_keys.select(*keys, *pad).select(*cols).withColumn("op", F.lit("D"))
         changes = changes.unionByName(deletes)
-    changes = changes.withColumn("seq", F.lit(batch_id).cast("long"))
-    target.merge(changes, batch_id=batch_id, writer_id=writer_id)
+    return changes.withColumn("seq", F.lit(batch_id).cast("long"))
 
 
 class IncrementalAggView:
@@ -422,9 +454,27 @@ class IncrementalAggView:
 
     def refresh(self, affected: DataFrame, batch_id: int, writer_id: str) -> None:
         """`affected` carries one column: the anchor table's key values the
-        source micro-batch touched (pre-renamed by the caller)."""
-        eng, shape = self.engine, self.shape
+        source micro-batch touched (pre-renamed by the caller). Commits
+        through `commit_refresh`, so two source streams refresh the view
+        concurrently and only the view merges serialize."""
+        eng = self.engine
         target = eng.stores[self.target_name]
+        stat: dict = {}
+
+        def build() -> DataFrame:
+            changes, stat["n_affected"] = self._changes(affected, batch_id)
+            return changes
+
+        inputs = [eng.stores[t] for t in self.shape.tables.values()]
+        if commit_refresh(target, inputs, build, batch_id, writer_id):
+            self.refresh_stats.append(
+                {"writer": writer_id, "batch_id": batch_id, **stat}
+            )
+
+    def _changes(self, affected: DataFrame, batch_id: int) -> tuple[DataFrame, int]:
+        """The U/D changes re-aggregating the affected group keys from the
+        staging tables' current snapshots, and the number of keys."""
+        eng, shape = self.engine, self.shape
         spec = eng.tables[self.target_name]
         anchor_key = shape.key_by_table[shape.anchor_table]
         # the pinning job also counts the keys (one row per distinct group
@@ -435,25 +485,26 @@ class IncrementalAggView:
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        n_affected = obs.get["n"]
-
-        for tbl, vname in shape.view_names.items():
+        frames = {}
+        for tbl, arg in shape.view_names.items():
             snap = eng.stores[tbl].snapshot()
             if snap is None:
                 snap = eng.spark.createDataFrame([], eng.tables[tbl].schema)
             if tbl == shape.anchor_table:
                 snap = snap.join(F.broadcast(affected), anchor_key, "left_semi")
-            snap.createOrReplaceTempView(vname)
-        fresh = eng.spark.sql(shape.rewritten_sql)
+            frames[arg] = snap
+        # frames bind through per-call temp views (see _sql_over): the two
+        # source streams' refreshes run this concurrently
+        fresh = eng.spark.sql(shape.rewritten_sql, **frames)
 
         aligned = _align_to_schema(fresh, spec)
         gone = affected.toDF(shape.pk_col).join(
             aligned.select(shape.pk_col), shape.pk_col, "left_anti"
         )
-        _merge_refresh(target, spec, aligned, gone, batch_id, writer_id)
-        self.refresh_stats.append(
-            {"writer": writer_id, "batch_id": batch_id, "n_affected": n_affected}
+        changes = _refresh_changes(
+            eng.stores[self.target_name].keys, spec, aligned, gone, batch_id
         )
+        return changes, obs.get["n"]
 
 
 class Engine:
@@ -578,7 +629,12 @@ class Engine:
         resolves through the manifest's commit wall-clocks to the largest
         version committed at-or-before that instant (``PKTable.version_at``).
         The literal is interpreted in the HOST's local timezone -- the same
-        clock ``time.time()`` stamped the commits with."""
+        clock ``time.time()`` stamped the commits with.
+
+        Tables bind for this call only (_sql_over): a query registers no
+        temp view."""
+        tables: dict[str, DataFrame] = {}
+
         def versioned_view(m: "re.Match[str]") -> str:
             name = m.group(1).split(".")[-1].lower()
             version = int(m.group(2))
@@ -591,7 +647,7 @@ class Engine:
                     " snapshot carries no schema to SELECT from"
                 )
             vname = f"__timetravel_{name}_v{version}"
-            df.createOrReplaceTempView(vname)
+            tables[vname] = df
             return vname
 
         def timestamped_view(m: "re.Match[str]") -> str:
@@ -615,7 +671,7 @@ class Engine:
                     " to SELECT from"
                 )
             vname = f"__timetravel_{name}_v{version}"
-            df.createOrReplaceTempView(vname)
+            tables[vname] = df
             return vname
 
         rewritten = re.sub(
@@ -633,18 +689,18 @@ class Engine:
             flags=re.I,
         )
         # current snapshots for every other lakehouse table mentioned (the
-        # same snapshot-to-temp-view binding the MV SELECT path uses)
+        # same snapshot binding the MV SELECT path uses)
         for n in set(re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", rewritten, re.I)):
             base = n.split(".")[-1].lower()
-            if base in self.stores and not base.startswith("__timetravel_"):
+            if base in self.stores and base not in tables:
                 snap = self.stores[base].snapshot()
                 if snap is None:
                     raise ValueError(
                         f"table {base} is empty: an empty snapshot carries"
                         " no schema to SELECT from"
                     )
-                snap.createOrReplaceTempView(base)
-        return self.spark.sql(rewritten)
+                tables[base] = snap
+        return _sql_over(self.spark, rewritten, tables)
 
     # -- execution ---------------------------------------------------------
 
@@ -889,7 +945,8 @@ class Engine:
             self._register_ckpt(target_name, ckpt)
 
             def fb(batch_df: DataFrame, batch_id: int) -> None:
-                target.merge(batch_df, batch_id=batch_id, writer_id=f"sql-{src}")
+                target.merge(batch_df, batch_id=batch_id, writer_id=f"sql-{src}",
+                             source=src)
 
             q = (
                 projected.writeStream.foreachBatch(fb)
@@ -924,6 +981,7 @@ class Engine:
                 latest_by_key,
             )
 
+            tables = {}
             for n in src_names:
                 if n in self.stores:
                     snap = self.stores[n].snapshot()
@@ -951,23 +1009,15 @@ class Engine:
                     )
                 else:
                     snap = self.spark.createDataFrame([], self.tables[n].schema)
-                snap.createOrReplaceTempView(n)
-            return self.spark.sql(select_sql)
+                tables[n] = snap
+            return _sql_over(self.spark, select_sql, tables)
 
         # materialized-view refresh: merge the query result by the target's
         # PK, deleting vanished groups. Re-executing the script re-refreshes
         # (the reference's never-ending INSERT, expressed as repeatable
         # refreshes; the native ContinuousRevenueView API is the per-batch
         # affected-keys scale path).
-        # drop the raw-named temp views whether or not the refresh succeeds
-        # (try/finally): a leaked view -- e.g. after an AnalysisException in
-        # the user's SELECT -- would shadow a later statement's resolution of
-        # the same table name with a stale frozen snapshot
-        try:
-            self._refresh_view(target, target_spec, run_select())
-        finally:
-            for n in src_names:
-                self.spark.catalog.dropTempView(n)
+        self._refresh_view(target, target_spec, run_select())
 
     def _start_incremental_view(self, target_name: str, shape: AggViewShape) -> None:
         """Affected-keys maintenance for a parsed aggregate view: one
@@ -975,9 +1025,19 @@ class Engine:
         batch into its staging table (idempotent under its own writer id, so
         the view never reads staging older than the keys it refreshes,
         whatever order the user executes the scripts in) and (b) refreshes
-        exactly the group keys the batch carries. The serving-table commit
-        lock serializes the two upstream pipelines' snapshot-read + merge,
-        the same cross-stream discipline as the native pipelines."""
+        exactly the group keys the batch carries.
+
+        Locking: (a) takes only the staging table's own commit lock, and
+        its `source` mark makes it free when the replication stream already
+        applied the batch (and keeps a late-started view stream's replay of
+        old epochs from rolling staging rows back). (b) commits through
+        `commit_refresh`, which builds the changes outside the view's
+        commit lock and serializes only the view merge, rebuilding under
+        the lock when a staging table moved meanwhile -- so the two
+        upstream pipelines overlap, and a refresh built from a staging
+        state older than a committed one never lands after it. Each source
+        keeps its own view commit per micro-batch (writer id ending in the
+        source name)."""
         view = self.views.get(target_name) or IncrementalAggView(self, target_name)
         view.shape = shape
         self.views[target_name] = view
@@ -1003,21 +1063,16 @@ class Engine:
             sync_writer = f"view-sync-{target_name}-{src}"
             view_writer = f"view-{target_name}-from-{src}"
 
-            def fb(batch_df: DataFrame, batch_id: int, _store=store,
+            def fb(batch_df: DataFrame, batch_id: int, _store=store, _src=src,
                    _src_key=src_key, _sync=sync_writer, _writer=view_writer) -> None:
-                from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
-                    affected_keys,
-                    strip_before,
-                )
-
                 batch_df = batch_df.localCheckpoint(eager=True)
-                with _commit_lock(target.path):
-                    _store.merge(strip_before(batch_df), batch_id=batch_id, writer_id=_sync)
-                    view.refresh(
-                        affected_keys(batch_df, _src_key, anchor_key),
-                        batch_id,
-                        _writer,
-                    )
+                _store.merge(strip_before(batch_df), batch_id=batch_id,
+                             writer_id=_sync, source=_src)
+                view.refresh(
+                    affected_keys(batch_df, _src_key, anchor_key),
+                    batch_id,
+                    _writer,
+                )
 
             q = (
                 projected.writeStream.foreachBatch(fb)
@@ -1029,7 +1084,7 @@ class Engine:
 
     def _refresh_view(self, target: PKTable, spec: TableSpec, df: DataFrame) -> None:
         """Merge a full query result into a PK table: upsert all rows, delete
-        keys that vanished since the last refresh (the _merge_refresh recipe,
+        keys that vanished since the last refresh (the _refresh_changes recipe,
         shared with IncrementalAggView.refresh)."""
         aligned = _align_to_schema(df, spec)
         current = target.snapshot()
@@ -1041,15 +1096,24 @@ class Engine:
             else None
         )
         batch_id = target.last_batch_id("sql-mv") + 1
-        _merge_refresh(target, spec, aligned, gone, batch_id, writer_id="sql-mv")
+        target.merge(_refresh_changes(target.keys, spec, aligned, gone, batch_id),
+                     batch_id=batch_id, writer_id="sql-mv")
 
     def await_all(self, timeout: int = 300) -> None:
+        """Wait for every started query. A query that fails or outlasts
+        ``timeout`` raises; every handle not yet seen to finish stays in
+        ``self.queries`` so the caller can still stop or re-await it --
+        silently dropping a live query would let it keep writing in the
+        background with no remaining handle."""
         pending, self.queries = list(self.queries), []
         for i, q in enumerate(pending):
-            if not q.awaitTermination(timeout):
-                # keep every unfinished handle so the caller can still stop
-                # or re-await it; silently dropping a live query would let it
-                # keep writing in the background with no remaining handle
+            try:
+                done = q.awaitTermination(timeout)
+            except BaseException:
+                # q stays only while it still runs (an interrupted wait)
+                self.queries.extend(([q] if q.isActive else []) + pending[i + 1:])
+                raise
+            if not done:
                 self.queries.extend(pending[i:])
                 raise TimeoutError(
                     f"streaming query {q.id} still running after {timeout}s"

@@ -15,11 +15,16 @@ affected keys' data, not the table size; the affected-key set joins
 broadcast-side against the big staging table (left-semi, no shuffle of the
 fact side beyond its bucket pruning).
 
-Single-writer discipline per PK table (the reference equivalently runs its
-analytics INSERT at parallelism 1, flink-cdc/docker-compose.yaml:13).
+The two source streams (tickets, movies) run concurrently: each holds only
+its own staging table's commit lock for step (1), builds step (3)'s
+changes outside the serving table's lock, and serializes just the serving
+merge through `commit_refresh` -- the one commit discipline the SQL
+front-end's incremental views share.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +62,44 @@ def strip_before(batch_df: DataFrame) -> DataFrame:
     """Drop the before-image before a staging merge: the PK snapshot is
     after-images only (before is refresh-scoping metadata, not state)."""
     return batch_df.drop("before") if "before" in batch_df.columns else batch_df
+
+
+def commit_refresh(target: PKTable, inputs: Sequence[PKTable],
+                   build: Callable[[], DataFrame | None],
+                   batch_id: int, writer_id: str) -> bool:
+    """Commit one refresh of a view maintained from the staging tables
+    ``inputs`` into ``target``, serializing only the commit.
+
+    ``build`` reads the inputs' current snapshots and returns the view's
+    U/D changes (None: nothing to merge). Each input's manifest version is
+    recorded first; the changes are then built and pinned outside the
+    target's commit lock. Under the lock, if any input's version moved
+    meanwhile, they are rebuilt there; then they merge.
+
+    Invariant: every committed refresh was built from staging state that
+    was current at some moment after its own batch's staging merge, and
+    any later staging merge is followed by its own refresh, which reads at
+    least that merge's state and commits after this one. So a refresh
+    built from an older snapshot -- a stale movie title -- never commits
+    after one that saw a newer state.
+
+    A (writer_id, batch_id) the target already applied (a replayed batch)
+    returns before building. Returns whether a refresh was committed."""
+    if target.last_batch_id(writer_id) >= batch_id:
+        return False
+
+    def pinned() -> DataFrame | None:
+        changes = build()
+        return None if changes is None else changes.localCheckpoint(eager=True)
+
+    seen = [t.current_version() for t in inputs]
+    changes = pinned()
+    with _commit_lock(target.path):
+        if [t.current_version() for t in inputs] != seen:
+            changes = pinned()
+        if changes is not None:
+            target.merge(changes, batch_id=batch_id, writer_id=writer_id)
+    return True
 
 
 def revenue_aggregate(tickets: DataFrame, movies: DataFrame) -> DataFrame:
@@ -118,10 +161,12 @@ class ContinuousRevenueView:
     def refresh(self, affected: DataFrame, batch_id: int, writer_id: str) -> None:
         """Re-aggregate the given movie_ids from current snapshots and merge
         into the serving table (upserts + deletes for emptied groups)."""
-        if self.revenue.last_batch_id(writer_id) >= batch_id:
-            # crash-replayed batch: the final merge would no-op on its txn
-            # marker anyway -- skip the eager re-aggregation jobs it guards
-            return
+        commit_refresh(self.revenue, (self.tickets, self.movies),
+                       lambda: self.changes(affected, batch_id), batch_id, writer_id)
+
+    def changes(self, affected: DataFrame, batch_id: int) -> DataFrame | None:
+        """The serving table's U/D changes for the affected movie_ids, from
+        the staging tables' current snapshots (None: nothing to retract)."""
         affected = affected.select("movie_id").distinct().localCheckpoint(eager=True)
         t = self.tickets.snapshot()
         m = self.movies.snapshot()
@@ -155,15 +200,14 @@ class ContinuousRevenueView:
             # materialized either, there is truly nothing to retract.
             served = self.revenue.snapshot()
             if served is None:
-                return
+                return None
             pad_cols = [
                 F.lit(None).cast(f.dataType).alias(f.name)
                 for f in served.schema.fields
                 if f.name not in ("movie_id", "op", "seq")
             ]
             changes = gone.select("movie_id", *pad_cols).withColumn("op", F.lit("D"))
-        changes = changes.withColumn("seq", F.lit(batch_id).cast("long"))
-        self.revenue.merge(changes, batch_id=batch_id, writer_id=writer_id)
+        return changes.withColumn("seq", F.lit(batch_id).cast("long"))
 
     # -- streaming entry points ------------------------------------------
 
@@ -173,20 +217,22 @@ class ContinuousRevenueView:
 
         def fb(batch_df: DataFrame, batch_id: int) -> None:
             batch_df = batch_df.localCheckpoint(eager=True)
-            # Serialize staging-merge + snapshot-read + serving-merge against
-            # the OTHER side's pipeline (both streams update one serving
-            # table): without this, a refresh computed from a pre-update
+            # Only the serving merge serializes against the OTHER side's
+            # pipeline (both streams update one serving table): the staging
+            # merge holds the staging table's own lock, and commit_refresh
+            # rebuilds a refresh whose staging inputs moved while it was
+            # built -- without that, a refresh computed from a pre-update
             # movies snapshot could commit AFTER the movie-side refresh that
             # already saw the edit, leaving a stale title in the view. This
             # is the micro-batch analogue of Flink serializing both input
-            # streams through one join-operator state.
-            with _commit_lock(self.revenue.path):
-                self.tickets.merge(
-                    strip_before(batch_df), batch_id=batch_id, writer_id="tickets-cdc"
-                )
-                self.refresh(
-                    affected_keys(batch_df, "movie_id"), batch_id, "rev-from-tickets"
-                )
+            # streams through one join-operator state, narrowed to the
+            # state update itself.
+            self.tickets.merge(
+                strip_before(batch_df), batch_id=batch_id, writer_id="tickets-cdc"
+            )
+            self.refresh(
+                affected_keys(batch_df, "movie_id"), batch_id, "rev-from-tickets"
+            )
 
         return (
             changelog.writeStream.foreachBatch(fb)
@@ -202,13 +248,13 @@ class ContinuousRevenueView:
 
         def fb(batch_df: DataFrame, batch_id: int) -> None:
             batch_df = batch_df.localCheckpoint(eager=True)
-            with _commit_lock(self.revenue.path):  # see start_tickets_pipeline
-                self.movies.merge(
-                    strip_before(batch_df), batch_id=batch_id, writer_id="movies-cdc"
-                )
-                self.refresh(
-                    affected_keys(batch_df, "movie_id"), batch_id, "rev-from-movies"
-                )
+            # locking as in start_tickets_pipeline
+            self.movies.merge(
+                strip_before(batch_df), batch_id=batch_id, writer_id="movies-cdc"
+            )
+            self.refresh(
+                affected_keys(batch_df, "movie_id"), batch_id, "rev-from-movies"
+            )
 
         return (
             changelog.writeStream.foreachBatch(fb)

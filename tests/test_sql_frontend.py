@@ -1026,3 +1026,163 @@ def test_commit_timestamps_monotonic_under_clock_stepback(spark, tmp_path):
     assert hist[1]["ts"] >= hist[0]["ts"]  # clamped, not stepped back
     assert t.version_at(future) == 2  # both commits are at-or-before 'future'
     assert {r.k: r.v for r in t.snapshot(version=t.version_at(future)).collect()} == {1: "b"}
+
+
+def _engine_over_epochs(spark, tmp_path, epochs: int):
+    """An Engine over the reference scripts whose sources are live dirs an
+    ``expose(lo, hi)`` call publishes changelog epochs into, one file per
+    source per epoch, with increasing modification times so the file
+    sources deliver them in epoch (``seq``) order."""
+    import os
+    import shutil
+
+    full = osb.generate_workload(str(tmp_path / "full"), epochs=epochs, seed=7)
+    live = {t: tmp_path / "live" / t for t in full}
+    for d in live.values():
+        d.mkdir(parents=True)
+
+    def expose(lo: int, hi: int) -> None:
+        for e in range(lo, hi):
+            for t in full:
+                name = f"epoch_{e:04d}.parquet"
+                shutil.copy(Path(full[t]) / name, live[t] / name)
+                os.utime(live[t] / name, (1e9 + e, 1e9 + e))
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.bind_source("pg_osb_users", str(live["users"]), osb.USERS_SCHEMA)
+    eng.bind_source("pg_osb_movies", str(live["movies"]), osb.MOVIES_SCHEMA)
+    eng.bind_source("pg_osb_tickets", str(live["tickets"]), osb.TICKETS_SCHEMA)
+    return eng, expose
+
+
+def _view_matches_oracle(eng) -> bool:
+    tickets, movies = eng.snapshot("tickets_staging"), eng.snapshot("movies_staging")
+    oracle = revenue_aggregate(tickets, movies)
+    served = eng.snapshot("movie_revenue_realtime").select(*oracle.columns)
+    return sorted(map(tuple, served.collect())) == sorted(map(tuple, oracle.collect()))
+
+
+def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
+    """The replication stream and the view stream both merge each staging
+    table's micro-batch; the per-source sequence mark makes the second of
+    the two free. So one reference-volume round (one changelog epoch per
+    source, every script re-executed as a deployment does) commits exactly
+    one version per staging table, and a view stream whose staging merge
+    the replication stream already applied writes nothing there. Also
+    pins the view stream's per-micro-batch Spark job count (its query's
+    job group) and checks that a replayed view refresh runs no job."""
+    eng, expose = _engine_over_epochs(spark, tmp_path, epochs=5)
+    scripts = [(FIXTURES / f"{n}.sql").read_text()
+               for n in ("users-cdc", "movies-cdc", "tickets-cdc", "revenue-analytics")]
+    staging = ("movies_staging", "tickets_staging")
+
+    def versions():
+        return {n: eng.store_for(n).current_version() for n in staging}
+
+    def run(texts):
+        for text in texts:
+            eng.execute(text)
+        started = list(eng.queries)
+        eng.await_all()
+        return started
+
+    expose(0, 3)
+    run(scripts)
+    assert _view_matches_oracle(eng)
+
+    before = versions()
+    expose(3, 4)
+    run(scripts)
+    assert versions() == {n: v + 1 for n, v in before.items()}
+    assert _view_matches_oracle(eng)
+
+    # replication first, then the view: the view streams' staging merges
+    # are replays of applied rows -- no version -- and the view stream's
+    # micro-batch cost is deterministic
+    expose(4, 5)
+    run(scripts[:3])
+    before = versions()
+    view_queries = run(scripts[3:])
+    assert versions() == before
+    assert _view_matches_oracle(eng)
+    tracker = spark.sparkContext.statusTracker()
+    for q in view_queries:
+        assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True]
+        n = len(tracker.getJobIdsForGroup(str(q.runId)))
+        assert n <= 17, f"a view-stream micro-batch ran {n} Spark jobs"
+
+    view = eng.views["movie_revenue_realtime"]
+    last = view.refresh_stats[-1]
+    sc = spark.sparkContext
+    sc.setJobGroup("replayed-view-refresh", "replayed view refresh")
+    try:
+        view.refresh(spark.createDataFrame([(1,)], "movie_id long"),
+                     last["batch_id"], last["writer"])
+        n = len(tracker.getJobIdsForGroup("replayed-view-refresh"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == 0, f"a replayed view refresh ran {n} Spark jobs"
+    assert view.refresh_stats[-1] is last
+
+
+def test_await_all_keeps_unfinished_handles_when_a_query_fails(spark, tmp_path):
+    """A source whose micro-batch fails makes await_all raise -- and the
+    handles it had not awaited yet stay in Engine.queries, so they can
+    still be awaited or stopped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    bad = tmp_path / "bad_movies"
+    bad.mkdir()
+    # seq as a string: the bound schema's BIGINT cannot read it
+    pq.write_table(pa.table({"op": ["I"], "seq": ["one"], "movie_id": [1]}),
+                   str(bad / "epoch_0000.parquet"))
+    wl = osb.generate_workload(str(tmp_path / "wl"), epochs=2, seed=3)
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.bind_source("pg_osb_movies", str(bad), osb.MOVIES_SCHEMA)
+    eng.bind_source("pg_osb_users", wl["users"], osb.USERS_SCHEMA)
+    eng.execute((FIXTURES / "movies-cdc.sql").read_text())
+    eng.execute((FIXTURES / "users-cdc.sql").read_text())
+    failing, healthy = eng.queries
+
+    with pytest.raises(Exception, match="epoch_0000"):
+        eng.await_all()
+    assert eng.queries == [healthy]
+    assert not failing.isActive
+    eng.await_all()
+    assert eng.queries == []
+    assert eng.snapshot("users_staging").count() == 2
+
+
+def test_query_registers_no_temp_views(spark, tmp_path):
+    """Engine.query binds the lakehouse tables for the one call: current and
+    time-travel reads leave the session's temp views as they were, while
+    qualified column references, a leading WITH and braces in the text
+    keep working."""
+    from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    t = PKTable(spark, str(tmp_path / "t"), keys=["k"], order_by=["seq"])
+    t.merge(spark.createDataFrame([("I", 1, 1, "a"), ("I", 2, 2, "{b}")],
+                                  "op string, seq long, k long, v string"), batch_id=0)
+    t.merge(spark.createDataFrame([("U", 3, 1, "a2")],
+                                  "op string, seq long, k long, v string"), batch_id=1)
+    eng.stores["serving"] = t
+
+    def temp_views():
+        return sorted(x.name for x in spark.catalog.listTables() if x.isTemporary)
+
+    before = temp_views()
+    assert {r.k: r.v for r in eng.query("SELECT k, v FROM serving").collect()} == {
+        1: "a2", 2: "{b}"}
+    assert temp_views() == before
+    assert {r.k: r.v for r in eng.query(
+        "SELECT k, v FROM serving VERSION AS OF 1").collect()} == {1: "a", 2: "{b}"}
+    assert temp_views() == before
+    assert [r.k for r in eng.query(
+        "SELECT serving.k FROM serving WHERE serving.v = '{b}'").collect()] == [2]
+    assert [r.k for r in eng.query(
+        "WITH old AS (SELECT k, v FROM serving VERSION AS OF 1) "
+        "SELECT old.k FROM old JOIN serving cur ON old.k = cur.k "
+        "WHERE old.v <> cur.v").collect()] == [1]
+    assert temp_views() == before

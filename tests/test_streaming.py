@@ -290,14 +290,30 @@ def test_overwrite_resets_txn_watermarks(spark, tmp_path):
         batch_id=57,
         writer_id="cdc",
     )
+    # ... and so must the per-source sequence marks: the restarted source's
+    # seqs may sit below the mark the pre-seed stream left
+    t.merge(
+        spark.createDataFrame([("U", 100, 2, "x")], "op string, seq long, k long, v string"),
+        batch_id=0,
+        writer_id="src-writer",
+        source="src",
+    )
+    assert t._read_manifest()["marks"] == {"src": 100}
     t.overwrite(spark.createDataFrame([(1, "seeded", 0)], "k long, v string, seq long"))
+    assert "marks" not in t._read_manifest()
     t.merge(
         spark.createDataFrame([("U", 2, 1, "post-seed")], "op string, seq long, k long, v string"),
         batch_id=0,
         writer_id="cdc",
     )
+    t.merge(
+        spark.createDataFrame([("I", 3, 2, "post-seed")], "op string, seq long, k long, v string"),
+        batch_id=0,
+        writer_id="src-writer",
+        source="src",
+    )
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
-    assert got == {1: "post-seed"}  # the post-seed batch applied
+    assert got == {1: "post-seed", 2: "post-seed"}  # both post-seed batches applied
 
 
 def test_merge_default_batch_id_auto_increments(spark, tmp_path):
@@ -547,3 +563,157 @@ def test_heavy_exchange_workload_parity(spark, tmp_path):
     s_rows = sorted(tuple(r) for r in served.select(*oracle.columns).collect())
     o_rows = sorted(tuple(r) for r in oracle.collect())
     assert s_rows == o_rows and len(s_rows) > 0
+
+
+def _jobs(spark, fn):
+    """(fn's result, the number of Spark jobs fn ran), by job group."""
+    sc = spark.sparkContext
+    group = f"commit-refresh-{id(fn)}"
+    sc.setJobGroup(group, "commit_refresh job count")
+    try:
+        out = fn()
+        job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(job_ids)
+
+
+def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
+    """The optimistic view commit, with a deterministic interleaving: a
+    tickets refresh builds its changes from the old movie title; before
+    that build returns, a title edit and the edit's own refresh commit. The
+    tickets refresh must notice the moved movies version under the view's
+    commit lock and rebuild there -- committing the first build would put
+    the stale title back after the newer one. A replayed (writer, batch)
+    then returns before building: no Spark job at all."""
+    from datetime import datetime
+    from decimal import Decimal
+
+    from flink_cdc_fluss_quickstart_spark.streaming.analytics import commit_refresh
+
+    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
+    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
+    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
+    view = ContinuousRevenueView(spark, tickets, movies, revenue)
+    ts0 = datetime(2025, 6, 1, 12, 0, 0)
+
+    def movie(seq, title):
+        return spark.createDataFrame(
+            [("U", seq, 1, title, 90, ts0)],
+            "op string, seq long, movie_id long, title string,"
+            " duration_minutes int, start_date timestamp_ntz")
+
+    def ticket(seq, tid):
+        return spark.createDataFrame(
+            [("I", seq, tid, 1, Decimal("10.00"), "scheduled", ts0)],
+            "op string, seq long, ticket_id long, movie_id long,"
+            " cost decimal(10,2), status string, purchased_at timestamp_ntz")
+
+    def served():
+        return {r.movie_id: (r.movie_title, r.ticket_count)
+                for r in revenue.snapshot().collect()}
+
+    affected = spark.createDataFrame([(1,)], "movie_id long")
+    movies.merge(movie(1, "Old"), batch_id=0, writer_id="movies-cdc")
+    tickets.merge(ticket(2, 1), batch_id=0, writer_id="tickets-cdc")
+    view.refresh(affected, 0, "rev-from-tickets")
+    assert served() == {1: ("Old", 1)}
+
+    tickets.merge(ticket(3, 2), batch_id=1, writer_id="tickets-cdc")
+    built = []
+
+    def build():
+        changes = view.changes(affected, 1).localCheckpoint(eager=True)
+        built.append({r.movie_title for r in changes.collect()})
+        if len(built) == 1:
+            # the edit and its refresh land while the first build is out
+            movies.merge(movie(4, "New"), batch_id=1, writer_id="movies-cdc")
+            view.refresh(affected, 1, "rev-from-movies")
+            assert served() == {1: ("New", 2)}
+        return changes
+
+    assert commit_refresh(revenue, (tickets, movies), build, 1, "rev-from-tickets")
+    assert built == [{"Old"}, {"New"}], "the first build must be rebuilt under the lock"
+    assert served() == {1: ("New", 2)}
+
+    n_built = len(built)
+    committed, n = _jobs(
+        spark, lambda: commit_refresh(revenue, (tickets, movies), build, 1,
+                                      "rev-from-tickets"))
+    assert not committed and n == 0 and len(built) == n_built
+    _, n = _jobs(spark, lambda: view.refresh(affected, 1, "rev-from-movies"))
+    assert n == 0, f"a replayed refresh ran {n} jobs"
+    assert served() == {1: ("New", 2)}
+
+
+def test_concurrent_refreshes_converge_under_stress(spark, tmp_path):
+    """More writer threads than cores: title edits and ticket inserts for
+    the same movies merge into their staging tables and refresh the view
+    concurrently, each thread through its own writer ids. Only the view
+    merges serialize, so a refresh committing a staging state older than
+    one an earlier commit saw would leave a stale title or count behind;
+    the view must equal the batch aggregation of the final snapshots."""
+    import sys
+    import threading
+    from datetime import datetime
+    from decimal import Decimal
+
+    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
+    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
+    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
+    view = ContinuousRevenueView(spark, tickets, movies, revenue)
+    ts0 = datetime(2025, 6, 1, 12, 0, 0)
+    movie_schema = ("op string, seq long, movie_id long, title string,"
+                    " duration_minutes int, start_date timestamp_ntz")
+    ticket_schema = ("op string, seq long, ticket_id long, movie_id long,"
+                     " cost decimal(10,2), status string, purchased_at timestamp_ntz")
+    movie_ids = (1, 2)
+    movies.merge(spark.createDataFrame(
+        [("I", 0, m, f"Movie {m}", 90, ts0) for m in movie_ids], movie_schema),
+        batch_id=0, writer_id="seed")
+    errors: list[BaseException] = []
+
+    def editor(w: int) -> None:
+        for b in range(2):
+            rows = [("U", 100 * w + b, m, f"Movie {m} w{w}b{b}", 90 + b, ts0)
+                    for m in movie_ids]
+            movies.merge(spark.createDataFrame(rows, movie_schema),
+                         batch_id=b, writer_id=f"movies-{w}")
+            view.refresh(spark.createDataFrame([(m,) for m in movie_ids], "movie_id long"),
+                         b, f"rev-from-movies-{w}")
+
+    def seller(w: int) -> None:
+        for b in range(2):
+            rows = [("I", 100 * w + b, 1000 * w + 10 * b + m, m, Decimal("5.00"),
+                     "scheduled", ts0) for m in movie_ids]
+            tickets.merge(spark.createDataFrame(rows, ticket_schema),
+                          batch_id=b, writer_id=f"tickets-{w}")
+            view.refresh(spark.createDataFrame([(m,) for m in movie_ids], "movie_id long"),
+                         b, f"rev-from-tickets-{w}")
+
+    def run(fn, w):
+        try:
+            fn(w)
+        except BaseException as e:  # noqa: BLE001 -- re-raised in the test thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(editor if w % 2 else seller, w))
+               for w in range(6)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads), "writers did not finish"
+    assert not errors, errors
+
+    served = revenue.snapshot().drop("seq")
+    oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
+    s_rows = sorted(tuple(r) for r in served.select(*oracle.columns).collect())
+    o_rows = sorted(tuple(r) for r in oracle.collect())
+    assert s_rows == o_rows
+    assert sum(r.ticket_count for r in served.collect()) == 12
