@@ -152,7 +152,7 @@ def streaming_envelope(spark, rows_per_sec: int = 100, run_secs: int = 25,
 
     def _restore() -> None:
         # idempotent: also called right after start() so the window where a
-        # co-running loader thread plans with 8 partitions stays minimal; the
+        # co-running batch query plans with 8 partitions stays minimal; the
         # outer finally guarantees it on any exception before that point
         nonlocal restored
         if not restored:
@@ -164,9 +164,8 @@ def streaming_envelope(spark, rows_per_sec: int = 100, run_secs: int = 25,
     # run the stream's jobs in a dedicated FAIR pool (session.py sets
     # spark.scheduler.mode=FAIR): the micro-batch thread inherits this local
     # property, so trigger executions round-robin with -- instead of queueing
-    # behind -- any co-running batch stages. This is what bounds the
-    # concurrent-envelope p95; without it a single long batch stage holds all
-    # executor threads for its full duration.
+    # behind -- any co-running batch stages; without it a single long batch
+    # stage holds all executor threads for its full duration.
     spark.sparkContext.setLocalProperty("spark.scheduler.pool", "latency")
     # ignore_cleanup_errors: state-store maintenance threads can still be
     # compacting checkpoint files for a beat after q.stop() returns; a
@@ -377,61 +376,11 @@ def main() -> None:
     calib_streaming = _calibrate(spark)
     print(f"# calibration before envelopes: {calib_streaming:.3f}s", file=sys.stderr)
 
-    # The envelope is measured twice because micro-batch latency is sensitive
-    # to co-running batch load (executor threads are shared in local mode,
-    # exactly as executor slots are shared on a cluster): once isolated --
-    # the engine's intrinsic envelope -- and once with a continuous batch
-    # aggregation looping on the same session, the worst-case a mixed
-    # batch+streaming deployment sees.
-    # 45 s for the same reason as the concurrent block below: at ~20
-    # batches nearest-rank p95 IS the worst-or-second-worst single batch,
-    # so one GC/RocksDB-maintenance stall colors the whole record (r12:
-    # driver single-shot read 1.117 s while the 5-run calm-floor ritual
-    # median was 0.577 s -- BENCH_NOTES r13); ~38 batches absorbs it
-    envelope = streaming_envelope(spark, run_secs=45)
-    print(f"# streaming_envelope (isolated): {envelope}", file=sys.stderr)
-
-    import threading
-
-    stop = threading.Event()
-
-    def batch_load() -> None:
-        while not stop.is_set():
-            specs["q5_region_revenue"].builder(spark, sf_dir).count()
-
-    # caveat: streaming_envelope briefly toggles the session-global
-    # spark.sql.shuffle.partitions while the loader thread plans queries on
-    # the same session; a loader iteration planned in that window runs with 8
-    # partitions. That only perturbs the load generator (acceptable), never
-    # the envelope measurement itself.
-    # 45 s run (~38 measured batches): at ~20 batches nearest-rank p95 is
-    # the second-highest sample, so one trigger that lands behind a q5 stage
-    # burst still colors the reading; ~38 batches puts p95 below the top two
-    loader = threading.Thread(target=batch_load, daemon=True)
-    loader.start()
-    try:
-        envelope_concurrent = streaming_envelope(spark, run_secs=45)
-    finally:
-        stop.set()
-        # the loop exits after its in-flight q5 iteration, which must finish
-        # before the isolated headroom probe below starts or it pollutes the
-        # measurement; a generous bound (vs unbounded join) keeps a wedged
-        # Spark job from hanging the whole bench with no JSON emitted
-        loader.join(timeout=300)
-        if loader.is_alive():
-            print("# WARNING: batch loader still running after 300s; "
-                  "headroom envelope may be polluted", file=sys.stderr)
-    envelope_concurrent["batch_load"] = "q5_region_revenue loop"
-    print(f"# streaming_envelope (concurrent): {envelope_concurrent}", file=sys.stderr)
-
-    # headroom probe: 1000x the reference's ~10 ev/s recordable envelope
-    # (isolated; documents how far the same pipeline is from saturating --
-    # micro-batch cost is state-commit dominated, so rate barely moves it
-    # until the millions: the r9 knee sweep in BENCH_NOTES.md measured p95
-    # crossing 1 s at ~3,000,000 ev/s and collapse at 4M)
-    envelope_headroom = streaming_envelope(spark, rows_per_sec=10_000)
-    print(f"# streaming_envelope (10000 ev/s): {envelope_headroom}", file=sys.stderr)
-
+    # The pipeline's own micro-batch latency and freshness are measured by
+    # perfbench's cdc_pipeline workload (changelog -> staging merge -> view
+    # refresh -> serving read); this bench keeps only the synthetic
+    # overload probe, which checks admission control, not pipeline latency.
+    #
     # overload-with-admission probe (r9 verdict item 2): 2x the measured
     # knee (~3M ev/s, BENCH_NOTES r9) of modeled arrival under a 1M-rows-
     # per-trigger admission cap. Uncapped, 4M ev/s compounded p95 to 3.0 s
@@ -446,18 +395,13 @@ def main() -> None:
 
     # The driver records only the last ~2000 chars of stdout and parses the
     # final JSON line (r10's single fat line outgrew that window and the
-    # official record lost its headline -- VERDICT r10 item 1). So: each
+    # official record lost its headline -- VERDICT r10 item 1). So: the
     # streaming block gets its OWN stdout JSON line first, full fidelity,
     # and the final machine-read line stays compact -- per-query timings
     # plus scalar streaming summaries only, compact separators, with a hard
     # length guard that sheds optional keys before it ever overflows again.
-    for key, block in (
-        ("streaming_isolated", envelope),
-        ("streaming_concurrent", envelope_concurrent),
-        ("streaming_headroom", envelope_headroom),
-        ("streaming_overload_capped", envelope_overload),
-    ):
-        print(json.dumps({"metric": key, **block}, separators=(",", ":")))
+    print(json.dumps({"metric": "streaming_overload_capped", **envelope_overload},
+                     separators=(",", ":")))
 
     total = round(sum(timings.values()), 3)
     headline = {
@@ -466,9 +410,6 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "streaming_p95": {
-            "isolated": envelope.get("p95_batch_sec"),
-            "concurrent": envelope_concurrent.get("p95_batch_sec"),
-            "headroom_10k": envelope_headroom.get("p95_batch_sec"),
             "overload_capped": envelope_overload.get("p95_batch_sec"),
             "overload_backlog_per_sec": envelope_overload.get(
                 "backlog_growth_per_sec"),

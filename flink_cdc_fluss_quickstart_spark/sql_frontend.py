@@ -24,15 +24,13 @@ Streaming `INSERT INTO ... SELECT` (connector-backed source) becomes:
   the reference's analytics job uses (two aliased staging tables equi-joined
   on the target's primary key, which also leads the GROUP BY), or the
   single-table GROUP BY over one staging table keyed by the target's
-  primary key, the front-end
-  routes it to the AFFECTED-KEYS refresh: the upstream changelogs stream
-  again per view, and each micro-batch re-aggregates ONLY the group keys the
-  batch touched -- per-batch work proportional to the batch's keys, never
-  the table (the same arrangement as the native ContinuousRevenueView,
-  generalized over the parsed statement). Arbitrary SELECT text that doesn't
-  match the shape falls back to the full-requery refresh, re-refreshed on
-  each script execution -- correct but O(table) per refresh, documented as
-  the fidelity path.
+  primary key, the front-end routes it to the AFFECTED-KEYS refresh: the
+  upstream changelogs stream again per view, and each micro-batch
+  re-aggregates ONLY the group keys the batch touched -- per-batch work
+  proportional to the batch's keys, never the table. Arbitrary SELECT text
+  that doesn't match the shape falls back to the full-requery refresh,
+  re-refreshed on each script execution -- correct but O(table) per
+  refresh, documented as the fidelity path.
 
 Connector tables can't reach real Postgres/Kinesis in tests; bind them to
 file-replay changelog dirs with `Engine.bind_source(name, path, schema)`.
@@ -55,6 +53,7 @@ from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
     commit_refresh,
     strip_before,
 )
+from flink_cdc_fluss_quickstart_spark.streaming.cdc_pipeline import replicate
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
 # Flink type -> Spark type (SURVEY.md 1.3)
@@ -187,6 +186,46 @@ def _split_select_items(select_list: str) -> list[str]:
     return items
 
 
+def _mentions(sql: str) -> list[str]:
+    """Base names of every table a FROM or JOIN names, in order of
+    appearance. The keywords are word-anchored: an identifier ending in
+    "from"/"join" (SELECT valid_from FROM t) must not capture the keyword
+    as a source."""
+    return [
+        n.split(".")[-1].lower()
+        for n in re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", sql, re.I)
+    ]
+
+
+def _pk_projection(select_sql: str,
+                   target_spec: "TableSpec") -> tuple[str, str, list[str]] | None:
+    """What both affected-keys shapes check of the SELECT list and GROUP BY:
+    the target has one primary-key column and the statement projects one
+    item per DDL column. Returns the PK column, the select item at the PK's
+    DDL position and the lowercased GROUP BY items, else None.
+
+    The GROUP BY capture stops at HAVING/ORDER BY/LIMIT, so the callers'
+    group-key containment check can't be satisfied by a reference in a
+    trailing clause."""
+    if len(target_spec.primary_key) != 1:
+        return None
+    pk = target_spec.primary_key[0]
+    sm = re.match(r"\s*SELECT\s+(.*?)\bFROM\b", select_sql, re.I | re.S)
+    gm = re.search(
+        r"\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b|$)",
+        select_sql,
+        re.I | re.S,
+    )
+    if not sm or not gm:
+        return None
+    items = _split_select_items(sm.group(1))
+    ddl_cols = [f.name for f in target_spec.schema.fields]
+    if pk not in ddl_cols or len(items) != len(ddl_cols):
+        return None
+    group_items = [i.strip().lower() for i in _split_select_items(gm.group(1))]
+    return pk, items[ddl_cols.index(pk)].strip(), group_items
+
+
 def _parse_agg_view_shape(select_sql: str, target_spec: "TableSpec",
                           target_name: str) -> AggViewShape | None:
     """Return the shape if `select_sql` is an affected-keys-refreshable
@@ -211,9 +250,10 @@ def _parse_agg_view_shape(select_sql: str, target_spec: "TableSpec",
     the old group would go stale until next touched -- bind such sources
     only if their scoping key is immutable.
     """
-    if len(target_spec.primary_key) != 1:
+    projection = _pk_projection(select_sql, target_spec)
+    if projection is None:
         return None
-    pk = target_spec.primary_key[0]
+    pk, pk_item, group_items = projection
     m = re.search(
         r"FROM\s+([\w.]+)\s+(?:AS\s+)?(\w+)\s+JOIN\s+([\w.]+)\s+(?:AS\s+)?(\w+)"
         r"\s+ON\s+(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)",
@@ -234,35 +274,16 @@ def _parse_agg_view_shape(select_sql: str, target_spec: "TableSpec",
     # a subquery FROM, or a SECOND mention of a staging table (self-subquery,
     # extra join -- a set-based check passed those) would be left unscoped
     # and unstreamed -- reject, don't half-stream
-    mentions = sorted(
-        n.split(".")[-1].lower()
-        for n in re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", select_sql, re.I)
-    )
-    if mentions != sorted([t1, t2]):
+    if sorted(_mentions(select_sql)) != sorted([t1, t2]):
         return None
     key_by_alias = {ja: jac, jb: jbc}
 
-    sm = re.match(r"\s*SELECT\s+(.*?)\bFROM\b", select_sql, re.I | re.S)
-    # capture stops at HAVING/ORDER BY/LIMIT so the anchor-key containment
-    # check below can't be satisfied by a reference in a trailing clause
-    gm = re.search(
-        r"\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b|$)",
-        select_sql,
-        re.I | re.S,
-    )
-    if not sm or not gm:
-        return None
-    items = _split_select_items(sm.group(1))
-    ddl_cols = [f.name for f in target_spec.schema.fields]
-    if pk not in ddl_cols or len(items) != len(ddl_cols):
-        return None
-    im = re.match(r"(\w+)\.(\w+)\s*$", items[ddl_cols.index(pk)].strip(), re.I)
+    im = re.match(r"(\w+)\.(\w+)\s*$", pk_item, re.I)
     if not im:
         return None
     anchor_alias, anchor_col = im.group(1).lower(), im.group(2).lower()
     if anchor_alias not in tables or key_by_alias.get(anchor_alias) != anchor_col:
         return None
-    group_items = [i.strip().lower() for i in _split_select_items(gm.group(1))]
     if not any(
         re.fullmatch(rf"{anchor_alias}\s*\.\s*{anchor_col}", gi) for gi in group_items
     ):
@@ -314,9 +335,10 @@ def _parse_single_table_agg_shape(select_sql: str, target_spec: "TableSpec",
     between groups refreshes both in the same micro-batch. Without that
     generalization this shape had to fall back to the full-requery path.
     """
-    if len(target_spec.primary_key) != 1:
+    projection = _pk_projection(select_sql, target_spec)
+    if projection is None:
         return None
-    pk = target_spec.primary_key[0]
+    pk, pk_item, group_items = projection
     m = re.search(
         r"FROM\s+([\w.]+)(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b)(\w+))?\s*"
         r"(?=\bWHERE\b|\bGROUP\b)",
@@ -330,31 +352,14 @@ def _parse_single_table_agg_shape(select_sql: str, target_spec: "TableSpec",
     # exactly ONE mention of the one staging table (the list-equality twin
     # of the join shape's check: a self-subquery's second FROM passed a
     # set-based comparison but its span is never rewritten)
-    mentions = [
-        n.split(".")[-1].lower()
-        for n in re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", select_sql, re.I)
-    ]
-    if mentions != [tbl]:
+    if _mentions(select_sql) != [tbl]:
         return None
-    sm = re.match(r"\s*SELECT\s+(.*?)\bFROM\b", select_sql, re.I | re.S)
-    gm = re.search(
-        r"\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\s+BY\b|\bLIMIT\b|$)",
-        select_sql,
-        re.I | re.S,
-    )
-    if not sm or not gm:
-        return None
-    items = _split_select_items(sm.group(1))
-    ddl_cols = [f.name for f in target_spec.schema.fields]
-    if pk not in ddl_cols or len(items) != len(ddl_cols):
-        return None
-    im = re.match(r"(?:(\w+)\.)?(\w+)\s*$", items[ddl_cols.index(pk)].strip())
+    im = re.match(r"(?:(\w+)\.)?(\w+)\s*$", pk_item)
     if not im:
         return None
     qual, col = (im.group(1) or "").lower(), im.group(2).lower()
     if qual and qual != alias:
         return None
-    group_items = [i.strip().lower() for i in _split_select_items(gm.group(1))]
     if not any(re.fullmatch(rf"(?:{alias}\s*\.\s*)?{col}", gi) for gi in group_items):
         return None
     vname = f"__ivw_{target_name}_{tbl}"
@@ -690,8 +695,7 @@ class Engine:
         )
         # current snapshots for every other lakehouse table mentioned (the
         # same snapshot binding the MV SELECT path uses)
-        for n in set(re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", rewritten, re.I)):
-            base = n.split(".")[-1].lower()
+        for base in set(_mentions(rewritten)):
             if base in self.stores and base not in tables:
                 snap = self.stores[base].snapshot()
                 if snap is None:
@@ -730,11 +734,15 @@ class Engine:
             self.current_catalog = stmt.split()[-1].strip().lower()
         elif head.startswith("CREATE DATABASE"):
             m = re.match(r"CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)", stmt, re.I)
+            if not m:
+                raise ValueError(f"bad CREATE DATABASE: {stmt[:80]}")
             self.catalogs.setdefault(self.current_catalog, {})[m.group(1).lower()] = {}
         elif head.startswith("USE "):
             self.current_db = stmt.split()[-1].strip().lower()
         elif head.startswith("DROP TABLE"):
             m = re.match(r"DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.]+)", stmt, re.I)
+            if not m:
+                raise ValueError(f"bad DROP TABLE: {stmt[:80]}")
             name = m.group(1).split(".")[-1].lower()
             self.tables.pop(name, None)
             self.views.pop(name, None)
@@ -806,10 +814,13 @@ class Engine:
         fields: list[T.StructField] = []
         pk: list[str] = []
         watermark: tuple[str, str] | None = None
-        for item in self._split_columns(body):
+        for item in _split_select_items(body):
             iu = item.upper()
             if iu.startswith("PRIMARY KEY"):
-                pk = [c.strip().lower() for c in re.search(r"\(([^)]*)\)", item).group(1).split(",")]
+                km = re.match(r"PRIMARY\s+KEY\s*\(([^)]*)\)", item, re.I)
+                if not km:
+                    raise ValueError(f"bad PRIMARY KEY clause: {item[:80]}")
+                pk = [c.strip().lower() for c in km.group(1).split(",")]
             elif iu.startswith("WATERMARK"):
                 wm = re.match(
                     r"WATERMARK\s+FOR\s+(\w+)\s+AS\s+\w+\s*-\s*INTERVAL\s*'(\d+)'\s*(\w+)",
@@ -822,6 +833,8 @@ class Engine:
                 watermark = (wm.group(1).lower(), f"{wm.group(2)} {unit}{'' if unit.endswith('s') else 's'}")
             else:
                 cm = re.match(r"(\w+)\s+(.+?)(\s+NOT\s+NULL)?\s*$", item, re.I | re.S)
+                if not cm:
+                    raise ValueError(f"bad column definition: {item[:80]!r}")
                 fields.append(
                     T.StructField(cm.group(1).lower(), _parse_type(cm.group(2)), cm.group(3) is None)
                 )
@@ -867,24 +880,6 @@ class Engine:
             # the on-disk data, not only this session's
             self._register_store(name, path)
 
-    @staticmethod
-    def _split_columns(body: str) -> list[str]:
-        items, buf, depth = [], [], 0
-        for ch in body:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                items.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-        tail = "".join(buf).strip()
-        if tail:
-            items.append(tail)
-        return [i for i in items if i]
-
     # -- DML ---------------------------------------------------------------
 
     def _insert_into(self, stmt: str) -> None:
@@ -896,13 +891,7 @@ class Engine:
         target = self.stores[target_name]
         target_spec = self.tables[target_name]
 
-        # \b-anchored like every other FROM/JOIN scan here: without it an
-        # identifier ending in "from"/"join" (SELECT valid_from FROM t)
-        # matched its own tail and captured the keyword as the source name
-        src_names = {
-            n.split(".")[-1].lower()
-            for n in re.findall(r"(?:\bFROM|\bJOIN)\s+([\w.]+)", select_sql, re.I)
-        }
+        src_names = set(_mentions(select_sql))
         streaming_sources = [n for n in src_names if n in self.bound_sources]
         is_agg = re.search(r"\bGROUP\s+BY\b", select_sql, re.I) is not None
 
@@ -929,32 +918,15 @@ class Engine:
             # replication job: stream the changelog, project, merge (K1)
             src = streaming_sources[0]
             path, schema = self.bound_sources[src]
-            stream = changelog_stream(self.spark, path, schema)
             spec = self.tables.get(src)
-            if spec and spec.watermark:
-                col, delay = spec.watermark
-                declared = stream.schema[col].dataType
-                stream = stream.withColumn(col, F.col(col).cast("timestamp")).withWatermark(col, delay)
-                # restore the DDL-declared type so the STORED staging schema
-                # matches the table spec (the watermark itself gates nothing
-                # in a foreachBatch-only pipeline; it is the T1 declaration)
-                stream = stream.withColumn(col, F.col(col).cast(declared))
-            cols = [f.name for f in target_spec.schema.fields]
-            projected = stream.select("op", "seq", *cols)
             ckpt = os.path.join(self.warehouse, "_ckpt", f"{target_name}_from_{src}")
             self._register_ckpt(target_name, ckpt)
-
-            def fb(batch_df: DataFrame, batch_id: int) -> None:
-                target.merge(batch_df, batch_id=batch_id, writer_id=f"sql-{src}",
-                             source=src)
-
-            q = (
-                projected.writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            self.queries.append(q)
+            self.queries.append(replicate(
+                changelog_stream(self.spark, path, schema), target, ckpt,
+                select_cols=[f.name for f in target_spec.schema.fields],
+                watermark=spec.watermark if spec else None,
+                writer_id=f"sql-{src}", source=src,
+            ))
             self.replicated_from[target_name] = src
             return
 
@@ -1015,8 +987,8 @@ class Engine:
         # materialized-view refresh: merge the query result by the target's
         # PK, deleting vanished groups. Re-executing the script re-refreshes
         # (the reference's never-ending INSERT, expressed as repeatable
-        # refreshes; the native ContinuousRevenueView API is the per-batch
-        # affected-keys scale path).
+        # refreshes; the shapes above take the per-batch affected-keys
+        # path instead).
         self._refresh_view(target, target_spec, run_select())
 
     def _start_incremental_view(self, target_name: str, shape: AggViewShape) -> None:

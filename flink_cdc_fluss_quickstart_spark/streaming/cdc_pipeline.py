@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -28,10 +29,11 @@ def replicate(
     select_cols: Sequence[str] | None = None,
     watermark: tuple[str, str] | None = None,
     writer_id: str = "cdc",
-    trigger: dict | None = None,
+    source: str | None = None,
 ) -> StreamingQuery:
-    """Start a replication job; returns the StreamingQuery (T7: a running
-    INSERT INTO statement)."""
+    """Start a replication job that drains the changelog available now;
+    returns the StreamingQuery (T7: a running INSERT INTO statement).
+    ``source`` names the changelog for `PKTable.merge`'s sequence mark."""
     df = changelog
     if watermark is not None:
         # T1: bounded out-of-orderness; gates state retention for any
@@ -39,8 +41,6 @@ def replicate(
         # require instant-semantics TIMESTAMP; the session runs UTC so the
         # cast from NTZ is lossless.
         col, delay = watermark
-        import pyspark.sql.functions as F
-
         declared = df.schema[col].dataType
         df = df.withColumn(col, F.col(col).cast("timestamp")).withWatermark(col, delay)
         # restore the source-declared type so the STORED staging schema
@@ -49,15 +49,12 @@ def replicate(
         # bounded-out-of-orderness declaration
         df = df.withColumn(col, F.col(col).cast(declared))
     if select_cols is not None:
-        keep = list(select_cols)
-        # force-keep the columns the merge itself consumes: the op column and
-        # the TARGET's ordering columns (not a hardcoded 'seq' -- a table
-        # ordered by e.g. 'ts' would otherwise lose its ordering column to
-        # the projection and kill the query at first merge)
-        for extra in ("op", *target.order_by):
-            if extra not in keep:
-                keep.insert(0, extra)
-        df = df.select(*keep)
+        # the columns the merge itself consumes lead: the op column, then the
+        # TARGET's ordering columns (not a hardcoded 'seq' -- a table ordered
+        # by e.g. 'ts' would otherwise lose its ordering column to the
+        # projection and kill the query at first merge)
+        lead = [c for c in ("op", *target.order_by) if c not in select_cols]
+        df = df.select(*lead, *select_cols)
     elif "before" in df.columns:
         # no projection requested: still strip the CDC before-image envelope
         # -- the staging snapshot's contract is after-image payload columns
@@ -67,10 +64,11 @@ def replicate(
         df = df.drop("before")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        target.merge(batch_df, batch_id=batch_id, writer_id=writer_id)
+        target.merge(batch_df, batch_id=batch_id, writer_id=writer_id, source=source)
 
-    writer = df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        df.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()

@@ -47,6 +47,8 @@ def test_reference_scripts_end_to_end(spark, workload, tmp_path):
     tickets = eng.snapshot("tickets_staging")
     assert movies.count() == 10  # 2 inserts x 5 epochs, updates collapse
     assert tickets.count() > 0
+    # retractions happened: tickets transitioned past 'scheduled'
+    assert {"live", "finished"} <= {r.status for r in tickets.collect()}
 
     # users pipeline (reference users-cdc.sql) through the same front-end:
     # 1 insert per epoch, no updates -> one row per user
@@ -68,6 +70,8 @@ def test_reference_scripts_end_to_end(spark, workload, tmp_path):
     o = sorted(tuple(r) for r in oracle.collect())
     assert s == o
     assert len(s) > 0
+    # movie-title updates are reflected in the served view (J1 dim update)
+    assert any("director's cut" in r.movie_title for r in served.collect())
 
     # session config captured (reference SET statements)
     assert eng.conf["table.optimizer.agg-phase-strategy"] == "TWO_PHASE"
@@ -599,6 +603,11 @@ def test_malformed_statements_raise_value_errors(spark, tmp_path):
         "CREATE CATALOG nowith",
         "INSERT INTO t VALUES (1)",
         "CREATE TABLE t (k BIGINT, WATERMARK FOR ts AS ts, PRIMARY KEY (k) NOT ENFORCED)",
+        "CREATE DATABASE",
+        "DROP TABLE",
+        "CREATE TABLE t (k, PRIMARY KEY (k) NOT ENFORCED) WITH ('connector'='x')",
+        "CREATE TABLE t2 (k BIGINT, PRIMARY KEY k NOT ENFORCED) WITH ('connector'='x')",
+        "CREATE TABLE t3 (k BIGINT,, PRIMARY KEY (k) NOT ENFORCED) WITH ('connector'='x')",
     ):
         with pytest.raises(ValueError):
             eng.execute(bad)

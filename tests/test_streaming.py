@@ -1,22 +1,70 @@
 """Streaming end-to-end tests (SURVEY.md section 5 items 3-4): replay a
-deterministic CDC workload modeled on the reference's generator and assert
-the continuously-maintained view equals the batch re-aggregation of the final
+deterministic CDC workload modeled on the reference's generator through the
+reference scripts (tests/fixtures/*.sql on the SQL front-end) and assert the
+continuously-maintained view equals the batch re-aggregation of the final
 snapshots -- the invariant Flink's retraction machinery guarantees."""
 
 from __future__ import annotations
 
-from pathlib import Path
+from datetime import datetime
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import types as T
+from test_sql_frontend import FIXTURES, _engine_over_epochs, _view_matches_oracle
 
 from flink_cdc_fluss_quickstart_spark.sources import osb
-from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
-    ContinuousRevenueView,
-    revenue_aggregate,
-)
+from flink_cdc_fluss_quickstart_spark.sql_frontend import Engine
+from flink_cdc_fluss_quickstart_spark.streaming.analytics import revenue_aggregate
 from flink_cdc_fluss_quickstart_spark.streaming.cdc_pipeline import replicate
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
+
+REVENUE_SCRIPTS = ("movies-cdc", "tickets-cdc", "revenue-analytics")
+TS0 = datetime(2025, 6, 1, 12, 0, 0)
+
+
+def _run_scripts(eng: Engine) -> None:
+    """Execute the revenue pipeline's scripts -- every stream starts before
+    any is awaited, as a deployment submits them -- and drain them."""
+    for name in REVENUE_SCRIPTS:
+        eng.execute((FIXTURES / f"{name}.sql").read_text())
+    eng.await_all()
+
+
+def _revenue_engine(spark, tmp_path):
+    """An Engine whose movies/tickets changelogs are bound to empty dirs,
+    and those dirs: tests fill them with `osb.write_epoch` (one micro-batch
+    per epoch file) and drain them with `_run_scripts`."""
+    dirs = {t: tmp_path / "changelog" / t for t in ("movies", "tickets")}
+    for d in dirs.values():
+        d.mkdir(parents=True)
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.bind_source("pg_osb_movies", str(dirs["movies"]), osb.MOVIES_SCHEMA)
+    eng.bind_source("pg_osb_tickets", str(dirs["tickets"]), osb.TICKETS_SCHEMA)
+    return eng, {t: str(d) for t, d in dirs.items()}
+
+
+def _movie(movie_id: int, title: str | None = None) -> dict:
+    return {"movie_id": movie_id, "title": title or f"Movie {movie_id}",
+            "description": "d", "duration_minutes": 90, "start_date": TS0,
+            "created_at": TS0}
+
+
+def _ticket(ticket_id: int, movie_id: int, cost: str = "10.00") -> dict:
+    return {"ticket_id": ticket_id, "movie_id": movie_id, "user_id": 1,
+            "cost": Decimal(cost), "status": "scheduled", "purchased_at": TS0}
+
+
+def _staging_batch(spark, envelope: T.StructType, rows: list[dict]):
+    """Staging-merge input: changelog rows without the before-image."""
+    return spark.createDataFrame(
+        rows, T.StructType([f for f in envelope.fields if f.name != "before"]))
+
+
+def _served(eng: Engine) -> dict:
+    snap = eng.snapshot("movie_revenue_realtime")
+    return {} if snap is None else {r.movie_id: r for r in snap.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -84,106 +132,115 @@ def test_cdc_replication_pipeline(spark, workload, tmp_path):
     assert {r["username"] for r in snap.collect()} == {f"user_{i}" for i in range(1, 7)}
 
 
-def test_continuous_revenue_view_matches_batch_oracle(spark, workload, tmp_path):
-    tickets = PKTable(spark, str(tmp_path / "tickets_staging"),
-                      keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "movies_staging"),
-                     keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "movie_revenue_realtime"),
-                      keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
+def _workload_engine(spark, tmp_path, wl: dict) -> Engine:
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.bind_source("pg_osb_movies", wl["movies"], osb.MOVIES_SCHEMA)
+    eng.bind_source("pg_osb_tickets", wl["tickets"], osb.TICKETS_SCHEMA)
+    return eng
 
-    # movies first (dimension inserts+updates), then tickets -- each epoch a
-    # separate micro-batch (maxFilesPerTrigger=1)
-    qm = view.start_movies_pipeline(
-        osb.changelog_stream(spark, workload["movies"], osb.MOVIES_SCHEMA),
-        str(tmp_path / "ckpt_movies"),
-    )
-    qm.awaitTermination(180)
-    qt = view.start_tickets_pipeline(
-        osb.changelog_stream(spark, workload["tickets"], osb.TICKETS_SCHEMA),
-        str(tmp_path / "ckpt_tickets"),
-    )
-    qt.awaitTermination(180)
 
-    served = revenue.snapshot().drop("seq")
-    oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
-
-    s_rows = sorted([tuple(r) for r in served.select(*oracle.columns).collect()])
-    o_rows = sorted([tuple(r) for r in oracle.collect()])
-    assert s_rows == o_rows
-    # sanity: retractions happened (some tickets transitioned / were deleted)
-    statuses = {r["status"] for r in tickets.snapshot().collect()}
+def _assert_view_tracks_two_sided_churn(eng: Engine) -> None:
+    """Served view == batch re-aggregation of the final staging snapshots,
+    and the run really exercised both sides: tickets retracted past
+    'scheduled', and title edits reached the served view (J1 dim update)."""
+    assert _view_matches_oracle(eng)
+    statuses = {r.status for r in eng.snapshot("tickets_staging").collect()}
     assert {"live", "finished"} <= statuses
-    # movie-title updates are reflected in the served view (J1 dim update)
-    titles = {r["movie_title"] for r in served.collect()}
-    assert any("director's cut" in t for t in titles)
+    assert any("director's cut" in r.movie_title for r in _served(eng).values())
+
+
+def test_continuous_revenue_view_matches_batch_oracle(spark, workload, tmp_path):
+    """Movies first (dimension inserts + updates), then tickets -- each epoch
+    file a separate micro-batch -- with the view maintained by the
+    reference revenue-analytics script."""
+    eng = _workload_engine(spark, tmp_path, workload)
+    eng.execute((FIXTURES / "movies-cdc.sql").read_text())
+    eng.await_all()
+    eng.execute((FIXTURES / "tickets-cdc.sql").read_text())
+    eng.execute((FIXTURES / "revenue-analytics.sql").read_text())
+    eng.await_all()
+    _assert_view_tracks_two_sided_churn(eng)
+
+
+def test_concurrent_two_sided_updates_converge(spark, workload, tmp_path):
+    """Changelog-mode J1 parity under CONCURRENT two-sided updates: every
+    stream starts before any is awaited, so the movies side (dimension
+    inserts + title edits, gen_data.py:118-133 semantics) and the tickets
+    side (inserts / status transitions / deletes) merge and refresh the
+    view at the same time, and dimension edits land mid-ticket-stream. The
+    serving table must still converge to the batch re-aggregation of the
+    final snapshots -- the invariant Flink's retraction machinery guarantees
+    when both join inputs update."""
+    eng = _workload_engine(spark, tmp_path, workload)
+    _run_scripts(eng)
+    _assert_view_tracks_two_sided_churn(eng)
+
+
+def test_heavy_exchange_workload_parity(spark, tmp_path):
+    """Stress the before-image path: a workload where group-key-moving
+    updates are as frequent as status transitions (5 exchanges per epoch)
+    must still hold the streaming == batch invariant -- every exchange
+    leaves a stale OLD group behind unless the refresh consumed the
+    before-image."""
+    wl = osb.generate_workload(str(tmp_path / "wl"), epochs=6, seed=99,
+                               moves_per_epoch=5)
+    eng = _workload_engine(spark, tmp_path, wl)
+    _run_scripts(eng)
+
+    # the workload really contains moves (guard against a generator change
+    # silently defeating the point of this test)
+    log = spark.read.schema(osb.TICKETS_SCHEMA).parquet(wl["tickets"])
+    n_moves = log.filter(
+        (F.col("op") == "U") & (F.col("before.movie_id") != F.col("movie_id"))
+    ).count()
+    assert n_moves >= 15  # 5 moves/epoch from epoch 2 (candidate-limited)
+    assert _view_matches_oracle(eng)
 
 
 def test_revenue_view_recovers_from_checkpoint_restart(spark, tmp_path):
     """Exactly-once across a process restart (T4, the recovery half): run the
-    flagship view over the FIRST half of the workload, let the queries
-    terminate, then resume over the second half from the SAME checkpoints and
-    table paths with freshly constructed PKTable/view objects -- a new
-    "process". The served view must equal the batch oracle of the full
-    snapshots: the file-source checkpoint must not re-deliver the first
-    half's epochs (the pk-table idempotence markers absorb the at-most-one
-    uncommitted-batch replay), and the second half's group-key-moving
-    exchanges must retract from aggregates built BEFORE the restart -- which
-    only works if the recovered staging state, not the stream history, feeds
-    the refresh."""
-    import shutil
+    reference scripts over the FIRST half of the workload, then resume over
+    the second half with a fresh Engine over the SAME warehouse -- a new
+    "process" that finds the tables and stream checkpoints on disk. The
+    served view must equal the batch oracle of the full snapshots: the
+    file-source checkpoints must not re-deliver the first half's epochs
+    (the PK tables' idempotence markers absorb the at-most-one uncommitted
+    batch replay), and the second half's group-key-moving exchanges must
+    retract from aggregates built BEFORE the restart -- which only works if
+    the recovered staging state, not the stream history, feeds the
+    refresh.
 
-    full = osb.generate_workload(str(tmp_path / "all"), epochs=6, seed=42)
-    live = {t: tmp_path / "live" / t for t in ("movies", "tickets")}
-    for d in live.values():
-        d.mkdir(parents=True)
+    Each half also checks changelog-mode J1 parity under CONCURRENT
+    two-sided updates: all of a process's streams run at once, so the
+    movies side (dimension inserts + title edits, gen_data.py:118-133
+    semantics) and the tickets side (inserts / status transitions /
+    exchanges / deletes) merge into their staging tables and refresh the
+    view at the same time, and dimension edits land mid-ticket-stream."""
+    eng, expose = _engine_over_epochs(spark, tmp_path, epochs=6)
 
-    def expose(table: str, lo: int, hi: int) -> None:
-        for e in range(lo, hi):
-            name = f"epoch_{e:04d}.parquet"
-            shutil.copy(Path(full[table]) / name, live[table] / name)
+    def run(engine: Engine) -> list[tuple]:
+        _run_scripts(engine)
+        assert _view_matches_oracle(engine)
+        return sorted(map(tuple, engine.snapshot("movie_revenue_realtime")
+                          .drop("seq").collect()))
 
-    def run_process():
-        # fresh objects over the SAME storage + checkpoints = restart
-        tickets = PKTable(spark, str(tmp_path / "tickets_staging"),
-                          keys=["ticket_id"], order_by=["seq"])
-        movies = PKTable(spark, str(tmp_path / "movies_staging"),
-                         keys=["movie_id"], order_by=["seq"])
-        revenue = PKTable(spark, str(tmp_path / "movie_revenue_realtime"),
-                          keys=["movie_id"], order_by=["seq"])
-        view = ContinuousRevenueView(spark, tickets, movies, revenue)
-        qm = view.start_movies_pipeline(
-            osb.changelog_stream(spark, str(live["movies"]), osb.MOVIES_SCHEMA),
-            str(tmp_path / "ckpt_movies"),
-        )
-        qm.awaitTermination(180)
-        qt = view.start_tickets_pipeline(
-            osb.changelog_stream(spark, str(live["tickets"]), osb.TICKETS_SCHEMA),
-            str(tmp_path / "ckpt_tickets"),
-        )
-        qt.awaitTermination(180)
-        return tickets, movies, revenue
+    expose(0, 3)
+    first_half = run(eng)
 
-    def assert_view_matches_oracle(tickets, movies, revenue):
-        served = revenue.snapshot().drop("seq")
-        oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
-        s_rows = sorted(tuple(r) for r in served.select(*oracle.columns).collect())
-        o_rows = sorted(tuple(r) for r in oracle.collect())
-        assert s_rows == o_rows
-        return s_rows
-
-    expose("movies", 0, 3)
-    expose("tickets", 0, 3)
-    first_half = assert_view_matches_oracle(*run_process())
-
-    expose("movies", 3, 6)
-    expose("tickets", 3, 6)
-    final = assert_view_matches_oracle(*run_process())
+    restarted = Engine(spark, warehouse=eng.warehouse)
+    for name, (path, schema) in eng.bound_sources.items():
+        restarted.bind_source(name, path, schema)
+    expose(3, 6)
+    final = run(restarted)
 
     # the resumed process actually advanced the view (epochs 4-6 carry new
     # tickets and at least one exchange), it did not just re-serve half one
     assert final != first_half
+    # the run really exercised two-sided churn: title edits present in the
+    # final dimension AND reflected in the served view
+    assert any("director's cut" in r.movie_title for r in _served(restarted).values())
+    statuses = {r.status for r in restarted.snapshot("tickets_staging").collect()}
+    assert {"live", "finished"} <= statuses
 
 
 def test_revenue_view_invariants(spark, workload, tmp_path):
@@ -208,51 +265,26 @@ def test_revenue_view_invariants(spark, workload, tmp_path):
 
 
 def test_refresh_deletes_groups_when_staging_empties(spark, tmp_path):
-    """A batch that deletes EVERY remaining ticket empties the staging table
-    (snapshot() -> None); the refresh must still merge the deletes for the
-    affected groups, or the serving table keeps the stale aggregates
-    forever -- the r8 review's emptied-staging regression."""
-    from datetime import datetime
-    from decimal import Decimal
-
-    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-    ts0 = datetime(2025, 6, 1, 12, 0, 0)
-    movies.merge(
-        spark.createDataFrame(
-            [("I", 1, 1, "Movie 1", "d", 90, ts0, ts0)],
-            "op string, seq long, movie_id long, title string, description string,"
-            " duration_minutes int, start_date timestamp_ntz, created_at timestamp_ntz",
-        ),
-        batch_id=0,
-    )
-    ticket_schema = (
-        "op string, seq long, ticket_id long, movie_id long, user_id long,"
-        " cost decimal(10,2), status string, purchased_at timestamp_ntz"
-    )
-    tickets.merge(
-        spark.createDataFrame(
-            [("I", 2, 1, 1, 1, Decimal("10.00"), "scheduled", ts0)], ticket_schema
-        ),
-        batch_id=0,
-    )
-    affected = spark.createDataFrame([(1,)], "movie_id long")
-    view.refresh(affected, 0, "w")
-    assert {r.movie_id for r in revenue.snapshot().collect()} == {1}
+    """A changelog batch that deletes EVERY remaining ticket empties the
+    staging table (snapshot() -> None); the view's refresh must still merge
+    the deletes for the affected groups, or the serving table keeps the
+    stale aggregates forever."""
+    eng, dirs = _revenue_engine(spark, tmp_path)
+    ticket = _ticket(1, movie_id=1)
+    osb.write_epoch(dirs["movies"], 0, [{"op": "I", "seq": 1, **_movie(1)}],
+                    osb.MOVIES_SCHEMA)
+    osb.write_epoch(dirs["tickets"], 0, [{"op": "I", "seq": 2, **ticket}],
+                    osb.TICKETS_SCHEMA)
+    _run_scripts(eng)
+    assert set(_served(eng)) == {1}
 
     # the ONLY ticket is deleted -> staging empties -> snapshot() is None
-    tickets.merge(
-        spark.createDataFrame(
-            [("D", 3, 1, 1, 1, Decimal("10.00"), "scheduled", ts0)], ticket_schema
-        ),
-        batch_id=1,
-    )
-    assert tickets.snapshot() is None
-    view.refresh(affected, 1, "w")
-    served = revenue.snapshot()
-    assert served is None or served.filter(F.col("movie_id") == 1).count() == 0
+    osb.write_epoch(dirs["tickets"], 1,
+                    [{"op": "D", "seq": 3, **ticket, "before": ticket}],
+                    osb.TICKETS_SCHEMA)
+    _run_scripts(eng)
+    assert eng.snapshot("tickets_staging") is None
+    assert 1 not in _served(eng)
 
 
 def test_pk_table_bucket_count_is_a_creation_property(spark, tmp_path):
@@ -361,8 +393,6 @@ def test_concurrent_merges_serialize(spark, tmp_path):
 def test_drop_table_purges_store(spark, tmp_path):
     """Reference dialect: DROP TABLE + CREATE TABLE yields an EMPTY table
     (the old store's rows must not resurrect)."""
-    from flink_cdc_fluss_quickstart_spark.sql_frontend import Engine
-
     ddl = """
     CREATE TABLE t1 (
         id BIGINT NOT NULL,
@@ -381,188 +411,33 @@ def test_drop_table_purges_store(spark, tmp_path):
     assert eng.snapshot("t1") is None
 
 
-def test_concurrent_two_sided_updates_converge(spark, workload, tmp_path):
-    """Changelog-mode J1 parity under CONCURRENT two-sided updates: the
-    movies pipeline (dimension inserts + title edits, gen_data.py:118-133
-    semantics) and the tickets pipeline (inserts / status transitions /
-    deletes) run at the same time, so dimension edits land mid-ticket-stream.
-    The serving table must still converge to the batch re-aggregation of the
-    final snapshots -- the invariant Flink's retraction machinery guarantees
-    when both join inputs update."""
-    tickets = PKTable(spark, str(tmp_path / "tickets_staging"),
-                      keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "movies_staging"),
-                     keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "movie_revenue_realtime"),
-                      keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-
-    # both pipelines start together; epoch files become interleaved
-    # micro-batches on two driver threads
-    qm = view.start_movies_pipeline(
-        osb.changelog_stream(spark, workload["movies"], osb.MOVIES_SCHEMA),
-        str(tmp_path / "ckpt_movies"),
-    )
-    qt = view.start_tickets_pipeline(
-        osb.changelog_stream(spark, workload["tickets"], osb.TICKETS_SCHEMA),
-        str(tmp_path / "ckpt_tickets"),
-    )
-    qm.awaitTermination(300)
-    qt.awaitTermination(300)
-
-    served = revenue.snapshot().drop("seq")
-    oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
-    s_rows = sorted([tuple(r) for r in served.select(*oracle.columns).collect()])
-    o_rows = sorted([tuple(r) for r in oracle.collect()])
-    assert s_rows == o_rows
-    # the run really exercised two-sided churn: title edits present in the
-    # final dimension AND reflected in the served view
-    titles = {r["movie_title"] for r in served.collect()}
-    assert any("director's cut" in t for t in titles)
-    statuses = {r["status"] for r in tickets.snapshot().collect()}
-    assert {"live", "finished"} <= statuses
-
-
-def _write_ticket_epoch(dir_path, epoch: int, rows: list[dict]) -> None:
-    """One changelog epoch file in the osb envelope (incl. before struct)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    payload = [
-        ("ticket_id", pa.int64()), ("movie_id", pa.int64()), ("user_id", pa.int64()),
-        ("cost", pa.decimal128(10, 2)), ("status", pa.string()),
-        ("purchased_at", pa.timestamp("us")),
-    ]
-    schema = pa.schema(
-        [pa.field("op", pa.string()), pa.field("seq", pa.int64())]
-        + [pa.field(n, t) for n, t in payload]
-        + [pa.field("before", pa.struct([pa.field(n, t) for n, t in payload]))]
-    )
-    cols = {f.name: [r.get(f.name) for r in rows] for f in schema}
-    pq.write_table(
-        pa.Table.from_pydict(cols, schema=schema),
-        str(Path(dir_path) / f"epoch_{epoch:04d}.parquet"),
-    )
-
-
 def test_group_key_moving_update_refreshes_both_groups(spark, tmp_path):
     """REPLICA IDENTITY FULL semantics (01-init.sql:56-59): a ticket
     EXCHANGED from movie 1 to movie 2 arrives as one U row whose before
-    struct carries the old movie_id. After that single micro-batch, movie
-    1's aggregate must have retracted the ticket (here: the group empties
-    and is DELETED from the serving table) and movie 2's must include it --
-    an after-image-only consumer would leave movie 1 stale forever, since
+    struct carries the old movie_id. After that micro-batch, movie 1's
+    aggregate must have retracted the ticket (here: the group empties and
+    is DELETED from the serving table) and movie 2's must include it -- an
+    after-image-only consumer would leave movie 1 stale forever, since
     nothing else ever touches it."""
-    from datetime import datetime
-    from decimal import Decimal
+    eng, dirs = _revenue_engine(spark, tmp_path)
+    old = _ticket(1, movie_id=1)
+    osb.write_epoch(dirs["movies"], 0,
+                    [{"op": "I", "seq": i, **_movie(i)} for i in (1, 2)],
+                    osb.MOVIES_SCHEMA)
+    osb.write_epoch(dirs["tickets"], 0, [{"op": "I", "seq": 3, **old}],
+                    osb.TICKETS_SCHEMA)
+    _run_scripts(eng)
+    assert {m: r.ticket_count for m, r in _served(eng).items()} == {1: 1}
 
-    t_dir = tmp_path / "wal" / "tickets"
-    m_dir = tmp_path / "wal" / "movies"
-    t_dir.mkdir(parents=True)
-    m_dir.mkdir(parents=True)
-
-    ts0 = datetime(2025, 6, 1, 12, 0, 0)
-    base = {"user_id": 1, "cost": Decimal("10.00"), "purchased_at": ts0}
-    old = {"ticket_id": 1, "movie_id": 1, "status": "scheduled", **base}
-    # epoch 0: one ticket for movie 1; epoch 1: it moves to movie 2
-    _write_ticket_epoch(t_dir, 0, [{"op": "I", "seq": 1, **old}])
-    _write_ticket_epoch(
-        t_dir, 1,
-        [{"op": "U", "seq": 2, **{**old, "movie_id": 2}, "before": old}],
-    )
-    # movies: both inserted in epoch 0, never touched again
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    mpayload = [
-        ("movie_id", pa.int64()), ("title", pa.string()), ("description", pa.string()),
-        ("duration_minutes", pa.int32()), ("start_date", pa.timestamp("us")),
-        ("created_at", pa.timestamp("us")),
-    ]
-    mschema = pa.schema(
-        [pa.field("op", pa.string()), pa.field("seq", pa.int64())]
-        + [pa.field(n, t) for n, t in mpayload]
-        + [pa.field("before", pa.struct([pa.field(n, t) for n, t in mpayload]))]
-    )
-    mrows = [
-        {"op": "I", "seq": 1, "movie_id": i, "title": f"Movie {i}",
-         "description": "d", "duration_minutes": 90, "start_date": ts0,
-         "created_at": ts0}
-        for i in (1, 2)
-    ]
-    pq.write_table(
-        pa.Table.from_pydict(
-            {f.name: [r.get(f.name) for r in mrows] for f in mschema}, schema=mschema
-        ),
-        str(m_dir / "epoch_0000.parquet"),
-    )
-
-    from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
-
-    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-
-    # awaitTermination(timeout) returns False if the query hasn't drained
-    # (observed under full-suite CPU contention) -- assert it, so a slow
-    # machine reports "didn't drain" instead of a bogus semantic failure
-    qm = view.start_movies_pipeline(
-        osb.changelog_stream(spark, str(m_dir), osb.MOVIES_SCHEMA),
-        str(tmp_path / "ckpt_m"),
-    )
-    assert qm.awaitTermination(300), "movies pipeline did not drain"
-    qt = view.start_tickets_pipeline(
-        osb.changelog_stream(spark, str(t_dir), osb.TICKETS_SCHEMA),
-        str(tmp_path / "ckpt_t"),
-    )
-    assert qt.awaitTermination(300), "tickets pipeline did not drain"
-
-    served = {r.movie_id: r for r in revenue.snapshot().collect()}
+    osb.write_epoch(dirs["tickets"], 1,
+                    [{"op": "U", "seq": 4, **old, "movie_id": 2, "before": old}],
+                    osb.TICKETS_SCHEMA)
+    _run_scripts(eng)
+    served = _served(eng)
     # movie 1's group emptied -> deleted from the serving table
     assert 1 not in served, "stale aggregate left for the OLD group after the move"
     assert served[2].ticket_count == 1
     assert served[2].total_revenue == Decimal("10.00")
-
-
-def test_heavy_exchange_workload_parity(spark, tmp_path):
-    """Stress the before-image path: a workload where group-key-moving
-    updates are as frequent as status transitions (5 exchanges per epoch)
-    must still hold the streaming == batch invariant -- every exchange
-    leaves a stale OLD group behind unless the refresh consumed the
-    before-image."""
-    dirs = osb.generate_workload(
-        str(tmp_path / "wl"), epochs=6, seed=99, moves_per_epoch=5
-    )
-    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-
-    qm = view.start_movies_pipeline(
-        osb.changelog_stream(spark, dirs["movies"], osb.MOVIES_SCHEMA),
-        str(tmp_path / "ckpt_m"),
-    )
-    qm.awaitTermination(180)
-    qt = view.start_tickets_pipeline(
-        osb.changelog_stream(spark, dirs["tickets"], osb.TICKETS_SCHEMA),
-        str(tmp_path / "ckpt_t"),
-    )
-    qt.awaitTermination(180)
-
-    # the workload really contains moves (guard against a generator change
-    # silently defeating the point of this test)
-    log = spark.read.schema(osb.TICKETS_SCHEMA).parquet(dirs["tickets"])
-    n_moves = log.filter(
-        (F.col("op") == "U") & (F.col("before.movie_id") != F.col("movie_id"))
-    ).count()
-    assert n_moves >= 15  # 5 moves/epoch from epoch 2 (candidate-limited)
-
-    served = revenue.snapshot().drop("seq")
-    oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
-    s_rows = sorted(tuple(r) for r in served.select(*oracle.columns).collect())
-    o_rows = sorted(tuple(r) for r in oracle.collect())
-    assert s_rows == o_rows and len(s_rows) > 0
 
 
 def _jobs(spark, fn):
@@ -579,125 +454,114 @@ def _jobs(spark, fn):
 
 
 def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
-    """The optimistic view commit, with a deterministic interleaving: a
-    tickets refresh builds its changes from the old movie title; before
-    that build returns, a title edit and the edit's own refresh commit. The
-    tickets refresh must notice the moved movies version under the view's
-    commit lock and rebuild there -- committing the first build would put
-    the stale title back after the newer one. A replayed (writer, batch)
-    then returns before building: no Spark job at all."""
-    from datetime import datetime
-    from decimal import Decimal
-
-    from flink_cdc_fluss_quickstart_spark.streaming.analytics import commit_refresh
-
-    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-    ts0 = datetime(2025, 6, 1, 12, 0, 0)
+    """The optimistic view commit, with a deterministic interleaving on the
+    view the Engine built from revenue-analytics.sql: a tickets refresh
+    builds its changes from the old movie title; before that build returns,
+    a title edit and the edit's own refresh commit. The tickets refresh
+    must notice the moved movies version under the view's commit lock and
+    rebuild there -- committing the first build would put the stale title
+    back after the newer one. A replayed (writer, batch) then returns
+    before building: no Spark job at all."""
+    eng, _ = _revenue_engine(spark, tmp_path)
+    _run_scripts(eng)
+    view = eng.views["movie_revenue_realtime"]
+    tickets, movies = eng.store_for("tickets_staging"), eng.store_for("movies_staging")
+    affected = spark.createDataFrame([(1,)], "movie_id long")
 
     def movie(seq, title):
-        return spark.createDataFrame(
-            [("U", seq, 1, title, 90, ts0)],
-            "op string, seq long, movie_id long, title string,"
-            " duration_minutes int, start_date timestamp_ntz")
+        return _staging_batch(spark, osb.MOVIES_SCHEMA,
+                              [{"op": "U", "seq": seq, **_movie(1, title)}])
 
     def ticket(seq, tid):
-        return spark.createDataFrame(
-            [("I", seq, tid, 1, Decimal("10.00"), "scheduled", ts0)],
-            "op string, seq long, ticket_id long, movie_id long,"
-            " cost decimal(10,2), status string, purchased_at timestamp_ntz")
+        return _staging_batch(spark, osb.TICKETS_SCHEMA,
+                              [{"op": "I", "seq": seq, **_ticket(tid, movie_id=1)}])
 
     def served():
-        return {r.movie_id: (r.movie_title, r.ticket_count)
-                for r in revenue.snapshot().collect()}
+        return {m: (r.movie_title, r.ticket_count) for m, r in _served(eng).items()}
 
-    affected = spark.createDataFrame([(1,)], "movie_id long")
     movies.merge(movie(1, "Old"), batch_id=0, writer_id="movies-cdc")
     tickets.merge(ticket(2, 1), batch_id=0, writer_id="tickets-cdc")
     view.refresh(affected, 0, "rev-from-tickets")
     assert served() == {1: ("Old", 1)}
 
     tickets.merge(ticket(3, 2), batch_id=1, writer_id="tickets-cdc")
-    built = []
+    build, built, editing = view._changes, [], []
 
-    def build():
-        changes = view.changes(affected, 1).localCheckpoint(eager=True)
-        built.append({r.movie_title for r in changes.collect()})
-        if len(built) == 1:
-            # the edit and its refresh land while the first build is out
-            movies.merge(movie(4, "New"), batch_id=1, writer_id="movies-cdc")
-            view.refresh(affected, 1, "rev-from-movies")
-            assert served() == {1: ("New", 2)}
-        return changes
+    def interleaved(keys, batch_id):
+        changes, n = build(keys, batch_id)
+        changes = changes.localCheckpoint(eager=True)
+        if not editing:
+            built.append({r.movie_title for r in changes.collect()})
+            if len(built) == 1:
+                # the edit and its refresh land while the first build is out
+                editing.append(True)
+                movies.merge(movie(4, "New"), batch_id=1, writer_id="movies-cdc")
+                view.refresh(affected, 1, "rev-from-movies")
+                editing.clear()
+                assert served() == {1: ("New", 2)}
+        return changes, n
 
-    assert commit_refresh(revenue, (tickets, movies), build, 1, "rev-from-tickets")
+    view._changes = interleaved
+    view.refresh(affected, 1, "rev-from-tickets")
     assert built == [{"Old"}, {"New"}], "the first build must be rebuilt under the lock"
     assert served() == {1: ("New", 2)}
 
-    n_built = len(built)
-    committed, n = _jobs(
-        spark, lambda: commit_refresh(revenue, (tickets, movies), build, 1,
-                                      "rev-from-tickets"))
-    assert not committed and n == 0 and len(built) == n_built
-    _, n = _jobs(spark, lambda: view.refresh(affected, 1, "rev-from-movies"))
-    assert n == 0, f"a replayed refresh ran {n} jobs"
+    n_built, n_stats = len(built), len(view.refresh_stats)
+    for writer in ("rev-from-tickets", "rev-from-movies"):
+        _, n = _jobs(spark, lambda w=writer: view.refresh(affected, 1, w))
+        assert n == 0, f"a replayed refresh ran {n} jobs"
+    assert len(built) == n_built and len(view.refresh_stats) == n_stats
     assert served() == {1: ("New", 2)}
 
 
 def test_concurrent_refreshes_converge_under_stress(spark, tmp_path):
     """More writer threads than cores: title edits and ticket inserts for
-    the same movies merge into their staging tables and refresh the view
-    concurrently, each thread through its own writer ids. Only the view
-    merges serialize, so a refresh committing a staging state older than
-    one an earlier commit saw would leave a stale title or count behind;
-    the view must equal the batch aggregation of the final snapshots."""
+    the same movies merge into the Engine's staging tables and refresh its
+    revenue view concurrently, each thread through its own writer ids.
+    Only the view merges serialize, so a refresh committing a staging state
+    older than one an earlier commit saw would leave a stale title or count
+    behind; the view must equal the batch aggregation of the final
+    snapshots."""
     import sys
     import threading
-    from datetime import datetime
-    from decimal import Decimal
 
-    tickets = PKTable(spark, str(tmp_path / "t"), keys=["ticket_id"], order_by=["seq"])
-    movies = PKTable(spark, str(tmp_path / "m"), keys=["movie_id"], order_by=["seq"])
-    revenue = PKTable(spark, str(tmp_path / "rev"), keys=["movie_id"], order_by=["seq"])
-    view = ContinuousRevenueView(spark, tickets, movies, revenue)
-    ts0 = datetime(2025, 6, 1, 12, 0, 0)
-    movie_schema = ("op string, seq long, movie_id long, title string,"
-                    " duration_minutes int, start_date timestamp_ntz")
-    ticket_schema = ("op string, seq long, ticket_id long, movie_id long,"
-                     " cost decimal(10,2), status string, purchased_at timestamp_ntz")
+    eng, _ = _revenue_engine(spark, tmp_path)
+    _run_scripts(eng)
+    view = eng.views["movie_revenue_realtime"]
+    tickets, movies = eng.store_for("tickets_staging"), eng.store_for("movies_staging")
     movie_ids = (1, 2)
-    movies.merge(spark.createDataFrame(
-        [("I", 0, m, f"Movie {m}", 90, ts0) for m in movie_ids], movie_schema),
-        batch_id=0, writer_id="seed")
+    seed = [{"op": "I", "seq": 0, **_movie(m)} for m in movie_ids]
+    movies.merge(_staging_batch(spark, osb.MOVIES_SCHEMA, seed),
+                 batch_id=0, writer_id="seed")
     errors: list[BaseException] = []
+
+    def affected():
+        return spark.createDataFrame([(m,) for m in movie_ids], "movie_id long")
 
     def editor(w: int) -> None:
         for b in range(2):
-            rows = [("U", 100 * w + b, m, f"Movie {m} w{w}b{b}", 90 + b, ts0)
+            rows = [{"op": "U", "seq": 100 * w + b,
+                     **_movie(m, f"Movie {m} w{w}b{b}"), "duration_minutes": 90 + b}
                     for m in movie_ids]
-            movies.merge(spark.createDataFrame(rows, movie_schema),
+            movies.merge(_staging_batch(spark, osb.MOVIES_SCHEMA, rows),
                          batch_id=b, writer_id=f"movies-{w}")
-            view.refresh(spark.createDataFrame([(m,) for m in movie_ids], "movie_id long"),
-                         b, f"rev-from-movies-{w}")
+            view.refresh(affected(), b, f"rev-from-movies-{w}")
 
     def seller(w: int) -> None:
         for b in range(2):
-            rows = [("I", 100 * w + b, 1000 * w + 10 * b + m, m, Decimal("5.00"),
-                     "scheduled", ts0) for m in movie_ids]
-            tickets.merge(spark.createDataFrame(rows, ticket_schema),
+            rows = [{"op": "I", "seq": 100 * w + b,
+                     **_ticket(1000 * w + 10 * b + m, m, "5.00")} for m in movie_ids]
+            tickets.merge(_staging_batch(spark, osb.TICKETS_SCHEMA, rows),
                           batch_id=b, writer_id=f"tickets-{w}")
-            view.refresh(spark.createDataFrame([(m,) for m in movie_ids], "movie_id long"),
-                         b, f"rev-from-tickets-{w}")
+            view.refresh(affected(), b, f"rev-from-tickets-{w}")
 
-    def run(fn, w):
+    def run_writer(fn, w):
         try:
             fn(w)
         except BaseException as e:  # noqa: BLE001 -- re-raised in the test thread
             errors.append(e)
 
-    threads = [threading.Thread(target=run, args=(editor if w % 2 else seller, w))
+    threads = [threading.Thread(target=run_writer, args=(editor if w % 2 else seller, w))
                for w in range(6)]
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -711,9 +575,5 @@ def test_concurrent_refreshes_converge_under_stress(spark, tmp_path):
     assert not any(th.is_alive() for th in threads), "writers did not finish"
     assert not errors, errors
 
-    served = revenue.snapshot().drop("seq")
-    oracle = revenue_aggregate(tickets.snapshot(), movies.snapshot())
-    s_rows = sorted(tuple(r) for r in served.select(*oracle.columns).collect())
-    o_rows = sorted(tuple(r) for r in oracle.collect())
-    assert s_rows == o_rows
-    assert sum(r.ticket_count for r in served.collect()) == 12
+    assert _view_matches_oracle(eng)
+    assert sum(r.ticket_count for r in _served(eng).values()) == 12
