@@ -52,12 +52,15 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable, _commit_lock
+from flink_cdc_fluss_quickstart_spark.streaming.pk_table import (
+    PKTable,
+    _commit_lock,
+    _replace_json,
+)
 
 _META = "meta.json"
 
@@ -87,30 +90,9 @@ def _table(spark: SparkSession, path: str, keys, order_by,
     )
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    # writer-unique tmp (see PKTable._write_manifest): a shared tmp name
-    # lets two concurrent first-writers rename each other's half-written
-    # file into place; mkstemp keeps the publish swap truly atomic
-    fd, tmp = tempfile.mkstemp(prefix=_META + ".", suffix=".tmp", dir=path)
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
-        os.replace(tmp, os.path.join(path, _META))  # atomic publish
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-
-
 def _read_meta(path: str) -> dict:
     with open(os.path.join(path, _META)) as f:
         return json.load(f)
-
-
-def _current_version(t: PKTable) -> int:
-    return int(t._read_manifest()["version"])
 
 
 def _publish_meta(path: str, meta: dict, versions: dict, extra: dict | None = None) -> None:
@@ -137,7 +119,7 @@ def _publish_meta(path: str, meta: dict, versions: dict, extra: dict | None = No
         meta = dict(meta)
         meta["versions"] = dict(versions)
         meta["publishes"] = prior + [entry]
-        _write_meta(path, meta)
+        _replace_json(os.path.join(path, _META), meta, sort_keys=True)
 
 
 def _ledger_behind(path: str, sub: str, current: int) -> bool:
@@ -179,7 +161,7 @@ def _resolve_publish(meta: dict, version: int | None, subs: tuple, path: str):
 def _check_lockstep(path: str, tables: dict) -> None:
     """Legacy-meta guard: without a ledger, load assumes all subtables
     version in lockstep -- verify it, don't trust it."""
-    vs = {name: _current_version(t) for name, t in tables.items()}
+    vs = {name: t.current_version() for name, t in tables.items()}
     if len(set(vs.values())) > 1:
         raise ValueError(
             f"model at {path} predates the publish ledger and its subtable"
@@ -242,7 +224,7 @@ def save_langid_model(
     meta["classes"] = bool(classes)
     _publish_meta(
         path, meta,
-        {"weights": _current_version(wt), "hot": _current_version(ht)},
+        {"weights": wt.current_version(), "hot": ht.current_version()},
         extra={"classes": bool(classes)},
     )
 
@@ -317,11 +299,11 @@ def save_logreg_model(
     df = spark.createDataFrame(rows, "j int, w double, m double, sd double")
     t = _table(spark, os.path.join(path, "coef"), ["j"], ["j"])
     t.overwrite(df)
-    versions = {"coef": _current_version(t)}
+    versions = {"coef": t.current_version()}
     if baseline is not None:
         bt = _table(spark, os.path.join(path, "baseline"), ["bin"], ["bin"])
         bt.overwrite(baseline.select("bin", "n"))
-        versions["baseline"] = _current_version(bt)
+        versions["baseline"] = bt.current_version()
     meta = _lr_meta()
     meta["n"] = int(model.n)
     meta["train_bucket"] = model.train_bucket
@@ -426,7 +408,7 @@ def save_minhash_index(spark: SparkSession, path: str, band_frame: DataFrame) ->
         band_frame.select("id", "band_idx", "band_key")
         .withColumn("seq", F.lit(0).cast("long"))
     )
-    _publish_meta(path, _mh_meta(), {"bands": _current_version(t)})
+    _publish_meta(path, _mh_meta(), {"bands": t.current_version()})
 
 
 def upsert_minhash_index(
@@ -459,7 +441,7 @@ def upsert_minhash_index(
     # a table-level no-op -- the replay must still repair the ledger, or the
     # committed rows stay invisible to load_* indefinitely
     with _commit_lock(path):
-        after = _current_version(t)
+        after = t.current_version()
         if _ledger_behind(path, "bands", after):
             _publish_meta(path, _mh_meta(), {"bands": after},
                           extra={"ingest_batch": int(batch_id)})
@@ -559,7 +541,7 @@ def save_pq_index(
     ct.overwrite(codes.select("vec_id", "m", "code", "d2"))
     _publish_meta(
         path, _pq_meta(),
-        {"books": _current_version(bt), "codes": _current_version(ct)},
+        {"books": bt.current_version(), "codes": ct.current_version()},
     )
 
 
@@ -594,14 +576,14 @@ def upsert_pq_index(
     # the codes table is ahead of the last ledger entry (covers the
     # crash-before-publish replay, where the re-ingest is a table no-op)
     with _commit_lock(path):
-        after = _current_version(ct)
+        after = ct.current_version()
         if _ledger_behind(path, "codes", after):
             bt = _table(
                 spark, os.path.join(path, "books"), ["m", "cluster"], ["m", "cluster"]
             )
             _publish_meta(
                 path, _pq_meta(),
-                {"books": _current_version(bt), "codes": after},
+                {"books": bt.current_version(), "codes": after},
                 extra={"ingest_batch": int(batch_id)},
             )
 
@@ -680,7 +662,7 @@ def _publish_maintenance(path: str, tables: dict, tag: str) -> None:
     expired'. Latest loads must never depend on a GC-expirable dir. A
     no-op when the table versions already match the last publish."""
     with _commit_lock(path):
-        after = {sub: _current_version(t) for sub, t in tables.items()}
+        after = {sub: t.current_version() for sub, t in tables.items()}
         pubs = _read_meta(path).get("publishes") or []
         last = dict(pubs[-1]["versions"]) if pubs else None
         if after and after != last:

@@ -846,7 +846,6 @@ class Engine:
             options=options,
             temporary=bool(temporary),
         )
-        self.tables[name] = spec
         if not spec.is_connector_source:
             # PK-backed managed table under the warehouse; the reference's
             # hash-bucket knob is spelled 'bucket.num' in tickets-cdc.sql:34
@@ -879,6 +878,9 @@ class Engine:
             # persist name -> store path so a FRESH engine's DROP can purge
             # the on-disk data, not only this session's
             self._register_store(name, path)
+        # registered last: a DDL the store rejects (no PRIMARY KEY, a
+        # 'bucket.num' below 1) leaves no half-defined table behind
+        self.tables[name] = spec
 
     # -- DML ---------------------------------------------------------------
 

@@ -6,11 +6,12 @@ a tiering job (tickets-cdc.sql:23-37 'bucket.num'='4'; flink-gen.sh:118-142
 Paimon 'merge-engine'='deduplicate'; deploy:316-358 tiering). This module
 collapses those three roles into one structure, Spark-first:
 
-- data lives as parquet, hash-bucketed by key (`pmod(xxhash64(pk), n)`),
+- data lives as parquet (or orc), hash-bucketed by key
+  (`pmod(xxhash64(pk), n)`),
 - a tiny JSON manifest pins, per bucket, the current data directory --
   readers see an atomic snapshot; writers only rewrite CHANGED buckets
-  (the 100 TB property: a micro-batch touching 2 of 1024 buckets rewrites
-  2/1024ths of the table, not all of it),
+  (a micro-batch touching 2 of 1024 buckets rewrites 2/1024ths of the
+  table, not all of it),
 - the manifest also carries the payload schema of the last data commit, so
   every read hands it to the scan and no read runs a Spark job to infer it
   from file footers (a manifest written before the field existed reads by
@@ -32,6 +33,17 @@ collapses those three roles into one structure, Spark-first:
   WAL tail does. ``overwrite()`` clears the marks with the txn markers; a
   manifest without the field merges as if no mark were set.
 
+**One commit path.** Each writer only builds the frame it writes:
+``merge`` and ``compact`` fold newer rows into the touched buckets' base
+rows (`_fold`: the pinned batch, or the latest pending deltas),
+``ingest`` appends the batch as delta rows, ``overwrite`` and ``rescale``
+rewrite the whole table. All five then run the same two steps:
+`_write_version` writes ``v<version>`` in one partitioned job, one file
+per bucket dir, and `_commit` swaps the changed bucket pointers, sets the
+writer's txn marker, appends the history entry, queues the superseded
+dirs for GC and swaps the manifest. Every read resolves its dirs through
+`_live_dirs` and `_resolve_dirs`.
+
 Batch reads of the table ARE the "lakehouse" surface: plain parquet scans
 with partition/bucket pruning available to Catalyst. Two further lakehouse
 semantics ride the same manifest:
@@ -47,35 +59,29 @@ semantics ride the same manifest:
   contract enforced, not just documented (production: Delta/Iceberg
   optimistic-commit conflicts).
 
-**Delta ingest (the LSM half of the Paimon analogue).** `merge()` folds
-each affected bucket by reading and rewriting it -- correct, but a
-uniformly-hashed batch touches every bucket, so merge cost is O(table)
-per batch at any bucket count (measured r13: ingesting a fixed 500-doc
-band batch into a 1.2M-row index cost exactly a full rebuild). Paimon's
-answer is an LSM tree INSIDE each bucket: ingests append level-0 delta
-files, reads merge-on-read, compaction folds periodically. `ingest()` is
-that path here: the batch is written as new per-bucket DELTA files (cost
-O(|batch|), nothing existing read or rewritten), registered in the same
-manifest under composite pointer keys (`"<bucket>#d<version>"` -- so
-time travel, history replay, GC grace, fencing and txn idempotence all
-ride the existing machinery unchanged), and `snapshot()` resolves
-base+deltas with a latest-per-key merge-on-read keyed by commit version.
-`compact()` (auto-triggered past `compact_threshold` deltas per bucket)
-folds deltas back into the base -- amortizing the rewrite over many
-ingests instead of paying it on every one. Tables never ingested into
-have no composite keys and keep the exact pre-delta read path.
+**Delta ingest (the LSM half of the Paimon analogue).** `merge()` reads
+and rewrites each affected bucket, so a uniformly-hashed batch touches
+every bucket and costs O(table) at any bucket count (ingesting a 500-doc
+band batch into a 1.2M-row index cost as much as a full rebuild). Paimon's
+answer is an LSM tree INSIDE each bucket, and `ingest()` is that path
+here: the batch is written as per-bucket DELTA files (O(|batch|), nothing
+existing read or rewritten) under composite pointer keys
+(`"<bucket>#d<version>"`) in the same manifest, so time travel, GC grace,
+fencing and txn idempotence apply unchanged, and reads resolve
+base+deltas latest-per-key by commit version. `compact()` (auto-triggered
+past `compact_threshold` deltas per bucket) folds the deltas back into the
+base, amortizing the rewrite over that many ingests. A table never
+ingested into has no composite keys and reads as a plain pruned scan.
 
 **Metadata costs no Spark job.** Writers pin their input with one eager
 `localCheckpoint` whose job also reports, through an observation, the set
 of touched buckets, the row count and the highest ``seq`` (bounded by
-n_buckets, never per row). merge folds with the same anti-join recipe the
-merge-on-read uses (`_fold`): the touched buckets' old rows minus the
-batch's keys, plus the batch's surviving rows -- no window over old and new
-rows together.
+n_buckets, never per row).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -151,6 +157,31 @@ def _bucket_expr(keys: Sequence[str], n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
+def _check_n_buckets(n_buckets: int) -> None:
+    # pmod by 0 fails every write; a negative count hashes keys into
+    # buckets -n+1..n-1, so neither may reach a manifest
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+
+
+def _replace_json(dest: str, obj, **dump_kw) -> None:
+    """Atomically replace the JSON file ``dest`` with ``obj``. The temp
+    file is writer-unique (mkstemp in dest's dir): with a shared temp
+    name, two processes writing the same file at once could rename each
+    other's half-written file into place (a torn file every reader then
+    crashes on) or crash on the vanished temp file."""
+    fd, tmp = tempfile.mkstemp(prefix=os.path.basename(dest) + ".",
+                               suffix=".tmp", dir=os.path.dirname(dest))
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, indent=1, **dump_kw)
+        os.replace(tmp, dest)
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
+        raise
+
+
 # on-disk (compressed) pending-delta bytes up to which the merge-on-read
 # anti join broadcasts its distinct delta-key side; above it the join pins
 # sort-merge. Sized well under the session's 64m autoBroadcastJoinThreshold:
@@ -181,20 +212,15 @@ def _as_nullable(t):
 
 
 def _bucket_colocate(df: DataFrame, n_partitions: int) -> DataFrame:
-    """Hash-shuffle the write set so every bucket's rows land in ONE task
-    -- hence ONE file per bucket dir per commit (Paimon's sorted-run /
-    bucketed-sink shape: writer parallelism is bounded by the bucket
-    count, by design). Without it, ``partitionBy('__bucket')`` has every
-    upstream partition write its own sliver into every bucket dir -- up
-    to shuffle-partitions files PER BUCKET per commit. The r15
-    point-serve audit measured the consequence: an 8-key lookup against
-    a 64-bucket table opened 256 files and barely beat a full-scan
-    filter; with one file per bucket it opens <= 8. Per-bucket FILE
-    count, not bucket count, dominates point-read open cost. The shuffle
-    this adds moves only the rows being rewritten (bucket-bounded for
-    merge/compact; the full set for overwrite/rescale, which are
-    table-sized rewrites anyway), and parquet/orc row groups keep the
-    bigger per-bucket files scan-splittable."""
+    """Hash-shuffle the write set so every bucket's rows land in ONE task,
+    hence ONE file per bucket dir per commit (Paimon's bucketed-sink shape:
+    writer parallelism is bounded by the bucket count). Without it,
+    ``partitionBy('__bucket')`` has every upstream partition write its own
+    sliver into every bucket dir, and per-bucket FILE count, not bucket
+    count, dominates point-read open cost: an 8-key lookup against a
+    64-bucket table opened 256 files instead of <= 8. The shuffle moves
+    only the rows being rewritten, and row groups keep the bigger
+    per-bucket files scan-splittable."""
     return df.repartition(max(1, n_partitions), "__bucket")
 
 
@@ -227,13 +253,16 @@ class PKTable:
     serving shape its 'bucket.num' exists for). Maintenance: ``compact()``
     (fold pending deltas) and ``rescale(n)`` (offline bucket-count rewrite,
     Paimon's rescale-bucket procedure -- the serving lever for a table
-    that outgrew its creation-time count).
+    that outgrew its creation-time count). Every writer commits through
+    `_write_version` + `_commit`; every read resolves dirs through
+    `_live_dirs`.
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str],
                  order_by: Sequence[str], n_buckets: int = 4,
                  gc_grace_secs: float = GC_GRACE_SECS,
                  data_format: str = "parquet") -> None:
+        _check_n_buckets(n_buckets)
         self.spark = spark
         self.path = path
         self.keys = list(keys)
@@ -305,27 +334,9 @@ class PKTable:
                 " another engine claimed this table mid-write; aborting"
                 " before the manifest swap"
             )
-        # WRITER-UNIQUE tmp file (r15 fence-race find): a shared '.tmp'
-        # name lets two processes creating the same table concurrently
-        # rename each other's half-written file into place (a torn
-        # manifest every reader then crashes on) or crash on the vanished
-        # tmp. mkstemp + os.replace makes the swap last-writer-wins atomic
-        # with no shared intermediate. In-grace commits still serialize
-        # under the commit lock / writer fence; this protects the one
-        # unfenced write -- first-open manifest creation.
-        fd, tmp = tempfile.mkstemp(
-            prefix=MANIFEST + ".", suffix=".tmp", dir=self.path
-        )
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(m, f, indent=1)
-            os.replace(tmp, self._manifest_path)  # atomic snapshot swap
-        except BaseException:
-            try:
-                os.unlink(tmp)
-            except OSError:
-                pass
-            raise
+        # mkstemp + os.replace also protects the one unfenced write:
+        # first-open manifest creation by two processes at once
+        _replace_json(self._manifest_path, m)
 
     # -- writer-epoch fence -------------------------------------------------
 
@@ -392,37 +403,9 @@ class PKTable:
         exactly Iceberg's expire_snapshots contract.
         """
         m = self._read_manifest()
-        if version is None:
-            buckets = m["buckets"]
-        else:
-            buckets = self._buckets_at(m, version)
-        schema = self._at(m, version, "schema", m.get("schema"))
-        dirs = [os.path.join(self.path, d) for d in buckets.values()]
-        if version is not None:
-            gone = [d for d in dirs if not os.path.exists(d)]
-            if gone:
-                raise ValueError(
-                    f"snapshot v{version} expired: data dirs {gone} were"
-                    " garbage-collected (raise gc_grace_secs to retain"
-                    " longer time-travel windows)"
-                )
-        base_dirs = [
-            os.path.join(self.path, d)
-            for k, d in buckets.items() if "#" not in k
-        ]
-        delta_dirs = [
-            os.path.join(self.path, d)
-            for k, d in buckets.items() if "#" in k
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        if not delta_dirs:
-            # pre-delta fast path: pure pruned scan, byte-identical to the
-            # behavior every table had before ingest() existed
-            if not base_dirs:
-                return None
-            return self._read(base_dirs, schema)
-        return self._resolve_dirs(base_dirs, delta_dirs, schema)
+        buckets = m["buckets"] if version is None else self._buckets_at(m, version)
+        return self._resolve_dirs(*self._live_dirs(buckets, version),
+                                  self._at(m, version, "schema", m.get("schema")))
 
     def lookup(self, probe: DataFrame, version: int | None = None) -> DataFrame | None:
         """Bucket-pruned point read -- the Fluss PK-table lookup serving
@@ -489,29 +472,10 @@ class PKTable:
             k: d for k, d in buckets.items()
             if int(k.split("#", 1)[0]) in wanted
         }
-        dirs = [os.path.join(self.path, d) for d in sel.values()]
-        if version is not None:
-            gone = [d for d in dirs if not os.path.exists(d)]
-            if gone:
-                raise ValueError(
-                    f"snapshot v{version} expired: data dirs {gone} were"
-                    " garbage-collected (raise gc_grace_secs to retain"
-                    " longer time-travel windows)"
-                )
-        base_dirs = [
-            os.path.join(self.path, d) for k, d in sel.items() if "#" not in k
-        ]
-        delta_dirs = [
-            os.path.join(self.path, d) for k, d in sel.items() if "#" in k
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
+        base_dirs, delta_dirs = self._live_dirs(sel, version)
         if not base_dirs and not delta_dirs:
             return schema_src  # every probed bucket empty: zero rows
-        if not delta_dirs:
-            resolved = self._read(base_dirs, schema_src.schema)
-        else:
-            resolved = self._resolve_dirs(base_dirs, delta_dirs, schema_src.schema)
+        resolved = self._resolve_dirs(base_dirs, delta_dirs, schema_src.schema)
         # the semi join reorders the key columns first; serve the stored
         # column order so both "no rows" shapes and the hit path agree
         return resolved.join(keysel, list(self.keys), "left_semi").select(
@@ -530,6 +494,24 @@ class PKTable:
                 df = self._read([p], schema, delta="#" in k).limit(0)
                 return df.drop("__op", "__dv")
         return None
+
+    def _live_dirs(self, pointers: dict[str, str],
+                   version: int | None = None) -> tuple[list[str], list[str]]:
+        """The (base, delta) dirs of bucket ``pointers`` that exist on disk.
+        A versioned read raises instead when any of them was
+        garbage-collected: an expired version is never answered from the
+        dirs that are left."""
+        dirs = {k: os.path.join(self.path, d) for k, d in pointers.items()}
+        live = {k: d for k, d in dirs.items() if os.path.exists(d)}
+        if version is not None and len(live) < len(dirs):
+            gone = [d for k, d in dirs.items() if k not in live]
+            raise ValueError(
+                f"snapshot v{version} expired: data dirs {gone} were"
+                " garbage-collected (raise gc_grace_secs to retain"
+                " longer time-travel windows)"
+            )
+        return ([d for k, d in live.items() if "#" not in k],
+                [d for k, d in live.items() if "#" in k])
 
     def _read(self, dirs: list[str], schema: dict | StructType | None,
               delta: bool = False) -> DataFrame:
@@ -580,9 +562,9 @@ class PKTable:
         streaming through an anti join (broadcast when the delta key set
         is small, the daily-ingest case) and a window over the delta rows
         alone. Nothing table-sized is ever shuffled or windowed at any
-        delta depth; the pre-r14 plan folded the whole base through the
-        latest-by-key window, a full-table shuffle per snapshot read (A/B
-        in SCALE.md)."""
+        delta depth (folding the whole base through the latest-by-key
+        window cost a full-table shuffle per snapshot read; SCALE.md).
+        Without deltas this is the plain pruned scan of the base."""
         base = self._read(base_dirs, schema) if base_dirs else None
         deltas = (
             self._read(delta_dirs, schema, delta=True) if delta_dirs else None
@@ -596,13 +578,12 @@ class PKTable:
         )
         if base is None:
             return resolved
-        # join-strategy gate on the TRUE on-disk delta size (r15 audit,
-        # tools/audit_delta_read.py --wide): the distinct delta-key frame is
-        # an aggregate over a pruned scan -- the static estimate undershoots
-        # so badly that the planner (and even the AQE-final plan) broadcast
-        # a 16M-key build side at 2x the 64m threshold. Daily-ingest deltas
-        # broadcast (the designed-for case: no exchange added over the
-        # compacted fast path); a bulk-backfill backlog pins sort-merge.
+        # join-strategy gate on the TRUE on-disk delta size: the distinct
+        # delta-key frame is an aggregate over a pruned scan, whose static
+        # estimate undershoots so badly that the planner (and even the
+        # AQE-final plan) broadcast a 16M-key build side at 2x the 64m
+        # threshold. Daily-ingest deltas broadcast (no exchange added over
+        # the compacted read); a bulk-backfill backlog pins sort-merge.
         return self._fold(
             base, deltas.select(*self.keys).distinct(), resolved,
             _dir_bytes(delta_dirs) <= DELTA_BROADCAST_MAX_BYTES,
@@ -772,6 +753,69 @@ class PKTable:
         seen = obs.get
         return pinned, sorted(seen["b"]), seen["n"], seen["hi"]
 
+    def _write_version(self, df: DataFrame, version: int, n_buckets: int,
+                       n_parts: int) -> dict[int, str]:
+        """Write ``df`` as ``v<version>`` in ONE partitioned job: each row
+        tagged with its bucket, each bucket's rows co-located into one file
+        (see _bucket_colocate, ``n_parts`` tasks). Returns bucket id -> dir
+        (relative to the table root) for each bucket the write produced; a
+        bucket whose keys were all deleted gets no dir."""
+        vdir = f"v{version}"
+        out = os.path.join(self.path, vdir)
+        _bucket_colocate(
+            df.withColumn("__bucket", _bucket_expr(self.keys, n_buckets)), n_parts
+        ).write.partitionBy("__bucket").mode("overwrite").format(
+            self.data_format
+        ).save(out)
+        written = sorted(int(n[len("__bucket="):]) for n in os.listdir(out)
+                         if n.startswith("__bucket="))
+        return {b: os.path.join(vdir, f"__bucket={b}") for b in written}
+
+    def _commit(self, m: dict, version: int, pointers: dict[str, str | None],
+                schema: StructType | None, writer_id: str | None = None,
+                batch_id: int | None = None, prior_nb: int | None = None) -> None:
+        """Commit manifest ``version``: point each key of ``pointers`` at its
+        new dir (None drops the pointer), set the writer's txn marker,
+        append the history entry (``schema`` is the payload written, None
+        for no data files; ``prior_nb`` the bucket count a rescale
+        replaced), queue every superseded dir for GC and swap the manifest.
+        Dirs whose GC grace ran out are removed after the swap, so a crash
+        can only under-delete."""
+        # the history entry maps each changed pointer to its prior dir (None:
+        # it did not exist) -- enough to undo this commit on a versioned read
+        changed = {k: m["buckets"].get(k) for k in pointers}
+        for k, d in pointers.items():
+            if d is None:
+                m["buckets"].pop(k, None)
+            else:
+                m["buckets"][k] = d
+        m["version"] = version
+        if writer_id is not None:
+            m["txn"][writer_id] = batch_id
+        self._record_commit(m, version, writer_id, batch_id, changed, schema)
+        if prior_nb is not None:
+            m["history"][-1]["nb"] = prior_nb
+        expired = self._queue_gc(m, [d for d in changed.values() if d is not None])
+        self._write_manifest(m)
+        for d in expired:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+
+    def _queue_gc(self, m: dict, superseded: Sequence[str]) -> list[str]:
+        """Age-based GC: newly superseded dirs enter the manifest's `gc`
+        ledger; entries older than `gc_grace_secs` are returned for removal.
+        Runs between the data write and the manifest swap."""
+        now = time.time()
+        pending = m.get("gc", []) + [{"dir": d, "ts": now} for d in superseded]
+        keep: list[dict] = []
+        expired: list[str] = []
+        for e in pending:
+            if now - e["ts"] >= self.gc_grace_secs:
+                expired.append(e["dir"])
+            else:
+                keep.append(e)
+        m["gc"] = keep
+        return expired
+
     def merge(self, changes: DataFrame, batch_id: int | None = None,
               writer_id: str = "default", op_col: str = "op", *,
               source: str | None = None) -> None:
@@ -833,22 +877,18 @@ class PKTable:
         if source is not None and hi is not None:
             m.setdefault("marks", {})[source] = hi
 
-        version = m["version"] + 1
-        payload_cols = [c for c in batch_latest.columns
-                        if c not in (op_col, "__bucket")]
-
         # fold the CURRENT state of only the affected buckets (bucket
         # pruning: untouched buckets are never read or rewritten) under the
         # batch: an old row survives unless the batch carries its key; the
         # batch's non-delete rows are the new state of the keys it carries
-        old_dirs = [
-            os.path.join(self.path, m["buckets"][str(b)])
-            for b in affected
-            if str(b) in m["buckets"]
-        ]
-        old_dirs = [d for d in old_dirs if os.path.exists(d)]
+        payload_cols = [c for c in batch_latest.columns
+                        if c not in (op_col, "__bucket")]
         written = batch_latest.filter(F.col(op_col) != OP_DELETE).select(
             *payload_cols
+        )
+        touched = {str(b) for b in affected}
+        old_dirs, _ = self._live_dirs(
+            {k: d for k, d in m["buckets"].items() if k in touched}
         )
         if old_dirs:
             # the batch key set broadcasts under the merge-on-read's gate,
@@ -863,43 +903,10 @@ class PKTable:
                 written,
                 n_rows * key_bytes <= DELTA_BROADCAST_MAX_BYTES,
             ).select(*payload_cols)
-        result = written.withColumn(
-            "__bucket", _bucket_expr(self.keys, self.n_buckets)
-        )
-        # ONE partitioned write job for all affected buckets -- co-located
-        # so each bucket lands as ONE file (see _bucket_colocate: the r15
-        # point-serve audit found per-bucket file counts, not bucket
-        # counts, dominating lookup open cost)
-        result = _bucket_colocate(result, len(affected))
-        vdir = f"v{version}"
-        result.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-
-        superseded = [
-            m["buckets"][str(b)] for b in affected if str(b) in m["buckets"]
-        ]
-        # history delta BEFORE the pointer swap: bucket -> prior dir (None =
-        # bucket did not exist), enough to undo this commit on a time-travel
-        # read
-        changed = {str(b): m["buckets"].get(str(b)) for b in affected}
-        for b in affected:
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                m["buckets"][str(b)] = bdir
-            else:
-                # the merge deleted every key in this bucket: no partition
-                # dir was written, so drop the pointer rather than leave it
-                # dangling (a versioned read must only see real dirs)
-                m["buckets"].pop(str(b), None)
-        m["version"] = version
-        m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed,
-                            written.schema)
-        expired = self._queue_gc(m, superseded)
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        version = m["version"] + 1
+        dirs = self._write_version(written, version, self.n_buckets, len(affected))
+        self._commit(m, version, {str(b): dirs.get(b) for b in affected},
+                     written.schema, writer_id, batch_id)
 
     # -- delta ingest (LSM write path) --------------------------------------
 
@@ -953,37 +960,17 @@ class PKTable:
             return
 
         version = m["version"] + 1
-        vdir = f"v{version}"
         payload_cols = [c for c in batch_latest.columns
                         if c not in (op_col, "__bucket")]
-        out = (
-            batch_latest.select(
-                *payload_cols, F.col(op_col).alias("__op"), "__bucket"
-            )
-            .withColumn("__dv", F.lit(version).cast("long"))
+        # one delta file per touched bucket per commit (Paimon's
+        # one-sorted-run-per-commit); delete rows stay as markers
+        delta = batch_latest.select(
+            *payload_cols, F.col(op_col).alias("__op"),
+            F.lit(version).cast("long").alias("__dv"),
         )
-        # ONE file per touched bucket per delta commit (Paimon's
-        # one-sorted-run-per-commit); the batch is |batch|-sized, so
-        # collapsing write parallelism to the touched-bucket count costs
-        # nothing -- see _bucket_colocate, which the base-write paths
-        # share since the r15 point-serve audit.
-        out = _bucket_colocate(out, len(affected))
-        out.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-
-        changed: dict = {}
-        for b in affected:
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                key = f"{b}#d{version}"
-                m["buckets"][key] = bdir
-                changed[key] = None  # new pointer: undo = pop
-        m["version"] = version
-        m["txn"][writer_id] = batch_id
-        self._record_commit(m, version, writer_id, batch_id, changed,
-                            batch_latest.select(*payload_cols).schema)
-        self._write_manifest(m)
+        dirs = self._write_version(delta, version, self.n_buckets, len(affected))
+        self._commit(m, version, {f"{b}#d{version}": d for b, d in dirs.items()},
+                     batch_latest.select(*payload_cols).schema, writer_id, batch_id)
 
         depth: dict[str, int] = {}
         for k in m["buckets"]:
@@ -1005,70 +992,21 @@ class PKTable:
     def _compact_locked(self) -> None:
         self._fence()
         m = self._read_manifest()
-        delta_keys = sorted(k for k in m["buckets"] if "#" in k)
-        if not delta_keys:
+        touched = sorted({k.split("#", 1)[0] for k in m["buckets"] if "#" in k})
+        if not touched:
             return
-        affected = sorted({int(k.split("#", 1)[0]) for k in delta_keys})
-        base_dirs = [
-            os.path.join(self.path, m["buckets"][str(b)])
-            for b in affected if str(b) in m["buckets"]
-        ]
-        base_dirs = [d for d in base_dirs if os.path.exists(d)]
-        delta_dirs = [os.path.join(self.path, m["buckets"][k]) for k in delta_keys]
-        delta_dirs = [d for d in delta_dirs if os.path.exists(d)]
-        resolved = self._resolve_dirs(base_dirs, delta_dirs, m.get("schema"))
-
+        # the base and every delta of each bucket holding deltas
+        sel = {k: d for k, d in m["buckets"].items()
+               if k.split("#", 1)[0] in touched}
+        resolved = self._resolve_dirs(*self._live_dirs(sel), m.get("schema"))
         version = m["version"] + 1
-        vdir = f"v{version}"
-        if resolved is not None:
-            result = resolved.withColumn(
-                "__bucket", _bucket_expr(self.keys, self.n_buckets)
-            )
-            result = _bucket_colocate(result, len(affected))
-            result.write.partitionBy("__bucket").mode("overwrite").format(
-                self.data_format
-            ).save(os.path.join(self.path, vdir))
-
-        changed: dict = {}
-        superseded: list[str] = []
-        for b in affected:
-            prior = m["buckets"].get(str(b))
-            changed[str(b)] = prior
-            if prior is not None:
-                superseded.append(prior)
-            bdir = os.path.join(vdir, f"__bucket={b}")
-            if os.path.exists(os.path.join(self.path, bdir)):
-                m["buckets"][str(b)] = bdir
-            else:
-                # every key in this bucket was deleted by the deltas
-                m["buckets"].pop(str(b), None)
-        for k in delta_keys:
-            changed[k] = m["buckets"][k]
-            superseded.append(m["buckets"][k])
-            m["buckets"].pop(k)
-        m["version"] = version
-        self._record_commit(m, version, None, None, changed,
-                            resolved.schema if resolved is not None else None)
-        expired = self._queue_gc(m, superseded)
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def _queue_gc(self, m: dict, superseded: Sequence[str]) -> list[str]:
-        """Age-based GC: newly superseded dirs enter the manifest's `gc`
-        ledger; entries older than `gc_grace_secs` are returned for removal
-        (after the manifest swap, so a crash can only under-delete)."""
-        now = time.time()
-        pending = m.get("gc", []) + [{"dir": d, "ts": now} for d in superseded]
-        keep: list[dict] = []
-        expired: list[str] = []
-        for e in pending:
-            if now - e["ts"] >= self.gc_grace_secs:
-                expired.append(e["dir"])
-            else:
-                keep.append(e)
-        m["gc"] = keep
-        return expired
+        dirs = {} if resolved is None else self._write_version(
+            resolved, version, self.n_buckets, len(touched))
+        self._commit(
+            m, version,
+            {**dict.fromkeys(sel), **{b: dirs.get(int(b)) for b in touched}},
+            None if resolved is None else resolved.schema,
+        )
 
     def overwrite(self, df: DataFrame) -> None:
         """Full snapshot replace (used for seeding / batch backfills)."""
@@ -1079,27 +1017,7 @@ class PKTable:
         self._fence()
         m = self._read_manifest()
         version = m["version"] + 1
-        vdir = f"v{version}"
-        bucketed = df.withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
-        bucketed = _bucket_colocate(bucketed, self.n_buckets)
-        bucketed.write.partitionBy("__bucket").mode("overwrite").format(
-            self.data_format
-        ).save(os.path.join(self.path, vdir))
-        old = dict(m["buckets"])
-        # register only the bucket dirs the write actually produced (a seed
-        # whose rows hash into a subset of buckets writes only those
-        # partitions; dangling pointers would break versioned reads)
-        m["buckets"] = {
-            str(b): os.path.join(vdir, f"__bucket={b}")
-            for b in range(self.n_buckets)
-            if os.path.exists(os.path.join(self.path, vdir, f"__bucket={b}"))
-        }
-        m["version"] = version
-        self._record_commit(
-            m, version, None, None,
-            {b: old.get(b) for b in set(old) | set(m["buckets"])},
-            df.schema,
-        )
+        dirs = self._write_version(df, version, self.n_buckets, self.n_buckets)
         # a full replace starts a new txn epoch: keeping the per-writer
         # high-watermarks would silently no-op every merge from a stream
         # restarted with a fresh checkpoint (batch ids restart at 0), freezing
@@ -1115,13 +1033,13 @@ class PKTable:
         # with an OLD-epoch state. Strip the tags (version time travel keeps
         # working -- the undo deltas are untouched); read-at-batch then only
         # matches commits from the current epoch.
-        for e in m["history"][:-1]:
+        for e in m.get("history", []):
             e["writer"] = None
             e["batch"] = None
-        expired = self._queue_gc(m, list(old.values()))
-        self._write_manifest(m)
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+        # every current pointer (base and delta) goes; the written buckets
+        # come in
+        replace = {**dict.fromkeys(m["buckets"]), **{str(b): d for b, d in dirs.items()}}
+        self._commit(m, version, replace, df.schema)
 
     def rescale(self, n_buckets: int) -> None:
         """Offline bucket rescale -- Paimon's documented rescale-bucket
@@ -1143,8 +1061,7 @@ class PKTable:
         field), so versioned snapshot()/lookup() reads hash with the count
         in effect at that version. Superseded dirs keep their GC grace.
         Same-count rescale is a no-op (no version burned)."""
-        if n_buckets < 1:
-            raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
+        _check_n_buckets(n_buckets)
         with _commit_lock(self.path):
             self._rescale_locked(n_buckets)
 
@@ -1156,36 +1073,11 @@ class PKTable:
             return
         snap = self.snapshot()
         version = m["version"] + 1
-        vdir = f"v{version}"
-        if snap is not None:
-            # one partitioned write job: shuffle-free up to the hash
-            # partitioning the write itself needs -- every row moves at
-            # most once, straight from the pruned scan to its new bucket
-            bucketed = snap.withColumn(
-                "__bucket", _bucket_expr(self.keys, n_buckets)
-            )
-            bucketed = _bucket_colocate(bucketed, n_buckets)
-            bucketed.write.partitionBy("__bucket").mode("overwrite").format(
-                self.data_format
-            ).save(os.path.join(self.path, vdir))
-        old = dict(m["buckets"])
-        m["buckets"] = {
-            str(b): os.path.join(vdir, f"__bucket={b}")
-            for b in range(n_buckets)
-            if os.path.exists(os.path.join(self.path, vdir, f"__bucket={b}"))
-        }
-        m["version"] = version
+        # every row moves once, straight from the pruned scan to its new bucket
+        dirs = {} if snap is None else self._write_version(
+            snap, version, n_buckets, n_buckets)
+        replace = {**dict.fromkeys(m["buckets"]), **{str(b): d for b, d in dirs.items()}}
         m["n_buckets"] = n_buckets
-        self._record_commit(
-            m, version, None, None,
-            {b: old.get(b) for b in set(old) | set(m["buckets"])},
-            snap.schema if snap is not None else None,
-        )
-        # undo info for _at: reads at versions BEFORE this commit
-        # hash with the pre-rescale count
-        m["history"][-1]["nb"] = prev_nb
-        expired = self._queue_gc(m, list(old.values()))
-        self._write_manifest(m)
+        self._commit(m, version, replace, None if snap is None else snap.schema,
+                     prior_nb=prev_nb)
         self.n_buckets = n_buckets
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)

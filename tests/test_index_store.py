@@ -116,9 +116,9 @@ def test_ingest_crash_before_ledger_publish_repaired_by_replay(spark, tmp_path):
 
     # recovery: replay the SAME batch_id through the real API -- the table
     # write is an idempotent no-op, but the ledger must be repaired
-    v_before = models._current_version(t)
+    v_before = t.current_version()
     models.upsert_minhash_index(spark, ipath, day2, batch_id=2)
-    assert models._current_version(t) == v_before  # no duplicate table commit
+    assert t.current_version() == v_before  # no duplicate table commit
     assert {r["id"] for r in
             models.load_minhash_index(spark, ipath).select("id")
             .distinct().collect()} == {1, 2, 3, 11}
@@ -334,7 +334,7 @@ def test_compact_artifact_publishes_post_compaction_versions(spark, tmp_path):
     pubs = models._read_meta(ipath)["publishes"]
     assert pubs[-1].get("compaction") is True
     assert "ingest_batch" not in pubs[-1]
-    assert pubs[-1]["versions"]["bands"] == models._current_version(t)
+    assert pubs[-1]["versions"]["bands"] == t.current_version()
     # the republished meta keeps the featurization verbatim (compat guard
     # still passes on load below) and the pre-compaction publishes remain
     n_pubs = len(pubs)

@@ -120,7 +120,7 @@ def test_langid_publish_atomic_across_tables(spark, tmp_path):
     w2, h2 = tq.hashed_langid_fit(_marker_corpus(spark, n_per_lang=12))
     wt = models._table(spark, os.path.join(mpath, "weights"), ["b"], ["b"])
     wt.overwrite(w2.select("b", "w"))
-    assert models._current_version(wt) == 2  # the table really did advance
+    assert wt.current_version() == 2  # the table really did advance
 
     spark2 = spark.newSession()
     wl, hl = models.load_langid_model(spark2, mpath)

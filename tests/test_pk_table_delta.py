@@ -405,7 +405,7 @@ def test_lookup_no_rows_shapes_and_probe_type_alignment(spark, tmp_path):
 
 
 def test_resolve_join_strategy_follows_true_delta_size(spark, tmp_path, monkeypatch):
-    """r15 audit regression guard (tools/audit_delta_read.py --wide): the
+    """Wide-delta audit regression guard (SCALE.md): the
     merge-on-read anti join gates its strategy on TRUE on-disk delta bytes.
     The distinct delta-key frame is an aggregate over a pruned scan, whose
     static estimate undershoots so badly that even the AQE-final plan kept

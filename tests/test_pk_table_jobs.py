@@ -1,11 +1,15 @@
-"""Job-count guard for PK-table metadata: building a read runs no Spark job
-to learn the table's schema (the manifest carries it) and the writers learn
-their touched buckets from the job that pins the batch. A regression that
-brings back a footer-inference, bucket-collect or count job fails here."""
+"""Job-count guard for PK-table reads and writers: building a read runs no
+Spark job to learn the table's schema (the manifest carries it), the writers
+learn their touched buckets from the job that pins the batch, and every
+writer lands one data file per bucket dir through the shared bucketed
+write. A regression that brings back a footer-inference, bucket-collect or
+count job, or a write that scatters a bucket over several files, fails
+here."""
 
 from __future__ import annotations
 
 import itertools
+import os
 
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
@@ -25,10 +29,24 @@ def _jobs(spark, fn):
     return out, len(job_ids)
 
 
+def _assert_one_file_per_bucket(t, after):
+    """Every live pointer dir (base and delta) holds exactly one data file:
+    the bucket co-location point reads depend on."""
+    files = {
+        k: [f for f in os.listdir(os.path.join(t.path, d))
+            if not f.startswith(("_", "."))]
+        for k, d in t._read_manifest()["buckets"].items()
+    }
+    assert files and all(len(f) == 1 for f in files.values()), (after, files)
+
+
 def test_pk_table_reads_and_merge_job_counts(spark, tmp_path):
     t = PKTable(spark, str(tmp_path / "t"), keys=["k"], order_by=["seq"])
-    t.overwrite(spark.createDataFrame(
-        [(k, f"v{k}", 0) for k in range(200)], "k long, v string, seq long"))
+    seed = spark.createDataFrame(
+        [(k, f"v{k}", 0) for k in range(200)], "k long, v string, seq long")
+    _, n = _jobs(spark, lambda: t.overwrite(seed))
+    assert n <= 2, f"overwrite ran {n} jobs"
+    _assert_one_file_per_bucket(t, "overwrite")
 
     snap, n = _jobs(spark, t.snapshot)
     assert n == 0, f"building snapshot() ran {n} jobs"
@@ -45,6 +63,28 @@ def test_pk_table_reads_and_merge_job_counts(spark, tmp_path):
         "op string, seq long, k long, v string")
     _, n = _jobs(spark, lambda: t.merge(batch, batch_id=0))
     assert n <= 5, f"merge of a 15-row batch ran {n} jobs"
+    _assert_one_file_per_bucket(t, "merge")
     state = {r.k: r.v for r in t.snapshot().collect()}
     assert len(state) == 195
     assert state[3] == "u3" and 12 not in state and state[150] == "v150"
+
+    _, n = _jobs(spark, lambda: t.merge(batch, batch_id=0))
+    assert n == 0, f"a replayed merge ran {n} jobs"
+
+    upd = spark.createDataFrame(
+        [("U", 2, k, f"i{k}") for k in range(20, 35)] + [("D", 2, 40, None)],
+        "op string, seq long, k long, v string")
+    _, n = _jobs(spark, lambda: t.ingest(upd, batch_id=1))
+    assert n <= 4, f"ingest of a 16-row batch ran {n} jobs"
+    _assert_one_file_per_bucket(t, "ingest")
+
+    _, n = _jobs(spark, t.compact)
+    assert n <= 5, f"compact ran {n} jobs"
+    _assert_one_file_per_bucket(t, "compact")
+
+    _, n = _jobs(spark, lambda: t.rescale(8))
+    assert n <= 2, f"rescale ran {n} jobs"
+    _assert_one_file_per_bucket(t, "rescale")
+    state = {r.k: r.v for r in t.snapshot().collect()}
+    assert len(state) == 194
+    assert state[3] == "u3" and state[20] == "i20" and 40 not in state

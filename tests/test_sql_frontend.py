@@ -613,6 +613,26 @@ def test_malformed_statements_raise_value_errors(spark, tmp_path):
             eng.execute(bad)
 
 
+def test_bucket_num_below_one_is_rejected(spark, tmp_path):
+    """'bucket.num' must be >= 1: 0 used to write a manifest every reopen
+    adopted and fail the first merge on a modulo by zero, and a negative
+    count hashed keys into negative buckets. The DDL fails before any
+    manifest exists and leaves no table behind."""
+    import os
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    for n in ("0", "-2"):
+        with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+            eng.execute(
+                "CREATE TABLE t (k BIGINT, v STRING, PRIMARY KEY (k) NOT ENFORCED)"
+                f" WITH ('bucket.num'='{n}')"
+            )
+        assert "t" not in eng.tables and "t" not in eng.stores
+        assert not os.path.exists(
+            os.path.join(eng.warehouse, eng.current_catalog, eng.current_db,
+                         "t", "manifest.json"))
+
+
 def test_alias_colliding_with_table_name_rejected_by_view_parser():
     """`FROM a_staging b JOIN b c` -- the alias of the first table equals the
     second table's name; the first-token rewrite would corrupt the FROM span,
@@ -1037,7 +1057,8 @@ def test_commit_timestamps_monotonic_under_clock_stepback(spark, tmp_path):
     assert {r.k: r.v for r in t.snapshot(version=t.version_at(future)).collect()} == {1: "b"}
 
 
-def _engine_over_epochs(spark, tmp_path, epochs: int):
+def _engine_over_epochs(spark, tmp_path, epochs: int, seed: int = 7,
+                        moves_per_epoch: int = 1):
     """An Engine over the reference scripts whose sources are live dirs an
     ``expose(lo, hi)`` call publishes changelog epochs into, one file per
     source per epoch, with increasing modification times so the file
@@ -1045,7 +1066,8 @@ def _engine_over_epochs(spark, tmp_path, epochs: int):
     import os
     import shutil
 
-    full = osb.generate_workload(str(tmp_path / "full"), epochs=epochs, seed=7)
+    full = osb.generate_workload(str(tmp_path / "full"), epochs=epochs, seed=seed,
+                                 moves_per_epoch=moves_per_epoch)
     live = {t: tmp_path / "live" / t for t in full}
     for d in live.values():
         d.mkdir(parents=True)

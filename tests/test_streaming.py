@@ -179,22 +179,31 @@ def test_concurrent_two_sided_updates_converge(spark, workload, tmp_path):
 def test_heavy_exchange_workload_parity(spark, tmp_path):
     """Stress the before-image path: a workload where group-key-moving
     updates are as frequent as status transitions (5 exchanges per epoch)
-    must still hold the streaming == batch invariant -- every exchange
-    leaves a stale OLD group behind unless the refresh consumed the
-    before-image."""
-    wl = osb.generate_workload(str(tmp_path / "wl"), epochs=6, seed=99,
-                               moves_per_epoch=5)
-    eng = _workload_engine(spark, tmp_path, wl)
-    _run_scripts(eng)
+    must hold the streaming == batch invariant after EVERY epoch. An
+    exchange whose before-image the refresh dropped leaves its OLD group
+    stale only until a later micro-batch touches that group, so a check
+    after the last epoch alone can miss it. In seed 99's workload every
+    exchange's old movie also gets another ticket or movie row in the same
+    epoch, which refreshes it anyway; seed 4's has epochs where it does
+    not, so a dropped before-image fails there."""
+    epochs = 6
+    for seed in (99, 4):
+        eng, expose = _engine_over_epochs(spark, tmp_path / f"seed{seed}",
+                                          epochs=epochs, seed=seed,
+                                          moves_per_epoch=5)
+        for e in range(epochs):
+            expose(e, e + 1)
+            _run_scripts(eng)
+            assert _view_matches_oracle(eng), f"seed {seed}: view diverged after epoch {e}"
 
-    # the workload really contains moves (guard against a generator change
-    # silently defeating the point of this test)
-    log = spark.read.schema(osb.TICKETS_SCHEMA).parquet(wl["tickets"])
-    n_moves = log.filter(
-        (F.col("op") == "U") & (F.col("before.movie_id") != F.col("movie_id"))
-    ).count()
-    assert n_moves >= 15  # 5 moves/epoch from epoch 2 (candidate-limited)
-    assert _view_matches_oracle(eng)
+        # the workload really contains moves (guard against a generator
+        # change silently defeating the point of this test)
+        log = spark.read.schema(osb.TICKETS_SCHEMA).parquet(
+            eng.bound_sources["pg_osb_tickets"][0])
+        n_moves = log.filter(
+            (F.col("op") == "U") & (F.col("before.movie_id") != F.col("movie_id"))
+        ).count()
+        assert n_moves >= 15  # 5 moves/epoch from epoch 2 (candidate-limited)
 
 
 def test_revenue_view_recovers_from_checkpoint_restart(spark, tmp_path):
