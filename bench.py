@@ -24,7 +24,11 @@ from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.plans.registry import all_specs  # noqa: E402
 
 # headline set: the flagship + the heavy relational queries + the operator
-# families (dedup / text / similarity / changelog / temporal / multimodal)
+# families (dedup / text / similarity / changelog / temporal / multimodal).
+# The set is frozen: any change to it resets the bench trajectory.
+# langid_multiclass is left out: its 10-round GD loop reads 35 s at sf0.1
+# (stage-overhead-bound, SCALE.md), which would halve the signal-to-noise
+# of the whole-bench comparison.
 HEADLINE = (
     "revenue_analytics",
     "q1_pricing_summary",
@@ -33,12 +37,6 @@ HEADLINE = (
     "q7_nation_trade_flows",
     "upsert_latest_snapshot",
     "event_time_tumbling_hourly",
-    # r15 rotation: dedup_exact / simhash_neardup_pairs leave the head-50
-    # at 14 stamps (so also the bench, per benched-implies-stamped); the
-    # same families stay benched via line_dedup_text / minhash_lsh_pairs /
-    # winnow_overlap_pairs, and the two rotate-ins below were timed FIRST
-    # (--watch, BENCH_NOTES r15): bpe_token_stats 0.29 s,
-    # ngram_containment_pairs 2.75 s medians at sf0.1.
     "bpe_token_stats",
     "minhash_lsh_pairs",
     "ngram_containment_pairs",
@@ -61,28 +59,13 @@ HEADLINE = (
     "line_dedup_text",
     "range_join_price_bands",
     "multimodal_feature_extract",
-    # r13 rotation wave: the six stalest tail TPC-H queries (in for the
-    # r11-r12 double-stamped set-op/rollup family + rrf_hybrid_retrieval_ann
-    # -- every benched name carries a driver correctness row)
     "q2_min_cost_supplier",
     "q4_priority_order_exists",
     "q14_promo_revenue_share",
     "q19_disjunctive_predicates",
     "q20_part_heavy_suppliers",
     "q22_idle_rich_customers",
-    # r11 second wave: the trained discriminative quality scorer (GD rounds
-    # dominate its cost -- benched for exactly that reason)
     "logreg_quality_score",
-    # r14 rotation wave: q9/q18/q21 + logreg_holdout_eval +
-    # tokenizer_fertility_by_lang leave the head-50 (so also the bench,
-    # per the benched-implies-stamped invariant); five head names whose
-    # cost profiles matter at 100 TB join in their place -- the drift PSI
-    # monitor, the composed ANN recall audit, the day-2 PQ encode, the
-    # global curriculum rank, and the running event-stats window.
-    # (langid_multiclass was considered and rejected: its 10-round GD loop
-    # reads 35 s at sf0.1 -- stage-overhead-bound, SCALE.md r12 -- which
-    # would halve the signal-to-noise of the whole-bench comparison; its
-    # scale story lives in its x100 SCALE.md decade instead.)
     "score_drift_report",
     "ann_recall_report_clustered",
     "pq_incremental_codes",

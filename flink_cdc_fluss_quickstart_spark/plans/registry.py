@@ -1,8 +1,8 @@
 """Central registry of declared queries + their DuckDB oracle SQL.
 
-Every operator claimed in SURVEY.md section 2 gets a `QuerySpec` here; the
-driver runs the Spark builder and the oracle SQL side by side at sf0.01 and
-hash-compares results, so:
+Every operator claimed in SURVEY.md section 2 gets a `QuerySpec` here;
+tests/test_queries_oracle.py runs the Spark builder and the oracle SQL side
+by side and hash-compares results, so:
 
 - every computed column is aliased identically in both,
 - money aggregates are computed in exact DECIMAL then converted to DOUBLE
@@ -10,6 +10,9 @@ hash-compares results, so:
   division happens in DOUBLE after the exact aggregation so both engines
   perform the same float ops in the same order,
 - orderings that feed LIMIT/top-k always carry a unique tie-break key.
+
+Queries are emitted in registration order, which the imports in
+plans/__init__.py fix (relational first, so revenue_analytics leads).
 """
 
 from __future__ import annotations
@@ -46,988 +49,17 @@ def get(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
-# Emission order for queries()/oracle_sql(). External verification harnesses
-# may budget a bounded number of rows per run (50 observed), so the names that
-# prove section-2 coverage (reference CDC/changelog semantics, the betting
-# variant, event-time windows) and the LLM-training-pipeline families
-# (multimodal, pipeline routing, dedup/text, embedding similarity) come
-# first; TPC-H shape variants -- redundant coverage of join/agg shapes
-# already proven above -- take the tail. Names not listed keep registration
-# order after these. Every name expected to land OUTSIDE the budget must
-# carry a TAIL_COVERAGE entry naming the stamped sibling that keeps its
-# family proven (enforced by tests/test_registry_guard.py); all tail names
-# additionally stay hash-checked against the identical DuckDB oracle in
-# tests/test_queries_oracle.py at sf0.001.
-#
-# Round-7 rotation: the 3 queries added in round 6 that have never carried
-# a driver correctness row (bm25_retrieval, collocation_pmi,
-# ann_recall_report_clustered) rotate IN, as do 3 of the 5 operators ADDED
-# in round 7 (perplexity_buckets, semantic_dedup_prune,
-# dsir_importance_weights) so new work is driver-stamped the round it
-# lands; 6 family-redundant entries whose siblings stay stamped rotate to
-# the tail with coverage notes (winnow_fingerprints,
-# dedup_keep_representatives, domain_mix_report, changelog_apply_snapshot,
-# context_chunks, fixed_count_sample_by_source).
-#
-# Round-7 second wave: the 3 operators added later in the round
-# (span_dedup_text, nb_quality_score, doc_novelty_score) also rotate IN so
-# they are driver-stamped the round they land; out rotate three stamped
-# single-shape entries whose families stay proven by head siblings
-# (embedding_int8_quantize, pii_redact, training_shuffle_order -- the
-# latter two also leave bench.HEADLINE, which the registry guard ties to
-# the head-50).
-#
-# Round-7 third wave: 4 of the 6 operators added late in the round rotate
-# IN (textrank_keywords, countmin_heavy_hitters, kmv_distinct_tokens,
-# embedding_decontamination; c4_quality_flags and multimodal_phash_dedup
-# stay tail like their gopher/multimodal-variant precedents, each with a
-# planted-semantics unit test plus the repo-side oracle). Out rotate four
-# stamped entries whose families stay proven by head siblings:
-# repetition_signals (text_quality), dedup_components
-# (embedding_dedup_representatives runs the same pointer-jumping CC),
-# q5_region_revenue (q7's multi-join agg tree), embedding_ann_lsh
-# (ann_recall_report composes and scores the identical lsh plan); the
-# three that were benched also leave bench.HEADLINE, replaced by the
-# round's new graph/sketch operators.
-#
-# Round-7 fourth wave: embedding_pq_adc_topk rotates IN (it recomputes the
-# PQ codebooks and codes end-to-end, so its stamp covers embedding_pq_codes
-# -- the winnow_fingerprints precedent); out rotates ngram_jaccard_neardup
-# (shingle-profile family stays stamped + benched via minhash_lsh_pairs);
-# the HEADLINE slot swaps the same way.
-#
-# Round-7 fifth wave: rrf_hybrid_retrieval rotates IN -- it recomputes BOTH
-# of its arms end-to-end (the full bm25_retrieval plan and the identical
-# brute-force cosine top-k scan), so its stamp covers embedding_cosine_topk
-# (the embedding_pq_adc_topk precedent), which rotates to the tail after six
-# consecutive driver stamps (r1-r6); the HEADLINE slot swaps the same way.
-#
-# Round-8 rotation (CONSOLIDATION -- pay the r7 stamp debt): the 12
-# highest-novelty never-stamped r7 operators rotate IN
-# (leakage_safe_split_assign, rrf_hybrid_retrieval_ann, embedding_ivfpq_topk,
-# bloom_decontamination, multimodal_phash_dedup, gopher_quality_flags,
-# c4_quality_flags, contrastive_triplets, minhash_incremental_pairs,
-# zipf_fit_report, char_entropy, minhash_estimate_quality). Out rotate 12
-# long-stamped entries whose families stay proven by head siblings, each
-# via a verified end-to-end composition or strict-superset argument
-# (ledger below): dataset_split_assign + stratified_sample_by_lang
-# (leakage_safe composes the identical md5 hash-bucket predicate),
-# quality_filter_route + text_quality (Gopher/C4 recompute the row-local
-# quality-heuristic shapes with published thresholds), tfidf_top_terms
-# (bm25's posting lists recompute tf/df/idf), unigram_lm_surprisal
-# (perplexity_buckets AND curriculum_order both compose the identical
-# surprisal plan end-to-end), sequence_pack_offsets (pack_efficiency_report
-# composes it verbatim -- the winnow precedent, direction flipped),
-# embedding_dedup_representatives (leakage_safe composes the identical
-# pointer-jumping connected_components), kmeans_embeddings +
-# embedding_pq_adc_topk (embedding_ivfpq_topk recomputes the identical
-# coarse Lloyd chain, PQ codebooks, and ADC scoring end-to-end),
-# embedding_ann_ivf + ann_recall_report (ann_recall_report_clustered runs
-# the same _recall_report composition, which builds and grades _ivf_topk).
-# Round-8 second wave: the two operators ADDED in round 8 rotate IN the
-# round they land (soft_dedup_weights, quantile_sketch_report -- both
-# sf0.01-oracle-checked before rotating), plus span_dedup_incremental (the
-# oldest never-stamped tail name). Out rotate three entries stamped in r7
-# whose families stay proven by head siblings: doc_novelty_score
-# (span_dedup_text computes the same gram census + partitioning-reusing
-# resolve join machinery), kmv_distinct_tokens (countmin_heavy_hitters is
-# the same bounded mergeable map-side-combined sketch fold over the same
-# tokenization), textrank_keywords (collocation_pmi collapses the corpus
-# to the same windowed co-occurrence vocab-pair aggregate; the vocab-sized
-# PageRank iteration stays planted-tested).
-#
-# Round-8 third wave: three more never-stamped names rotate IN
-# (bpe_merge_candidates, token_budget_mix_plan, embedding_l2_topk -- all
-# sf0.01-oracle-checked before rotating). Out rotate three r7-stamped
-# entries: dsir_importance_weights (perplexity_buckets computes the same
-# broadcast vocab-frequency join + row-local integer-bit log fold),
-# nb_quality_score (bigram_lm_surprisal is the same frequency-split vocab
-# apply join + row-local log-prob fold), embedding_decontamination
-# (rrf_hybrid_retrieval's semantic arm recomputes the identical broadcast
-# brute-force dot-product scan).
-#
-# Round-9 closing wave: ALL 14 remaining never-stamped names rotate IN at
-# once (the 11 TPC-H tail queries q6/q8/q9/q10/q11/q12/q13/q15/q16/q18/q21
-# plus embedding_pca_top_component / embedding_pq_codes /
-# pq_adc_recall_report -- every one sf0.01-oracle-verified before
-# rotating), so after the round-9 driver run every query registered AT
-# ROTATION TIME has at least one driver stamp (line_dedup_text, added later
-# in round 9, waits for the r10 rotation below). Out rotate 15 r8-stamped
-# entries, each with a TAIL_COVERAGE note below; the vacuous-at-sf0.01
-# multimodal_phash_dedup (0 rows both sides, r8 finding) is replaced
-# in-head AND in bench by multimodal_phash_dedup_planted, which unions
-# in-plan formatting-variant docs so the stamped row has non-zero pair
-# cardinality (the ann_recall_report_clustered precedent).
-#
-# Round-10 rotation: line_dedup_text (the one query with zero driver
-# stamps, r9 verdict item 1) rotates IN together with the three operators
-# ADDED in round 10 (bpe_encode_tokens, line_dedup_incremental,
-# anti_join_customers_without_orders_planted -- each sf0.001-oracle-checked
-# before rotating, stamped the round they land). Out rotate four r9-stamped
-# entries whose families stay proven by head siblings: bpe_merge_candidates
-# (bpe_encode_tokens ITERATES that exact pair-census + argmax step as merge
-# round 1..N -- strict superset, the pack_efficiency precedent),
-# q10_returned_item_revenue (q3's customer-orders-lineitem revenue tree +
-# TakeOrdered; the broadcast nation leg is q7's), q12_shipping_delay_priority
-# (q1's conditional-agg family over the same orders-lineitem join q3
-# stamps), q15_top_revenue_supplier (q17's scalar-subquery-vs-aggregate
-# family). The vacuous anti_join stamp critique (r9 "what's wrong" item 1)
-# closes via the planted variant, whose TAIL note now covers the base form.
-#
-# Round-11 rotation (r10 verdict item 8 -- keep driver stamps fresh across
-# the WHOLE registry): the five stalest-stamped tail queries (the r1-r5
-# set-op/rollup/distinct-agg family) rotate IN; out rotate the three
-# 9-stamp head entries the suggester names (changelog_aware_aggregation,
-# session_windows_per_user, asof_view_before_purchase -- families stay
-# proven by upsert/tumbling/range-join siblings plus their streaming pytest
-# batteries) and two 3-stamp pipeline entries (token_budget_mix_plan,
-# soft_dedup_weights) whose shapes stay stamped via leakage_safe_split's
-# hash-routing family and minhash_lsh's banded-pair family. bench.HEADLINE
-# swaps the same five names (guard: every benched name carries a driver
-# correctness row).
-#
-# Round-11 second wave: neardup_source_overlap (ADDED late in r11, the one
-# never-stamped name) rotates IN so it is driver-stamped the round it lands
-# (the standing added-in-round-N cadence); out rotates
-# q13_customer_order_distribution (freshly stamped r9+r10, family note
-# below -- its outer-join tree stays stamped via q3 and its grouped
-# count-distribution shape via distinct_agg_parts_per_priority).
-#
-# Round-11 third wave: logreg_quality_score (ADDED r11 -- the trained
-# discriminative curation scorer completing the NB/DSIR/logreg triad)
-# rotates IN per the added-in-round-N cadence, sf0.001+sf0.01
-# oracle-checked before rotating; out rotates q8_national_market_share
-# (freshly stamped r9+r10; its two-nation join tree stays stamped via q7
-# and its profit/share rollup via q9, note below).
-#
-# Round-11 fourth wave: hashed_ngram_langid (ADDED r11 -- the
-# distributed-weights fastText langid complement, weights as a bucket-keyed
-# DataFrame) rotates IN per the same cadence, sf0.001+sf0.01 oracle-checked
-# before rotating; out rotates q11_important_part_value (freshly stamped
-# r9+r10; its scalar-subquery-threshold family stays stamped via q17 and
-# its supplier-part rollup via q16, note below).
-#
-# Round-11 fifth wave: logreg_holdout_eval (ADDED r11 -- the leakage-free
-# train/heldout evaluation of the trained scorer) rotates IN per the same
-# cadence, sf0.001+sf0.01 oracle-checked + planted-edge-swept before
-# rotating; out rotates q16_supplier_part_variety (freshly stamped r9+r10;
-# its distinct-agg rollup stays stamped via distinct_agg_parts_per_priority
-# and its NOT-IN anti side via the planted anti-join, note below).
-#
-# Round-11 sixth wave: source_curation_report (ADDED r11 -- the per-source
-# vendor scorecard composing the trained scorer + dup census + token mass)
-# rotates IN per the same cadence, sf0.001+sf0.01 oracle-checked +
-# planted-edge-swept before rotating; out rotates
-# embedding_pca_top_component (freshly stamped r9+r10, not benched; its
-# Gram-matrix power-iteration family stays stamped via embedding_pq_codes'
-# subspace-Lloyd chain and the clustered recall report, note below).
-#
-# Round-12 rotation: langid_multiclass (ADDED r12 -- the one-vs-rest
-# multiclass langid completing the fastText shape, sf0.001+sf0.01
-# oracle-checked before rotating) rotates IN per the added-in-round-N
-# cadence; out rotates pq_adc_recall_report (freshly stamped r9-r11, not
-# benched; its ADC-vs-exact recall-audit family stays stamped via
-# ann_recall_report_clustered -- the same composed-recall-report shape --
-# and its codes-only ADC arm via embedding_ivfpq_topk + embedding_pq_codes,
-# note below). The r11-rotated set-op/rollup family HOLDS in head one more
-# round to double-stamp (r11 verdict item 8) before swapping back out.
-#
-# Round-12 second wave: score_drift_report (ADDED r12 -- the PSI
-# trained-model drift monitor completing the model-ops lifecycle,
-# sf0.001+sf0.01 oracle-checked before rotating) rotates IN per the same
-# cadence; out rotates line_dedup_incremental (stamped r10+r11, not
-# benched; its census-rule core is line_dedup_text's, in-head and benched,
-# and the batch-vs-census incremental equivalence is pytest-pinned --
-# note below).
-#
-# Round-12 third wave: logreg_calibration_report (ADDED r12 -- the
-# reliability-curve + ECE model-ops step between accuracy eval and
-# deployment, sf0.001+sf0.01 oracle-checked before rotating) rotates IN
-# per the cadence; out rotates embedding_pq_codes (stamped r9-r11, not
-# benched; embedding_ivfpq_topk -- in head AND benched -- retrains the
-# identical fused codebook chain end-to-end and consumes the codes, so
-# the family stays stamped; the two notes that cited pq_codes now cite
-# the searcher).
-#
-# Round-13 rotation (the r12 verdict's scheduled swap): the set-op /
-# grouping-sets / distinct-agg family, deliberately HELD in head through
-# r12 to double-stamp (now 6-7 stamps each -- the most-stamped
-# out-candidates in stamp_history), rotates back OUT to its pre-r11 tail
-# notes (q7/q1 siblings, refreshed below), and rrf_hybrid_retrieval_ann
-# (5 stamps) rotates out with it -- its fused-RRF shape stays stamped via
-# rrf_hybrid_retrieval (in head AND benched, the identical rank-fusion
-# over the brute-force arms) and its ANN candidate arm via
-# embedding_ivfpq_topk (in head AND benched, the same coarse-probe ADC
-# searcher). IN come the SIX stalest tail names, all last driver-stamped
-# r2 (11 rounds stale, exactly the staleness ceiling the r12 verdict set):
-# q2_min_cost_supplier, q4_priority_order_exists, q14_promo_revenue_share,
-# q19_disjunctive_predicates, q20_part_heavy_suppliers,
-# q22_idle_rich_customers -- each sf0.001 + sf0.01 oracle-checked this
-# round before rotating. bench.HEADLINE swaps the same six names (guard:
-# every benched name carries a driver correctness row). langid_multiclass,
-# score_drift_report and logreg_calibration_report HOLD in head for their
-# second stamp per the added-in-round-N cadence.
-#
-# Round-13 second wave: pq_incremental_codes (ADDED r13 -- the frozen-
-# codebook day-2 encode behind models.upsert_pq_index, closing the index
-# lifecycle's one asymmetric gap; sf0.001 + sf0.01 oracle-checked before
-# rotating) rotates IN per the added-in-round-N cadence; out rotates
-# source_curation_report (fresh-stamped r11+r12, not benched; its trained-
-# scorer arm stays stamped via logreg_quality_score, its per-source dup
-# census via neardup_source_overlap, its token mass via
-# token_stats_by_lang -- all three in head, note below).
-PRIORITY: tuple[str, ...] = (
-    # reference core: revenue analytics + changelog/PK semantics
-    "revenue_analytics",
-    "upsert_latest_snapshot",
-    "betting_tickets_analytics",
-    # event streams: time windows (JSON-decode front proven by
-    # betting_tickets_analytics, same sources/betting.py envelope path)
-    # (r15 staleness wave: the seven oldest-last-stamped tail queries
-    # rotate back in -- sliding windows last stamped r4, the base anti
-    # join / bpe stats / multiprobe ANN r4, containment + temperature
-    # resample r5 -- displacing the 14-stamp pair dedup_exact /
-    # simhash_neardup_pairs and the 4-5-stamp fingerprint cohort)
-    "event_time_tumbling_hourly",
-    "event_time_sliding_hourly",
-    # benched TPC-H headliners: every headline bench number must carry a
-    # driver-side correctness row (guarded)
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q7_nation_trade_flows",
-    "q17_below_avg_quantity_revenue",
-    # planted-edge anti join (non-vacuous null-extension stamp, r10)
-    # (q9/q18/q21 out-rotated r14 at 5 stamps each; their join/agg/anti
-    # shapes stay stamped via q7/q3/q20 -- see TAIL_COVERAGE)
-    "anti_join_customers_without_orders_planted",
-    "anti_join_customers_without_orders",
-    # r13 staleness wave: the six r2-stamped tail queries rotate back in
-    # (the set-op/rollup family they replace double-stamped r11+r12 and
-    # returns to its q7/q1 tail notes)
-    "q2_min_cost_supplier",
-    "q4_priority_order_exists",
-    "q14_promo_revenue_share",
-    "q19_disjunctive_predicates",
-    "q20_part_heavy_suppliers",
-    "q22_idle_rich_customers",
-    # temporal joins + multimodal plumbing (phash: the planted-pair variant
-    # stamps with non-zero cardinality; base query covered as its subset)
-    "range_join_price_bands",
-    "multimodal_feature_extract",
-    "multimodal_phash_dedup_planted",
-    "multimodal_frame_sample",
-    # training-data pipeline routing/sampling/packing
-    "leakage_safe_split_assign",
-    "token_stats_by_lang",
-    "gopher_quality_flags",
-    "decontamination_ngrams",
-    "bloom_decontamination",
-    "pack_efficiency_report",
-    "temperature_resample_by_lang",
-    # text analysis: quality, corpus-LM scores, curriculum
-    # (r14 rotation: logreg_holdout_eval / hashed_ngram_langid /
-    # tokenizer_fertility_by_lang / neardup_source_overlap out at 3 stamps;
-    # supersets logreg_quality_score / langid_multiclass / bpe_encode_tokens
-    # / minhash_lsh_pairs hold their families -- see TAIL_COVERAGE)
-    "logreg_quality_score",
-    "bpe_token_stats",
-    "bpe_encode_tokens",
-    "bigram_lm_surprisal",
-    "countmin_heavy_hitters",
-    "curriculum_order",
-    # (r14's five fingerprint/routing primitives re-stamped r14 and return
-    # to their tail notes r15; simhash_fingerprint / events_running_stats
-    # stay one more round as the pair-join + running-window anchors)
-    "simhash_fingerprint",
-    "events_running_stats",
-    # near-dup detection + dedup end steps (dedup_exact /
-    # simhash_neardup_pairs out at 14 stamps each -- the two most-stamped
-    # heads; their groupBy-census and banded-pair shapes stay stamped via
-    # line_dedup_text / simhash_fingerprint + minhash_lsh_pairs)
-    "minhash_lsh_pairs",
-    "ngram_containment_pairs",
-    "winnow_overlap_pairs",
-    "span_dedup_text",
-    "line_dedup_text",
-    "score_drift_report",
-    # embedding similarity / ANN / quantization / hybrid retrieval
-    # (rrf_hybrid_retrieval_ann rotated out r13: fusion stays stamped via
-    # rrf_hybrid_retrieval, the ANN arm via embedding_ivfpq_topk)
-    "rrf_hybrid_retrieval",
-    "semantic_dedup_prune",
-    "embedding_ann_multiprobe",
-    "embedding_ivfpq_topk",
-    "pq_incremental_codes",
-    "ann_recall_report_clustered",
-    # trained-classifier / model-ops family (r12 additions per cadence)
-    "logreg_calibration_report",
-    "langid_multiclass",
-)
-
-# Names that must stay inside the head-50 regardless of rotation pressure:
-# the reference-core section-2 proofs plus one stamped representative per
-# LLM-pipeline family branch (guard: tests/test_registry_guard.py; the
-# stamp_history rotation suggester also refuses to propose these as
-# rotate-OUT candidates). r8: the split/quality/decontam/recall members
-# moved to their strict-superset successors.
-CRITICAL: frozenset[str] = frozenset(
-    {
-        "revenue_analytics",
-        "betting_tickets_analytics",
-        "range_join_price_bands",
-        "multimodal_feature_extract",
-        "leakage_safe_split_assign",
-        "token_stats_by_lang",
-        "gopher_quality_flags",
-        "decontamination_ngrams",
-        "bloom_decontamination",
-        "ann_recall_report_clustered",
-        "bigram_lm_surprisal",
-        "curriculum_order",
-    }
-)
-
-# Family-coverage ledger for every registered query expected to sit OUTSIDE
-# the external verifier's 50-row budget: tail name -> (stamped sibling inside
-# the budget, why the sibling keeps the family proven). The guard test
-# asserts the ledger is exhaustive and every cited sibling is in the head.
-TAIL_COVERAGE: dict[str, tuple[str, str]] = {
-    # events family
-    # (event_time_sliding_hourly rotated back INTO the head r15 -- last
-    # direct stamp r4)
-    # (events_running_stats rotated back INTO the head r14 -- last direct
-    # stamp was r4)
-    "approx_distinct_users_daily": (
-        "event_time_tumbling_hourly",
-        "same events scan + event-time grouped aggregation; the HLL sketch"
-        " itself is repo-oracle-checked and the JSON-decode front stays"
-        " stamped via betting_tickets_analytics",
-    ),
-    # relational shape variants (all subsumed by stamped join/agg/window
-    # family members; each stays hash-checked in tests/test_queries_oracle.py)
-    "window_topn_per_group": (
-        "pack_efficiency_report",
-        "partitioned row_number window + rank filter, the same physical"
-        " shape the stamped packing report's two-level rank composes",
-    ),
-    # (anti_join_customers_without_orders rotated back INTO the head r15
-    # after an r1-r4 stamp gap; its planted superset stays head-stamped)
-    "left_join_order_coverage": (
-        "q3_top_revenue_orders",
-        "same customer-orders join tree; outer null-extension repo-oracle"
-        "-checked (head-stamped r14 after its r4-r14 gap)",
-    ),
-    "semi_join_active_suppliers": (
-        "decontamination_ngrams",
-        "left-semi scoping join is the same shape decontamination's gram gate uses",
-    ),
-    # r11 rotate-outs: 9-stamp streaming/temporal trio + two 3-stamp
-    # pipeline entries; each family stays proven by a stamped head sibling
-    # plus (for the streaming pair) its dedicated pytest battery
-    "q6_forecast_revenue": (
-        "q1_pricing_summary",
-        "same single-lineitem-scan family: pushed shipdate/discount/quantity"
-        " predicates + one grouped SUM; q1 stamps the scan + agg shape"
-        " (10 driver rows) and q6 stays repo-oracle-checked; stamped r9-r10",
-    ),
-    "changelog_aware_aggregation": (
-        "upsert_latest_snapshot",
-        "same PKTable changelog merge path (S6/K1, streaming/pk_table.py);"
-        " the retraction-correct affected-keys refresh stays proven by"
-        " tests/test_streaming.py (group-key-move + checkpoint-restart"
-        " retraction tests); stamped r2-r10, 9 driver rows",
-    ),
-    "session_windows_per_user": (
-        "event_time_tumbling_hourly",
-        "same events scan + watermark + event-time grouped aggregation;"
-        " session swaps the window operator (session_window vs window) and"
-        " stays repo-oracle-checked + covered by"
-        " tests/test_streaming_windows.py; stamped r2-r10",
-    ),
-    "asof_view_before_purchase": (
-        "range_join_price_bands",
-        "same temporal-join family (plans/temporal_queries.py): both build"
-        " the event-time-bounded join the asof backward-search composes;"
-        " asof semantics stay repo-oracle-checked + planted-swept;"
-        " stamped r2-r10",
-    ),
-    "token_budget_mix_plan": (
-        "leakage_safe_split_assign",
-        "same pipeline routing family: per-domain budget allocation over"
-        " the stamped md5-hash predicate machinery + a grouped token-sum"
-        " (the token_stats_by_lang shape, also stamped); stamped r8-r10",
-    ),
-    "embedding_pca_top_component": (
-        "embedding_ivfpq_topk",
-        "same fused broadcast-Gram/centroid iteration family over the"
-        " embeddings scan (the searcher's fused subspace+coarse Lloyd"
-        " chain is the strict superset of the power-iteration shape);"
-        " recall-side quality stays stamped via"
-        " ann_recall_report_clustered; stamped r9+r10",
-    ),
-    "embedding_pq_codes": (
-        "embedding_ivfpq_topk",
-        "strict superset: the IVF-PQ searcher retrains the IDENTICAL fused"
-        " subspace-Lloyd codebook chain (include_coarse mode shares"
-        " _pq_codebooks_and_codes op-for-op) and consumes the codes"
-        " end-to-end every run; codes-only output form stamped r9-r11",
-    ),
-    "q16_supplier_part_variety": (
-        "q20_part_heavy_suppliers",
-        "same part-supplier filtered rollup tree (the sibling stamps its"
-        " nested semi/anti scoping); the grouped COUNT(DISTINCT) shape is"
-        " distinct_agg_parts_per_priority's, driver-stamped 7x through"
-        " r12, and the NOT-IN exclusion is the planted anti-join's shape;"
-        " q16 itself stamped r9+r10",
-    ),
-    "q11_important_part_value": (
-        "q17_below_avg_quantity_revenue",
-        "same scalar-subquery-vs-aggregate threshold family (q17 stamps"
-        " it); the partsupp value rollup side stays stamped via q16's"
-        " supplier-part variety aggregation; stamped r9+r10",
-    ),
-    "q8_national_market_share": (
-        "q7_nation_trade_flows",
-        "same two-nation supplier/customer join tree over the lineitem"
-        " fact (q7 stamps it); the year-grouped revenue-share rollup stays"
-        " stamped via q9's profit-by-nation-year aggregation; stamped r9+r10",
-    ),
-    "q13_customer_order_distribution": (
-        "q3_top_revenue_orders",
-        "same customer-orders join tree (outer null-extension also covered"
-        " by left_join_order_coverage's note); the second-level grouped"
-        " count-distribution shape stays stamped via"
-        " distinct_agg_parts_per_priority; stamped r9+r10",
-    ),
-    "soft_dedup_weights": (
-        "minhash_lsh_pairs",
-        "downstream of the stamped banded candidate-pair family: weights"
-        " derive from the same dedup-components CC over minhash-banded"
-        " pairs; pointer-jumping + weight semantics stay repo-oracle-checked"
-        " and planted-swept; stamped r8-r10",
-    ),
-    # multimodal: one stamped representative proves the Arrow mapInPandas
-    # batch plumbing; the variants differ only in the pandas fn body
-    # (multimodal_frame_sample rotated back INTO the head r15 -- last
-    # direct stamp r4)
-    "multimodal_quality_gate": (
-        "multimodal_feature_extract",
-        "same mapInPandas batch seam + a filter",
-    ),
-    "multimodal_resize": (
-        "multimodal_feature_extract",
-        "same mapInPandas batch seam, different per-batch transform",
-    ),
-    # sampling
-    # (temperature_resample_by_lang rotated back INTO the head r15 -- last
-    # direct stamp r5)
-    "stratified_sample_by_lang": (
-        "leakage_safe_split_assign",
-        "same row-local md5-hash-vs-rate predicate over a broadcast"
-        " per-group rate map, stamped r1-r7; the leakage-safe superset"
-        " applies the identical hash-bucket rule at component granularity",
-    ),
-    "dataset_split_assign": (
-        "leakage_safe_split_assign",
-        "the leakage-safe variant composes this exact md5 hash-bucket split"
-        " rule (same expression, applied at component granularity) -- strict"
-        " superset; plain split stamped r1-r7",
-    ),
-    "domain_mix_report": (
-        "pack_efficiency_report",
-        "single grouped agg + broadcast scalar report shape, stamped r6; sibling stamps the family",
-    ),
-    "dsir_importance_weights": (
-        "bigram_lm_surprisal",
-        "same broadcast vocab-frequency join + row-local integer-bit log"
-        " fold the stamped surprisal family computes; dsir adds only the"
-        " two-corpus ratio on the same integer-bit scale;"
-        " target-preference semantics planted-tested in"
-        " tests/test_corpus_ops.py; stamped r7",
-    ),
-    # text features whose outputs are recomputed and verified inside stamped
-    # downstream consumers (doc_fingerprint / token_count / lang_id
-    # re-stamped r14 after their r3 gap; back to tail notes r15)
-    "doc_fingerprint": (
-        "line_dedup_text",
-        "normalized-digest key; the stamped line census recomputes the"
-        " digest-groupBy family at line grain (re-stamped r14)",
-    ),
-    "token_count": (
-        "token_stats_by_lang",
-        "the stamped per-lang stats recompute token_count's exact tokenizer"
-        " expression (functions.text.token_count) over the same scan"
-        " (re-stamped r14)",
-    ),
-    "lang_id": (
-        "token_stats_by_lang",
-        "lang routing consumed and re-proven by the stamped per-lang stats"
-        " (re-stamped r14)",
-    ),
-    "dedup_exact": (
-        "line_dedup_text",
-        "the 14-stamp r15 rotate-out: same content-digest groupBy census"
-        " shape (md5 key, min-id representative, dup count), which the"
-        " stamped line census runs at line grain over the same scan",
-    ),
-    "text_quality": (
-        "gopher_quality_flags",
-        "same row-local length/punct/stopword ratio-signal family, stamped"
-        " r1-r7; Gopher recomputes those signal shapes with the published"
-        " thresholds (Rae et al. 2021) and stays stamped",
-    ),
-    "quality_filter_route": (
-        "gopher_quality_flags",
-        "same row-local quality-heuristic family, stamped r1-r7; the route"
-        " adds only a CASE label over identical signal shapes, and the"
-        " flag-to-route composition is exercised in examples/run_llm_pipeline",
-    ),
-    # (bpe_token_stats and ngram_containment_pairs rotated back INTO the
-    # head r15 -- last direct stamps r4 and r5; minhash_signatures and
-    # simhash_neardup_pairs return to tail notes after r14 stamps)
-    "minhash_signatures": (
-        "minhash_lsh_pairs",
-        "the stamped pair join recomputes and bands these signatures"
-        " (re-stamped r14)",
-    ),
-    "simhash_neardup_pairs": (
-        "simhash_fingerprint",
-        "the 14-stamp r15 rotate-out: the stamped fingerprint primitive it"
-        " bands stays head-stamped, and the banded-pair self-join +"
-        " hamming-verify shape stays stamped + benched via"
-        " minhash_lsh_pairs / winnow_overlap_pairs (same"
-        " _corpus_join_side-pinned plan family, tests/test_plans.py)",
-    ),
-    "ngram_jaccard_neardup": (
-        "minhash_lsh_pairs",
-        "same shingle-profile near-dup family, stamped r1-r6; minhash bands"
-        " the identical shingle profiles and stays stamped + benched",
-    ),
-    "embedding_decontamination": (
-        "rrf_hybrid_retrieval",
-        "the stamped fusion's semantic arm recomputes the identical"
-        " broadcast brute-force dot-product scan; decontamination folds"
-        " max-cos against the one-row broadcast benchmark instead of"
-        " taking top-k; flag/argmax semantics planted-tested in"
-        " tests/test_corpus_ops.py; stamped r7",
-    ),
-    "embedding_cosine_topk": (
-        "rrf_hybrid_retrieval",
-        "stamped r1-r6; the fusion's semantic arm recomputes the identical"
-        " brute-force cosine top-k (same similarity.cosine_topk plan, same"
-        " fixed-point dot product), so its stamp covers the family",
-    ),
-    "embedding_pq_adc_topk": (
-        "embedding_ivfpq_topk",
-        "same codebooks, broadcast distance tables, and ADC scoring,"
-        " recomputed end-to-end by the stamped searcher (which adds only the"
-        " coarse-cell candidate pruning) -- strict superset; flat ADC"
-        " stamped r7",
-    ),
-    "pq_adc_recall_report": (
-        "ann_recall_report_clustered",
-        "the same composed recall-audit shape (candidate plan + exact-cosine"
-        " ground truth -> per-query hit rollup), stamped fresh r9-r11; its"
-        " codes-only ADC scoring arm AND codebook fit stay stamped via"
-        " embedding_ivfpq_topk (the same fused chain end-to-end)",
-    ),
-    "kmeans_embeddings": (
-        "embedding_ivfpq_topk",
-        "the stamped searcher's coarse quantizer recomputes the identical"
-        " KMEANS_K/KMEANS_ITERS Lloyd chain end-to-end (same broadcast"
-        " K x DIM centroid aggregate per round); Lloyd stamped r2-r7",
-    ),
-    "winnow_fingerprints": (
-        "winnow_overlap_pairs",
-        "the stamped overlap-pairs query recomputes these winnowed fingerprints end-to-end",
-    ),
-    "doc_novelty_score": (
-        "span_dedup_text",
-        "the stamped span dedup computes the same (doc, pos, gram-hash)"
-        " census groupBy + partitioning-reusing resolve join machinery that"
-        " novelty folds into its per-doc ratio; novelty's planted semantics"
-        " and measured-volume scale row stay tested; stamped r7",
-    ),
-    "kmv_distinct_tokens": (
-        "countmin_heavy_hitters",
-        "same bounded mergeable sketch-state family over the same"
-        " tokenization (map-side-combined fold into fixed-size state:"
-        " 64-slot KMV vs the 4x512 CM grid); never-undercount/accuracy"
-        " planted tests and streaming==batch equivalence stay in"
-        " tests/test_streaming_dedup.py; stamped r7",
-    ),
-    "textrank_keywords": (
-        "bigram_lm_surprisal",
-        "both collapse the corpus to the same adjacent/windowed token-pair"
-        " vocab aggregate (corpus-size-independent graph); the vocab-sized"
-        " PageRank iteration's star/ring/bridge semantics stay"
-        " planted-tested in tests/test_corpus_ops.py; stamped r7",
-    ),
-    "nb_quality_score": (
-        "bigram_lm_surprisal",
-        "same frequency-split vocab apply join + row-local quarter-bit"
-        " log-prob fold as the stamped surprisal family; NB adds only the"
-        " one-pass class-conditional fit; planted-signal accuracy"
-        " unit-tested in tests/test_corpus_ops.py; stamped r7",
-    ),
-    # reference-core family variants rotated out in r7 (siblings stay stamped)
-    "changelog_apply_snapshot": (
-        "upsert_latest_snapshot",
-        "same latest-by-key changelog fold, stamped r2-r6; the full I/U/D"
-        " delete-drop semantics are re-proven by changelog_aware_aggregation (head)",
-    ),
-    "context_chunks": (
-        "pack_efficiency_report",
-        "same token-window offset arithmetic family (positions explode,"
-        " digest-bounded rows); the stamped report composes the identical"
-        " sequence_pack_offsets prefix-sum plan end-to-end",
-    ),
-    "sequence_pack_offsets": (
-        "pack_efficiency_report",
-        "the stamped report composes this exact plan verbatim (calls"
-        " sequence_pack_offsets then adds one single-row global aggregate)"
-        " -- the winnow_fingerprints precedent; offsets stamped r5-r7",
-    ),
-    "fixed_count_sample_by_source": (
-        "pack_efficiency_report",
-        "same two-level hash-sub-bucket exact-rank machinery (stamped r6;"
-        " the packing report composes the identical rank + prefix-sum plan)",
-    ),
-    # single-shape entries rotated out in the r7 second wave (each stamped
-    # r6 or earlier; the cited head sibling keeps the physical shape proven)
-    "pii_redact": (
-        "gopher_quality_flags",
-        "same row-local regexp-chain family (zero shuffle), stamped r6; the"
-        " sibling stamps the pure-map regex text-transform shape",
-    ),
-    "training_shuffle_order": (
-        "curriculum_order",
-        "same global deterministic ordering family: seeded-hash rank vs the"
-        " sibling's range-partitioned score rank -- the sibling's machinery"
-        " is the strict superset (skew-proof global row_number)",
-    ),
-    "embedding_int8_quantize": (
-        "embedding_ivfpq_topk",
-        "same corpus-scalar-aggregate + broadcast + row-local vector-math"
-        " shape; the stamped searcher recomputes that pattern per Lloyd"
-        " iteration of its coarse quantizer",
-    ),
-    # embeddings
-    "embedding_cosine_neardup": (
-        "semantic_dedup_prune",
-        "same bucketed cosine-pair-join machinery (cell/bucket-scoped"
-        " pairs, never corpus^2); LSH-bucketed variant stamped r1-r6 and"
-        " recomputed inside embedding_dedup_representatives (repo-oracle)",
-    ),
-    "embedding_label_centroids": (
-        "ann_recall_report_clustered",
-        "the stamped clustered recall report composes the IVF plan whose"
-        " coarse quantizer recomputes this per-label centroid aggregate",
-    ),
-    # (embedding_ann_multiprobe rotated back INTO the head r15 -- last
-    # direct stamp r4)
-    "dedup_keep_representatives": (
-        "leakage_safe_split_assign",
-        "the stamped split composes the identical pointer-jumping"
-        " connected components on the same minhash text pair graph; the"
-        " min-per-component representative pick is one grouped-min agg",
-    ),
-    # rotated out in the r7 third wave (families stay proven by head siblings)
-    "repetition_signals": (
-        "gopher_quality_flags",
-        "same row-local array/ngram-ratio quality-signal family, stamped"
-        " r1-r6; Gopher's published rules recompute repetition-ratio"
-        " signals of the identical shape",
-    ),
-    "dedup_components": (
-        "leakage_safe_split_assign",
-        "the stamped split runs the identical pointer-jumping connected"
-        " components (functions/dedup.connected_components) on the same"
-        " minhash text pair graph; plain CC stamped r2-r6",
-    ),
-    "q5_region_revenue": (
-        "q7_nation_trade_flows",
-        "same multi-dim broadcast join tree + grouped revenue agg, stamped"
-        " r1-r6; q7 is the strict superset (two nation roles + year split)",
-    ),
-    "embedding_ann_lsh": (
-        "ann_recall_report_clustered",
-        "the stamped clustered recall report composes and scores this exact"
-        " lsh plan (and multiprobe/ivf); lsh stamped r2-r6",
-    ),
-    # rotated out in the r8 consolidation (families stay proven by the
-    # verified end-to-end compositions of their head siblings)
-    "unigram_lm_surprisal": (
-        "curriculum_order",
-        "composes the identical unigram-LM surprisal plan end-to-end"
-        " (shared CTE chain, integer-bit scores) then adds the"
-        " range-partitioned global rank; surprisal stamped r3-r7",
-    ),
-    "tfidf_top_terms": (
-        "rrf_hybrid_retrieval",
-        "the stamped fusion's lexical arm recomputes bm25's df-capped"
-        " posting lists, whose tf/df/idf statistics are tfidf's over the"
-        " same tokenization; same frequency-split join + top-k window"
-        " family; tfidf stamped r3-r7",
-    ),
-    "embedding_dedup_representatives": (
-        "leakage_safe_split_assign",
-        "the stamped split composes the identical pointer-jumping"
-        " connected_components + min-per-component fold; the vector-side"
-        " LSH pair generation is the semantic_dedup_prune bucketed"
-        " cosine-pair family (also stamped); representatives stamped r2-r7",
-    ),
-    "embedding_ann_ivf": (
-        "ann_recall_report_clustered",
-        "the stamped clustered recall report builds and grades the"
-        " identical _ivf_topk plan (same coarse centroids, same cell-pruned"
-        " candidate join); ivf stamped r2-r7",
-    ),
-    "ann_recall_report": (
-        "ann_recall_report_clustered",
-        "identical composed report machinery (_recall_report: brute-force"
-        " ground truth + lsh/multiprobe/ivf overlap joins); the clustered"
-        " variant is the superset fixture with asserted recall floors;"
-        " base report stamped r5-r7",
-    ),
-    # TPC-H tail: join/agg shapes proven by the stamped headliners
-    # r13: the set-op/rollup family returns to tail after double-stamping
-    # r11+r12 (6-7 stamps each); notes restored from their pre-r11 form --
-    # the cited siblings are unchanged and still in head
-    "setop_multi_status_customers": (
-        "q7_nation_trade_flows",
-        "UNION/INTERSECT compile to the stamped join+agg primitives;"
-        " driver-stamped r1-r5+r11-r12, repo-oracle-checked",
-    ),
-    "setop_except_large_orders": (
-        "q7_nation_trade_flows",
-        "EXCEPT compiles to the stamped anti-join+agg primitives;"
-        " driver-stamped r1-r4+r11-r12, repo-oracle-checked",
-    ),
-    "rollup_nation_segment_revenue": (
-        "q7_nation_trade_flows",
-        "grouping-set expansion over the stamped multi-join agg tree;"
-        " driver-stamped r1-r5+r11-r12",
-    ),
-    "cube_status_priority_revenue": (
-        "q1_pricing_summary",
-        "CUBE over the stamped lineitem aggregation shape;"
-        " driver-stamped r1-r4+r11-r12",
-    ),
-    "distinct_agg_parts_per_priority": (
-        "q1_pricing_summary",
-        "distinct-agg rewrite of the stamped lineitem aggregation;"
-        " driver-stamped r1-r5+r11-r12",
-    ),
-    # r13 second wave: out for pq_incremental_codes (added-in-round cadence)
-    "source_curation_report": (
-        "logreg_quality_score",
-        "the scorecard COMPOSES three stamped arms verbatim: the"
-        " trained-scorer quality mass (the sibling, benched), the"
-        " per-source near-dup census (neardup_source_overlap, stamped"
-        " r11-r13, itself covered by minhash_lsh_pairs' banded-pair"
-        " machinery), and the token mass (token_stats_by_lang, head);"
-        " its own |sources|-row rollup adds no new physical shape;"
-        " fresh-stamped r11-r13",
-    ),
-    "rrf_hybrid_retrieval_ann": (
-        "rrf_hybrid_retrieval",
-        "identical reciprocal-rank fusion + per-query top-k over the same"
-        " two arms (stamped r8-r12); the ANN candidate generation it swaps"
-        " in is embedding_ivfpq_topk's coarse-probe ADC searcher, itself"
-        " in head AND benched",
-    ),
-    # rotated out in the r9 closing wave (every name below carries an r8 or
-    # earlier driver stamp; the cited head sibling keeps its family proven)
-    "events_json_props_stats": (
-        "betting_tickets_analytics",
-        "same JSON stream-envelope decode path (sources/betting.py builds"
-        " both the Kinesis events and betting-ticket envelopes; same typed"
-        " from_json casts); props-map explode stays repo-oracle-checked;"
-        " stamped r8",
-    ),
-    "length_bucket_batches": (
-        "pack_efficiency_report",
-        "same two-level rank batching machinery (hash-sub-bucket row_number"
-        " composed into global batch ids); the stamped packing report runs"
-        " the identical prefix-sum + rank plan end-to-end; stamped r8",
-    ),
-    "zipf_fit_report": (
-        "token_stats_by_lang",
-        "same tokenization census scan; the rank-frequency log-log"
-        " regression is a vocab-sized aggregate on top; stamped r7-r8",
-    ),
-    "perplexity_buckets": (
-        "bigram_lm_surprisal",
-        "same broadcast vocab-frequency join + row-local integer-bit log"
-        " fold; buckets add one lang-keyed tercile window; stamped r8",
-    ),
-    "collocation_pmi": (
-        "bigram_lm_surprisal",
-        "same adjacent-token pair census + frequency-split vocab joins"
-        " (corpus collapses to a vocab-pair aggregate); PMI swaps only the"
-        " row-local score formula; stamped r8",
-    ),
-    "bm25_retrieval": (
-        "rrf_hybrid_retrieval",
-        "the stamped fusion's lexical arm recomputes bm25's df-capped"
-        " posting lists, doc-length stats, and scoring end-to-end (strict"
-        " superset, the winnow precedent); stamped r8",
-    ),
-    "minhash_incremental_pairs": (
-        "minhash_lsh_pairs",
-        "same signature + banding plan; the incremental form probes the"
-        " banded index at |batch| x bucket cost instead of corpus-wide;"
-        " stamped r8",
-    ),
-    "minhash_estimate_quality": (
-        "minhash_lsh_pairs",
-        "grades the identical signature/band machinery against exact"
-        " jaccard over the same shingle profiles; stamped r8",
-    ),
-    "span_dedup_incremental": (
-        "span_dedup_text",
-        "same gram census + partitioning-reusing resolve join, split"
-        " batch-vs-index; stamped r8",
-    ),
-    "line_dedup_incremental": (
-        "line_dedup_text",
-        "same C4-rule line census + keyed resolve join, split"
-        " batch-vs-index (the span_dedup_incremental shape); the"
-        " batch-result == census-rule equivalence is pytest-pinned"
-        " (tests/test_corpus_ops.py); stamped r10+r11",
-    ),
-    # rotated out in the r10 wave (families stay proven by head siblings)
-    "bpe_merge_candidates": (
-        "bpe_encode_tokens",
-        "strict superset: the encode LEARNS its merge table by iterating"
-        " the identical vocab pair-census + count-then-pair argmax step"
-        " (merge round 1 IS bpe_merge_candidates' top-1) before applying"
-        " it corpus-wide; candidates stamped r8-r9",
-    ),
-    "q10_returned_item_revenue": (
-        "q3_top_revenue_orders",
-        "same customer-orders-lineitem revenue agg + TakeOrderedAndProject"
-        " top-k tree; q10 adds only the broadcast nation leg q7 stamps;"
-        " stamped r9",
-    ),
-    "q12_shipping_delay_priority": (
-        "q1_pricing_summary",
-        "conditional-agg (CASE-sum) family over the orders-lineitem join"
-        " q3 stamps; stamped r9",
-    ),
-    "q15_top_revenue_supplier": (
-        "q17_below_avg_quantity_revenue",
-        "same scalar-subquery-vs-aggregate family (max-over-view vs"
-        " per-key-avg correlated filter); stamped r9",
-    ),
-    "contrastive_triplets": (
-        "curriculum_order",
-        "same deterministic window-rank family: per-bucket row_number +"
-        " md5-ring negative pick vs the sibling's range-partitioned global"
-        " rank (the strict-superset skew-proof machinery); stamped r8",
-    ),
-    "embedding_l2_topk": (
-        "rrf_hybrid_retrieval",
-        "the stamped fusion's semantic arm recomputes the identical"
-        " broadcast brute-force distance top-k scan; L2 swaps the row-local"
-        " metric fold; stamped r8",
-    ),
-    "c4_quality_flags": (
-        "gopher_quality_flags",
-        "same row-local published-rule quality-flag family over the same"
-        " documents scan (Raffel et al. rules vs Rae et al. rules);"
-        " stamped r8",
-    ),
-    "char_entropy": (
-        "gopher_quality_flags",
-        "same row-local text-statistics family (char-frequency entropy"
-        " fold, zero shuffle); stamped r8",
-    ),
-    "quantile_sketch_report": (
-        "countmin_heavy_hitters",
-        "same fixed-size mergeable sketch state, map-side-combined fold"
-        " over the same tokenization; streaming==batch equivalence stays in"
-        " tests/test_streaming_dedup.py; stamped r8",
-    ),
-    "multimodal_phash_dedup": (
-        "multimodal_phash_dedup_planted",
-        "strict subset: the planted variant runs the identical"
-        " perceptual-hash + band-LSH + Hamming-verify plan over base UNION"
-        " formatting-variant docs, so its stamp is non-vacuous (the base"
-        " corpus has zero near-dup pairs at sf0.01 -- r8 judge finding);"
-        " base form stamped r8",
-    ),
-    # r14 rotate-outs: the 5-stamp TPC-H trio (q9/q18/q21, in since r9)
-    # and the 3-stamp r11 text/model wave; each family stays proven by a
-    # stamped head superset or sibling
-    "q9_profit_by_nation_year": (
-        "q7_nation_trade_flows",
-        "same lineitem fact + broadcast-dim multi-join tree with a"
-        " year-grouped revenue aggregate (q7 stamps it, 11 driver rows);"
-        " q9's partsupp cost leg is the part-supplier join shape q20"
-        " stamps; stamped r9-r13, 5 driver rows",
-    ),
-    "q18_large_volume_orders": (
-        "q3_top_revenue_orders",
-        "same customer-orders-lineitem revenue tree +"
-        " TakeOrderedAndProject top-k (q3 stamps it, 12 driver rows); the"
-        " sum-quantity HAVING gate is a grouped-agg threshold of the shape"
-        " q17's per-key aggregate filter stamps; stamped r9-r13",
-    ),
-    "q21_sole_late_supplier": (
-        "q20_part_heavy_suppliers",
-        "same nested semi/anti-join scoping family over supplier-lineitem"
-        " (q20 stamps the nested semi+anti tree; null-extension anti"
-        " semantics also stamped via the planted anti join); stamped"
-        " r9-r13",
-    ),
-    "logreg_holdout_eval": (
-        "logreg_quality_score",
-        "the eval runs the IDENTICAL GD fit chain the stamped scorer runs"
-        " (same plans/text_queries fit machinery, benched) restricted to"
-        " the train bucket, and its split rollup is the stamped"
-        " leakage_safe_split_assign hash-bucket rule; stamped r11-r13",
-    ),
-    "hashed_ngram_langid": (
-        "langid_multiclass",
-        "strict superset: the stamped multiclass one-vs-rest fit iterates"
-        " the identical hashed-gram featurization + bucket-keyed"
-        " distributed weight frame (the binary form is the single-class"
-        " arm); stamped r11-r13",
-    ),
-    "tokenizer_fertility_by_lang": (
-        "bpe_encode_tokens",
-        "the fertility report composes the stamped encoder's merge-table"
-        " apply end-to-end and folds one lang-keyed ratio aggregate (the"
-        " token_stats_by_lang shape, also stamped); stamped r11-r13",
-    ),
-    "neardup_source_overlap": (
-        "minhash_lsh_pairs",
-        "same banded candidate-pair machinery (the stamped pair join is"
-        " recomputed verbatim); the overlap census adds one source-keyed"
-        " groupBy over that pair frame; stamped r11-r13",
-    ),
-}
-
-
-def _ordered_names() -> list[str]:
-    pri = [n for n in PRIORITY if n in _REGISTRY]
-    seen = set(pri)
-    return pri + [n for n in _REGISTRY if n not in seen]
-
-
 def all_specs() -> dict[str, QuerySpec]:
-    return {name: _REGISTRY[name] for name in _ordered_names()}
+    return dict(_REGISTRY)
 
 
 def all_queries() -> dict[str, Builder]:
-    return {name: _REGISTRY[name].builder for name in _ordered_names()}
+    return {name: spec.builder for name, spec in _REGISTRY.items()}
 
 
 def all_oracle_sql() -> dict[str, str]:
     return {
-        name: _REGISTRY[name].oracle
-        for name in _ordered_names()
-        if _REGISTRY[name].oracle is not None
+        name: spec.oracle
+        for name, spec in _REGISTRY.items()
+        if spec.oracle is not None
     }

@@ -4846,25 +4846,34 @@ def _corpus_side(df: DataFrame) -> DataFrame:
     return df.hint("merge")
 
 
-def _hlr_kept_feats(d: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
-    """Shared featurization behind the binary AND multiclass langid fits:
-    gram explode -> distinct-df census -> broadcast the bounded hot head
-    into a left-anti filter -> count-normalized (doc, bucket, f) rollup.
-    Returns (feats, hot); callers cache feats (it is the only corpus-sized
-    state any GD loop touches)."""
-    cap = max(n // HLR_DF_CAP_DENOM, 1)
-    grams = hashed_gram_frame(d)
-    census = grams.distinct().groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
-    hot = census.filter(F.col("df") > cap).select("gram")
-    kept = grams.join(F.broadcast(hot), "gram", "left_anti")
+def _hlr_kept_feats_from_hot(d: DataFrame, hot: DataFrame) -> DataFrame:
+    """The hashed-langid featurization given a hot list: broadcast it into
+    a left-anti filter over the gram explode -> count-normalized (doc,
+    bucket, f) rollup. Serving passes the TRAINED model's hot list, never
+    one re-derived from serving traffic (a reloaded model must featurize
+    exactly as the fit did)."""
+    kept = hashed_gram_frame(d).join(F.broadcast(hot), "gram", "left_anti")
     fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-    feats = fb.join(ngd, "doc_id").select(
+    return fb.join(ngd, "doc_id").select(
         "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
     )
-    return feats, hot
+
+
+def _hlr_kept_feats(d: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
+    """Shared featurization behind the binary AND multiclass langid fits:
+    gram explode -> distinct-df census -> the bounded hot head (df above
+    n / HLR_DF_CAP_DENOM) -> _hlr_kept_feats_from_hot. Returns (feats,
+    hot); callers cache feats (it is the only corpus-sized state any GD
+    loop touches)."""
+    cap = max(n // HLR_DF_CAP_DENOM, 1)
+    census = (
+        hashed_gram_frame(d).distinct().groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
+    )
+    hot = census.filter(F.col("df") > cap).select("gram")
+    return _hlr_kept_feats_from_hot(d, hot), hot
 
 
 def _hlr_fit_full(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -4955,15 +4964,7 @@ def hashed_langid_score(
     micro-batch == batch of the union; tests/test_streaming_dedup.py)."""
     scale = float(LOGREG_SCALE)
     if feats is None:
-        grams = hashed_gram_frame(d)
-        kept = grams.join(F.broadcast(hot), "gram", "left_anti")
-        fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-        feats = fb.join(ngd, "doc_id").select(
-            "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
-        )
+        feats = _hlr_kept_feats_from_hot(d, hot)
     zf = (
         feats.join(_hlr_wside(weights, HLR_BUCKETS), "b")
         .select("doc_id", F.floor(F.lit(scale) * (F.col("w") * F.col("f"))).alias("t"))
@@ -5199,7 +5200,7 @@ def hashed_langid_multiclass_score(
     classes = weights.select("cls").distinct()
     k = classes.count()
     if feats is None:
-        feats, _hot = _hlr_kept_feats_from_hot(d, hot)
+        feats = _hlr_kept_feats_from_hot(d, hot)
     zf = (
         feats.join(_hlr_wside(weights, HLR_BUCKETS * k), "b")
         .select(
@@ -5222,22 +5223,6 @@ def hashed_langid_multiclass_score(
         .filter(F.col("rn") == 1)
         .select("doc_id", F.col("cls").alias("predicted"), F.col("zm").alias("zm_micro"))
     )
-
-
-def _hlr_kept_feats_from_hot(d: DataFrame, hot: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Serving-side featurization: same rollup as _hlr_kept_feats but the
-    hot list is the TRAINED model's, not re-derived from serving traffic
-    (a reloaded model must featurize exactly as the fit did)."""
-    grams = hashed_gram_frame(d)
-    kept = grams.join(F.broadcast(hot), "gram", "left_anti")
-    fb = kept.groupBy("doc_id", _hlr_bucket(F.col("gram")).alias("b")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    ngd = fb.groupBy("doc_id").agg(F.sum("cnt").alias("ng"))
-    feats = fb.join(ngd, "doc_id").select(
-        "doc_id", "b", (F.col("cnt").cast("double") / F.col("ng")).alias("f")
-    )
-    return feats, hot
 
 
 def hashed_langid_multiclass_frame(d: DataFrame) -> DataFrame:

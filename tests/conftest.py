@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -11,6 +12,22 @@ from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+_JOB_GROUPS = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """(fn's result, the number of Spark jobs fn ran), counted by a job
+    group unique to this call."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, n_jobs
 
 
 @pytest.fixture(scope="session")

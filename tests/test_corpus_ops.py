@@ -9,6 +9,7 @@ registered query calls (span_dedup_frame / nb_score_frame / novelty_frame)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from conftest import count_jobs
 
 from flink_cdc_fluss_quickstart_spark.plans import text_queries as tq
 
@@ -1148,14 +1149,7 @@ def test_logreg_fit_is_one_job_per_gd_round(spark, sf_dir):
 
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     d = spread(load_table(spark, sf_dir, "documents"))
-    sc = spark.sparkContext
-    group = "logreg-fit-job-guard"
-    sc.setJobGroup(group, group)
-    try:
-        tq._logreg_fit_full(d)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, n_jobs = count_jobs(spark, lambda: tq._logreg_fit_full(d))
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev
     assert n_jobs <= tq.LOGREG_ROUNDS + 4, (
         f"logreg fit ran {n_jobs} jobs for {tq.LOGREG_ROUNDS} rounds -- "
@@ -1186,14 +1180,8 @@ def test_bpe_learn_loop_is_one_job_per_round(spark):
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     n_merges = 4
-    sc = spark.sparkContext
-    group = "bpe-loop-job-guard"
-    sc.setJobGroup(group, group)
-    try:
-        _, merges = tq.bpe_learn_merges(vocab, n_merges)
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    (_, merges), n_jobs = count_jobs(
+        spark, lambda: tq.bpe_learn_merges(vocab, n_merges))
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert len(merges) == n_merges

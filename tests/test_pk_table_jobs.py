@@ -8,25 +8,10 @@ here."""
 
 from __future__ import annotations
 
-import itertools
 import os
 
+from conftest import count_jobs
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
-
-_GROUPS = itertools.count()
-
-
-def _jobs(spark, fn):
-    """(fn's result, the number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"pk-table-jobs-{next(_GROUPS)}"
-    sc.setJobGroup(group, "PK-table job-count guard")
-    try:
-        out = fn()
-        job_ids = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(job_ids)
 
 
 def _assert_one_file_per_bucket(t, after):
@@ -44,16 +29,16 @@ def test_pk_table_reads_and_merge_job_counts(spark, tmp_path):
     t = PKTable(spark, str(tmp_path / "t"), keys=["k"], order_by=["seq"])
     seed = spark.createDataFrame(
         [(k, f"v{k}", 0) for k in range(200)], "k long, v string, seq long")
-    _, n = _jobs(spark, lambda: t.overwrite(seed))
+    _, n = count_jobs(spark, lambda: t.overwrite(seed))
     assert n <= 2, f"overwrite ran {n} jobs"
     _assert_one_file_per_bucket(t, "overwrite")
 
-    snap, n = _jobs(spark, t.snapshot)
+    snap, n = count_jobs(spark, t.snapshot)
     assert n == 0, f"building snapshot() ran {n} jobs"
     assert snap.count() == 200
 
     probe = spark.createDataFrame([(1,), (2,), (2,), (500,)], "k long")
-    hit, n = _jobs(spark, lambda: t.lookup(probe))
+    hit, n = count_jobs(spark, lambda: t.lookup(probe))
     assert n == 1, f"building lookup() ran {n} jobs (the probe pin only)"
     assert sorted((r.k, r.v) for r in hit.collect()) == [(1, "v1"), (2, "v2")]
 
@@ -61,28 +46,28 @@ def test_pk_table_reads_and_merge_job_counts(spark, tmp_path):
         [("U", 1, k, f"u{k}") for k in range(10)]
         + [("D", 1, k, None) for k in range(10, 15)],
         "op string, seq long, k long, v string")
-    _, n = _jobs(spark, lambda: t.merge(batch, batch_id=0))
+    _, n = count_jobs(spark, lambda: t.merge(batch, batch_id=0))
     assert n <= 5, f"merge of a 15-row batch ran {n} jobs"
     _assert_one_file_per_bucket(t, "merge")
     state = {r.k: r.v for r in t.snapshot().collect()}
     assert len(state) == 195
     assert state[3] == "u3" and 12 not in state and state[150] == "v150"
 
-    _, n = _jobs(spark, lambda: t.merge(batch, batch_id=0))
+    _, n = count_jobs(spark, lambda: t.merge(batch, batch_id=0))
     assert n == 0, f"a replayed merge ran {n} jobs"
 
     upd = spark.createDataFrame(
         [("U", 2, k, f"i{k}") for k in range(20, 35)] + [("D", 2, 40, None)],
         "op string, seq long, k long, v string")
-    _, n = _jobs(spark, lambda: t.ingest(upd, batch_id=1))
+    _, n = count_jobs(spark, lambda: t.ingest(upd, batch_id=1))
     assert n <= 4, f"ingest of a 16-row batch ran {n} jobs"
     _assert_one_file_per_bucket(t, "ingest")
 
-    _, n = _jobs(spark, t.compact)
+    _, n = count_jobs(spark, t.compact)
     assert n <= 5, f"compact ran {n} jobs"
     _assert_one_file_per_bucket(t, "compact")
 
-    _, n = _jobs(spark, lambda: t.rescale(8))
+    _, n = count_jobs(spark, lambda: t.rescale(8))
     assert n <= 2, f"rescale ran {n} jobs"
     _assert_one_file_per_bucket(t, "rescale")
     state = {r.k: r.v for r in t.snapshot().collect()}

@@ -6,29 +6,15 @@ replication stream applied -- commits only its txn marker."""
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 
 import pytest
 
+from conftest import count_jobs
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
 SCHEMA = "op string, seq long, k long, v string"
-_GROUPS = itertools.count()
-
-
-def _jobs(spark, fn):
-    """(fn's result, the number of Spark jobs fn ran)."""
-    sc = spark.sparkContext
-    group = f"pk-table-marks-{next(_GROUPS)}"
-    sc.setJobGroup(group, "PK-table sequence-mark job count")
-    try:
-        out = fn()
-        job_ids = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(job_ids)
 
 
 def _state(t: PKTable) -> dict:
@@ -42,9 +28,9 @@ def test_second_writer_replay_of_applied_batch_runs_no_write_job(spark, tmp_path
     m = t._read_manifest()
     assert m["marks"] == {"src": 2}
 
-    _, pin_jobs = _jobs(spark, lambda: t._pin_batch(batch))
+    _, pin_jobs = count_jobs(spark, lambda: t._pin_batch(batch))
     dirs = sorted(os.listdir(t.path))
-    _, n = _jobs(spark, lambda: t.merge(batch, batch_id=0, writer_id="view-sync",
+    _, n = count_jobs(spark, lambda: t.merge(batch, batch_id=0, writer_id="view-sync",
                                         source="src"))
     assert n == pin_jobs, f"a replayed batch ran {n} jobs, pinning it runs {pin_jobs}"
     assert sorted(os.listdir(t.path)) == dirs  # no data directory written

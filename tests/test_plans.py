@@ -8,6 +8,7 @@ over at 100 TB, so plan regressions must fail CI.
 from __future__ import annotations
 
 import pytest
+from conftest import count_jobs
 
 from flink_cdc_fluss_quickstart_spark.plans.registry import all_specs
 
@@ -181,16 +182,9 @@ def test_plan_build_runs_no_compute_jobs(spark, name, monkeypatch):
     for mod in (tables_mod, tq, sq):
         monkeypatch.setattr(mod, "load_table", counting)
 
-    sc = spark.sparkContext
-    group = f"build-probe-{name}"
-    sc.setJobGroup(group, "plan build must run only schema reads")
-    try:
-        _plans(spark, name)
-        job_ids = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(job_ids) <= calls["n"], (
-        f"plan build for {name} ran {len(job_ids)} jobs for {calls['n']} table"
+    _, n_jobs = count_jobs(spark, lambda: _plans(spark, name))
+    assert n_jobs <= calls["n"], (
+        f"plan build for {name} ran {n_jobs} jobs for {calls['n']} table"
         f" loads -- an eager action at build time"
     )
 

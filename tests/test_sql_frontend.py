@@ -7,6 +7,7 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from conftest import count_jobs
 
 from flink_cdc_fluss_quickstart_spark.sources import osb
 from flink_cdc_fluss_quickstart_spark.sql_frontend import Engine, _split_statements
@@ -1144,14 +1145,9 @@ def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
 
     view = eng.views["movie_revenue_realtime"]
     last = view.refresh_stats[-1]
-    sc = spark.sparkContext
-    sc.setJobGroup("replayed-view-refresh", "replayed view refresh")
-    try:
-        view.refresh(spark.createDataFrame([(1,)], "movie_id long"),
-                     last["batch_id"], last["writer"])
-        n = len(tracker.getJobIdsForGroup("replayed-view-refresh"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, n = count_jobs(spark, lambda: view.refresh(
+        spark.createDataFrame([(1,)], "movie_id long"),
+        last["batch_id"], last["writer"]))
     assert n == 0, f"a replayed view refresh ran {n} Spark jobs"
     assert view.refresh_stats[-1] is last
 

@@ -12,6 +12,7 @@ from decimal import Decimal
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
+from conftest import count_jobs
 from test_sql_frontend import FIXTURES, _engine_over_epochs, _view_matches_oracle
 
 from flink_cdc_fluss_quickstart_spark.sources import osb
@@ -449,19 +450,6 @@ def test_group_key_moving_update_refreshes_both_groups(spark, tmp_path):
     assert served[2].total_revenue == Decimal("10.00")
 
 
-def _jobs(spark, fn):
-    """(fn's result, the number of Spark jobs fn ran), by job group."""
-    sc = spark.sparkContext
-    group = f"commit-refresh-{id(fn)}"
-    sc.setJobGroup(group, "commit_refresh job count")
-    try:
-        out = fn()
-        job_ids = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(job_ids)
-
-
 def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
     """The optimistic view commit, with a deterministic interleaving on the
     view the Engine built from revenue-analytics.sql: a tickets refresh
@@ -517,7 +505,7 @@ def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
 
     n_built, n_stats = len(built), len(view.refresh_stats)
     for writer in ("rev-from-tickets", "rev-from-movies"):
-        _, n = _jobs(spark, lambda w=writer: view.refresh(affected, 1, w))
+        _, n = count_jobs(spark, lambda w=writer: view.refresh(affected, 1, w))
         assert n == 0, f"a replayed refresh ran {n} jobs"
     assert len(built) == n_built and len(view.refresh_stats) == n_stats
     assert served() == {1: ("New", 2)}

@@ -28,12 +28,11 @@ import sys
 import tempfile
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.plans.registry import all_specs  # noqa: E402
-from scale_smoke import build_scaled  # noqa: E402
+from tools.scale_smoke import build_scaled  # noqa: E402
 
 # builders that execute driver-side iteration rounds at BUILD time (GD /
 # Lloyd / power-iteration / pointer-jumping CC / BPE argmax) -- running them

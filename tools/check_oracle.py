@@ -10,6 +10,7 @@ SF, then compares row count, column names, and order-insensitive values
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from datetime import datetime, timezone
@@ -17,7 +18,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.plans.registry import all_specs  # noqa: E402
@@ -113,7 +114,6 @@ def main() -> int:
     names = [a for a in args if not a.startswith("/")]
 
     con = duckdb.connect()
-    import os
     for t in TABLE_NAMES:
         p = table_path(sf_dir, t)
         if os.path.exists(p):

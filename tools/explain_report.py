@@ -17,20 +17,19 @@ Usage: python tools/explain_report.py [sf_dir] > PLANS.md
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_cdc_fluss_quickstart_spark.session import get_spark  # noqa: E402
 from flink_cdc_fluss_quickstart_spark.plans.registry import all_specs  # noqa: E402
 
-# representative of every family in bench.py's HEADLINE set
+# every bench.HEADLINE query plus a representative of every other family
 REPORT = (
     "revenue_analytics",
-    # r11: the remaining benched names join the audit so EVERY bench.HEADLINE
-    # entry carries a PLANS.md row (the judge's every-benched-query check)
     "q1_pricing_summary",
     "q7_nation_trade_flows",
     "upsert_latest_snapshot",
@@ -42,8 +41,6 @@ REPORT = (
     "q3_top_revenue_orders",
     "q5_region_revenue",
     "q17_below_avg_quantity_revenue",
-    # r11 rotation wave: the benched set-op / grouping-set / distinct-agg
-    # family (every benched name carries a plan-audit entry)
     "setop_multi_status_customers",
     "setop_except_large_orders",
     "rollup_nation_segment_revenue",
@@ -62,8 +59,6 @@ REPORT = (
     "minhash_estimate_quality",
     "ngram_jaccard_neardup",
     "simhash_neardup_pairs",
-    # r15 HEADLINE rotate-ins (every benched name carries a PLANS.md row;
-    # the two rotate-outs above stay audited as tail entries)
     "bpe_token_stats",
     "ngram_containment_pairs",
     "decontamination_ngrams",
@@ -126,23 +121,15 @@ REPORT = (
     "multimodal_phash_dedup_planted",
     "gopher_quality_flags",
     "c4_quality_flags",
-    # r9 bench headliners (kept after their r14 bench out-rotation: the
-    # audits still pin their join shapes)
     "q9_profit_by_nation_year",
     "q18_large_volume_orders",
     "q21_sole_late_supplier",
-    # r13 bench rotation wave (r14 fix: these six were benched r13 without
-    # audit rows -- the REPORT update is part of the rotation ritual)
     "q2_min_cost_supplier",
     "q4_priority_order_exists",
     "q14_promo_revenue_share",
     "q19_disjunctive_predicates",
     "q20_part_heavy_suppliers",
     "q22_idle_rich_customers",
-    # r14 bench rotation wave (curriculum_order and events_running_stats
-    # were the new benched names without REPORT rows; the other three were
-    # already audited)
-    "curriculum_order",
     "events_running_stats",
 )
 
