@@ -13,8 +13,9 @@ Executes the statement classes the reference's entry points use
 
 DDL/SET are interpreted by this module (catalog bookkeeping, PK/watermark
 metadata, connector binding); DML SELECT text is handed to Spark SQL
-unchanged over temp views of the current snapshots -- Catalyst does the
-planning, exactly as Flink's planner does for the reference.
+unchanged, with each table it names bound to its current snapshot for that
+one call -- Catalyst does the planning, exactly as Flink's planner does for
+the reference.
 
 Streaming `INSERT INTO ... SELECT` (connector-backed source) becomes:
 - a replication pipeline when the SELECT is a plain projection (the three
@@ -24,9 +25,9 @@ Streaming `INSERT INTO ... SELECT` (connector-backed source) becomes:
   the reference's analytics job uses (two aliased staging tables equi-joined
   on the target's primary key, which also leads the GROUP BY), or the
   single-table GROUP BY over one staging table keyed by the target's
-  primary key, the front-end routes it to the AFFECTED-KEYS refresh: the
-  upstream changelogs stream again per view, and each micro-batch
-  re-aggregates ONLY the group keys the batch touched -- per-batch work
+  primary key, the front-end routes it to the AFFECTED-KEYS refresh: each
+  replication micro-batch that merges into a staging table the view reads
+  then re-aggregates ONLY the group keys the batch touched -- per-batch work
   proportional to the batch's keys, never the table. Arbitrary SELECT text
   that doesn't match the shape falls back to the full-requery refresh,
   re-refreshed on each script execution -- correct but O(table) per
@@ -42,6 +43,7 @@ import os
 import re
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -51,9 +53,8 @@ from flink_cdc_fluss_quickstart_spark.sources.osb import changelog_stream
 from flink_cdc_fluss_quickstart_spark.streaming.analytics import (
     affected_keys,
     commit_refresh,
-    strip_before,
 )
-from flink_cdc_fluss_quickstart_spark.streaming.cdc_pipeline import replicate
+from flink_cdc_fluss_quickstart_spark.streaming.cdc_pipeline import Refresh, replicate
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
 
 # Flink type -> Spark type (SURVEY.md 1.3)
@@ -292,7 +293,7 @@ def _parse_agg_view_shape(select_sql: str, target_spec: "TableSpec",
     # parser hardening: an alias that equals the OTHER table's base name
     # would make the first-token rewrite below hit the alias instead of the
     # table (e.g. `FROM a_staging b JOIN b c`); reject the shape and let the
-    # batch path resolve it through temp views instead
+    # full-requery path bind the tables by name instead
     base_names = set(tables.values())
     for alias, tbl in tables.items():
         if alias in base_names and alias != tbl:
@@ -451,10 +452,10 @@ class IncrementalAggView:
     data; `refresh_stats` records the per-batch key counts so tests (and
     operators) can assert that property."""
 
-    def __init__(self, engine: "Engine", target_name: str) -> None:
+    def __init__(self, engine: "Engine", target_name: str, shape: AggViewShape) -> None:
         self.engine = engine
         self.target_name = target_name
-        self.shape: AggViewShape | None = None
+        self.shape = shape
         self.refresh_stats: list[dict] = []
 
     def refresh(self, affected: DataFrame, batch_id: int, writer_id: str) -> None:
@@ -927,7 +928,8 @@ class Engine:
                 changelog_stream(self.spark, path, schema), target, ckpt,
                 select_cols=[f.name for f in target_spec.schema.fields],
                 watermark=spec.watermark if spec else None,
-                writer_id=f"sql-{src}", source=src,
+                writer_id=f"sql-{src}",
+                refreshes=lambda: self._view_refreshes(target_name, src),
             ))
             self.replicated_from[target_name] = src
             return
@@ -994,67 +996,60 @@ class Engine:
         self._refresh_view(target, target_spec, run_select())
 
     def _start_incremental_view(self, target_name: str, shape: AggViewShape) -> None:
-        """Affected-keys maintenance for a parsed aggregate view: one
-        streaming job per upstream changelog; each micro-batch (a) merges the
-        batch into its staging table (idempotent under its own writer id, so
-        the view never reads staging older than the keys it refreshes,
-        whatever order the user executes the scripts in) and (b) refreshes
-        exactly the group keys the batch carries.
+        """Register an affected-keys view and bring it up to date. The view
+        has no stream of its own: each replication micro-batch that merges
+        into a staging table the view reads then refreshes the group keys
+        the batch touched (`_view_refreshes`). A view already registered
+        with an equal shape is left as it is: re-executing its script runs
+        no job.
 
-        Locking: (a) takes only the staging table's own commit lock, and
-        its `source` mark makes it free when the replication stream already
-        applied the batch (and keeps a late-started view stream's replay of
-        old epochs from rolling staging rows back). (b) commits through
-        `commit_refresh`, which builds the changes outside the view's
-        commit lock and serializes only the view merge, rebuilding under
-        the lock when a staging table moved meanwhile -- so the two
-        upstream pipelines overlap, and a refresh built from a staging
-        state older than a committed one never lands after it. Each source
-        keeps its own view commit per micro-batch (writer id ending in the
-        source name)."""
-        view = self.views.get(target_name) or IncrementalAggView(self, target_name)
-        view.shape = shape
-        self.views[target_name] = view
-        target = self.stores[target_name]
+        Otherwise the view is registered FIRST, and then refreshed once
+        over every key it may hold -- the anchor table's snapshot keys and
+        the view's own, so groups that vanished meanwhile are deleted.
+        Replication streams may be running meanwhile. A staging merge that
+        committed before the registration is read by that initial refresh;
+        a micro-batch that looks the views up after it refreshes its own
+        keys, since the lookup follows the batch's merge. The refreshes
+        commit through `commit_refresh`, which rebuilds under the view's
+        commit lock when a staging table moved since the build, so a
+        refresh built from an older staging state never lands after one
+        that saw a newer state. Refreshing before registering would lose a
+        batch merged between the two."""
+        view = self.views.get(target_name)
+        if view is not None and view.shape == shape:
+            return
+        view = self.views[target_name] = IncrementalAggView(self, target_name, shape)
         anchor_key = shape.key_by_table[shape.anchor_table]
+        held = [
+            snap.select(F.col(col).alias(anchor_key))
+            for snap, col in ((self.stores[shape.anchor_table].snapshot(), anchor_key),
+                              (self.stores[target_name].snapshot(), shape.pk_col))
+            if snap is not None
+        ]
+        if held:
+            writer = f"view-{target_name}-init"
+            view.refresh(reduce(DataFrame.unionByName, held),
+                         self.stores[target_name].last_batch_id(writer) + 1, writer)
 
-        for tbl in shape.tables.values():
-            src = self.replicated_from[tbl]
-            path, schema = self.bound_sources[src]
-            staging_cols = [f.name for f in self.tables[tbl].schema.fields]
-            # carry the changelog's before-image through to the refresh so a
-            # group-key-moving update retracts from its OLD group too
-            extra = ["before"] if "before" in schema.fieldNames() else []
-            projected = changelog_stream(self.spark, path, schema).select(
-                "op", "seq", *staging_cols, *extra
-            )
-            ckpt = os.path.join(
-                self.warehouse, "_ckpt", f"view_{target_name}_from_{src}"
-            )
-            self._register_ckpt(target_name, ckpt)
-            src_key = shape.key_by_table[tbl]
-            store = self.stores[tbl]
-            sync_writer = f"view-sync-{target_name}-{src}"
-            view_writer = f"view-{target_name}-from-{src}"
+    def _view_refreshes(self, staging: str, src: str) -> list[Refresh]:
+        """The refreshes a replication micro-batch from ``src`` owes once it
+        is merged into ``staging``: one per registered view reading that
+        table, scoped to the group keys the batch touches and committed
+        under a writer id ending in the source name."""
+        out = []
+        for view in list(self.views.values()):
+            shape = view.shape
+            if staging not in shape.tables.values():
+                continue
 
-            def fb(batch_df: DataFrame, batch_id: int, _store=store, _src=src,
-                   _src_key=src_key, _sync=sync_writer, _writer=view_writer) -> None:
-                batch_df = batch_df.localCheckpoint(eager=True)
-                _store.merge(strip_before(batch_df), batch_id=batch_id,
-                             writer_id=_sync, source=_src)
-                view.refresh(
-                    affected_keys(batch_df, _src_key, anchor_key),
-                    batch_id,
-                    _writer,
-                )
+            def refresh(batch: DataFrame, batch_id: int, view=view,
+                        key=shape.key_by_table[staging],
+                        anchor_key=shape.key_by_table[shape.anchor_table]) -> None:
+                view.refresh(affected_keys(batch, key, anchor_key), batch_id,
+                             f"view-{view.target_name}-from-{src}")
 
-            q = (
-                projected.writeStream.foreachBatch(fb)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            self.queries.append(q)
+            out.append(refresh)
+        return out
 
     def _refresh_view(self, target: PKTable, spec: TableSpec, df: DataFrame) -> None:
         """Merge a full query result into a PK table: upsert all rows, delete

@@ -2,18 +2,18 @@
 reference's hard core: revenue-analytics.sql:46-65 + SURVEY.md A11/J1).
 
 The view itself is the SQL front-end's `IncrementalAggView`, built from the
-reference's own `INSERT INTO movie_revenue_realtime SELECT ...` statement.
-Its semantics (Flink's retraction machinery): at every point the view equals
-the batch aggregation of the CURRENT staging snapshots -- upstream UPDATEs
-retract from old groups, movie-title edits rewrite previously-emitted rows,
-deletes can empty a group entirely.
+reference's own `INSERT INTO movie_revenue_realtime SELECT ...` statement and
+refreshed inside each source's replication micro-batch, after the batch is
+merged into its staging table. Its semantics (Flink's retraction machinery):
+at every point the view equals the batch aggregation of the CURRENT staging
+snapshots -- upstream UPDATEs retract from old groups, movie-title edits
+rewrite previously-emitted rows, deletes can empty a group entirely.
 
 This module holds what that view's per-micro-batch refresh shares:
 
 - `affected_keys`: the group keys a changelog micro-batch touches, from both
   the after- and the before-image, so a group-key-moving update refreshes
   the old group too;
-- `strip_before`: the changelog batch as a staging merge takes it;
 - `commit_refresh`: the commit discipline that lets the two source streams
   (tickets, movies) refresh one view concurrently and serializes only the
   view merge;
@@ -54,12 +54,6 @@ def affected_keys(batch_df: DataFrame, key: str, out_key: str | None = None) -> 
             )
         )
     return keys
-
-
-def strip_before(batch_df: DataFrame) -> DataFrame:
-    """Drop the before-image before a staging merge: the PK snapshot is
-    after-images only (before is refresh-scoping metadata, not state)."""
-    return batch_df.drop("before") if "before" in batch_df.columns else batch_df
 
 
 def commit_refresh(target: PKTable, inputs: Sequence[PKTable],

@@ -13,13 +13,15 @@ checkpointing provides the reference (tickets-cdc.sql:2-5).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable
+
+Refresh = Callable[[DataFrame, int], None]
 
 
 def replicate(
@@ -29,11 +31,17 @@ def replicate(
     select_cols: Sequence[str] | None = None,
     watermark: tuple[str, str] | None = None,
     writer_id: str = "cdc",
-    source: str | None = None,
+    refreshes: Callable[[], list[Refresh]] | None = None,
 ) -> StreamingQuery:
     """Start a replication job that drains the changelog available now;
     returns the StreamingQuery (T7: a running INSERT INTO statement).
-    ``source`` names the changelog for `PKTable.merge`'s sequence mark."""
+
+    ``refreshes`` yields, per micro-batch, what else consumes the batch
+    once it is merged: each is called with the batch (``before`` image
+    included when the changelog carries it) and its batch id. It is asked
+    after the merge, so a consumer registered while the merge ran still
+    gets the batch; it is also asked before, and a batch nothing consumes
+    is not pinned."""
     df = changelog
     if watermark is not None:
         # T1: bounded out-of-orderness; gates state retention for any
@@ -52,19 +60,22 @@ def replicate(
         # the columns the merge itself consumes lead: the op column, then the
         # TARGET's ordering columns (not a hardcoded 'seq' -- a table ordered
         # by e.g. 'ts' would otherwise lose its ordering column to the
-        # projection and kill the query at first merge)
+        # projection and kill the query at first merge); the before-image
+        # trails for the refreshes
         lead = [c for c in ("op", *target.order_by) if c not in select_cols]
-        df = df.select(*lead, *select_cols)
-    elif "before" in df.columns:
-        # no projection requested: still strip the CDC before-image envelope
-        # -- the staging snapshot's contract is after-image payload columns
-        # only, and persisting a full pre-update row struct per row roughly
-        # doubles stored width for nothing (consumers that need the
-        # before-image read it from the changelog, not the table)
-        df = df.drop("before")
+        extra = ["before"] if "before" in df.columns and "before" not in select_cols else []
+        df = df.select(*lead, *select_cols, *extra)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        target.merge(batch_df, batch_id=batch_id, writer_id=writer_id, source=source)
+        if refreshes is not None and refreshes():
+            # one read of the changelog feeds the merge and every refresh
+            batch_df = batch_df.localCheckpoint(eager=True)
+        # the staging snapshot holds after-images only: the before-image is
+        # refresh-scoping metadata, and persisting a full pre-update row per
+        # row would roughly double stored width for nothing
+        target.merge(batch_df.drop("before"), batch_id=batch_id, writer_id=writer_id)
+        for refresh in refreshes() if refreshes is not None else ():
+            refresh(batch_df, batch_id)
 
     return (
         df.writeStream.foreachBatch(apply_batch)

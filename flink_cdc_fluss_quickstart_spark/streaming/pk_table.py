@@ -21,17 +21,6 @@ collapses those three roles into one structure, Spark-first:
   (reference: EXACTLY_ONCE checkpointing, tickets-cdc.sql:2-5) without
   requiring a transactional table format on the test host. In production
   the same interface maps 1:1 onto Delta/Iceberg MERGE.
-- a merge that names its changelog ``source`` also records, under the
-  manifest's ``marks``, the highest ordering value (``order_by[0]``, the
-  changelog's ``seq``) applied from that source. A later batch from the
-  same source -- another writer replaying the same changelog, e.g. a view
-  stream that re-merges what the replication stream already applied --
-  keeps only its rows above the mark, so a batch wholly at or below it
-  commits its txn marker and nothing else (no write job, no version): it
-  can neither redo the write nor roll newer rows back to older ones. The
-  mark assumes the source delivers in ``seq`` order across batches, as a
-  WAL tail does. ``overwrite()`` clears the marks with the txn markers; a
-  manifest without the field merges as if no mark were set.
 
 **One commit path.** Each writer only builds the frame it writes:
 ``merge`` and ``compact`` fold newer rows into the touched buckets' base
@@ -75,8 +64,8 @@ ingested into has no composite keys and reads as a plain pruned scan.
 
 **Metadata costs no Spark job.** Writers pin their input with one eager
 `localCheckpoint` whose job also reports, through an observation, the set
-of touched buckets, the row count and the highest ``seq`` (bounded by
-n_buckets, never per row).
+of touched buckets and the row count (bounded by n_buckets, never per
+row).
 """
 
 from __future__ import annotations
@@ -93,7 +82,6 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import (
-    IntegralType,
     LongType,
     StringType,
     StructField,
@@ -733,25 +721,23 @@ class PKTable:
 
     # -- write ------------------------------------------------------------
 
-    def _pin_batch(self, changes: DataFrame) -> tuple[DataFrame, list[int], int, object]:
+    def _pin_batch(self, changes: DataFrame) -> tuple[DataFrame, list[int], int]:
         """Collapse a changelog batch to its latest row per key (a batch
         may touch a key twice), tag each row's bucket and pin it -- the
         source micro-batch is transient, so every later read must see the
-        same rows. The pinning job also reports the touched buckets, the
-        row count and the highest ordering value (``order_by[0]``) through
-        an observation: no extra job, and the set is bounded by n_buckets
-        (one int per DISTINCT bucket, never per row)."""
+        same rows. The pinning job also reports the touched buckets and the
+        row count through an observation: no extra job, and the set is
+        bounded by n_buckets (one int per DISTINCT bucket, never per row)."""
         obs = Observation()
         pinned = (
             latest_by_key(changes, self.keys, self.order_by)
             .withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
             .observe(obs, F.collect_set("__bucket").alias("b"),
-                     F.count(F.lit(1)).alias("n"),
-                     F.max(self.order_by[0]).alias("hi"))
+                     F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
         seen = obs.get
-        return pinned, sorted(seen["b"]), seen["n"], seen["hi"]
+        return pinned, sorted(seen["b"]), seen["n"]
 
     def _write_version(self, df: DataFrame, version: int, n_buckets: int,
                        n_parts: int) -> dict[int, str]:
@@ -817,8 +803,7 @@ class PKTable:
         return expired
 
     def merge(self, changes: DataFrame, batch_id: int | None = None,
-              writer_id: str = "default", op_col: str = "op", *,
-              source: str | None = None) -> None:
+              writer_id: str = "default", op_col: str = "op") -> None:
         """Apply a changelog micro-batch: upsert I/U rows, drop D keys.
 
         Idempotent per (writer_id, batch_id): replays of an already-applied
@@ -828,28 +813,15 @@ class PKTable:
         auto-increments past the writer's last applied batch (an omitted id
         must never silently no-op a new batch).
 
-        ``source`` names the changelog the batch comes from, for writers
-        that may see the same changelog more than once: only rows above the
-        source's sequence mark apply, and the mark advances to the batch's
-        highest ``order_by[0]`` (see the module docstring). The ordering
-        column must then be integral.
-
         Commits serialize per table path (see _commit_lock), so concurrent
         pipelines merging into one serving table cannot interleave
         manifest updates.
         """
-        if source is not None:
-            seq = self.order_by[0]
-            if not isinstance(changes.schema[seq].dataType, IntegralType):
-                raise ValueError(
-                    f"a source mark needs an integral ordering column; {seq!r}"
-                    f" is {changes.schema[seq].dataType.simpleString()}"
-                )
         with _commit_lock(self.path):
-            self._merge_locked(changes, batch_id, writer_id, op_col, source)
+            self._merge_locked(changes, batch_id, writer_id, op_col)
 
     def _merge_locked(self, changes: DataFrame, batch_id: int | None,
-                      writer_id: str, op_col: str, source: str | None) -> None:
+                      writer_id: str, op_col: str) -> None:
         self._fence()
         m = self._read_manifest()
         if any("#" in k for k in m["buckets"]):
@@ -862,20 +834,11 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        mark = m.get("marks", {}).get(source)
-        if mark is not None:
-            # rows at or below the mark were applied from this source
-            # already; a batch wholly below it pins no rows and takes the
-            # empty-batch path (txn marker only)
-            seq = F.col(self.order_by[0])
-            changes = changes.filter(seq.isNull() | (seq > mark))
-        batch_latest, affected, n_rows, hi = self._pin_batch(changes)
+        batch_latest, affected, n_rows = self._pin_batch(changes)
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)
             return
-        if source is not None and hi is not None:
-            m.setdefault("marks", {})[source] = hi
 
         # fold the CURRENT state of only the affected buckets (bucket
         # pruning: untouched buckets are never read or rewritten) under the
@@ -953,7 +916,7 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        batch_latest, affected, _, _ = self._pin_batch(changes)
+        batch_latest, affected, _ = self._pin_batch(changes)
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)
@@ -1024,9 +987,6 @@ class PKTable:
         # the table at the seed. Re-seeding + replay stays safe without them:
         # a replayed upsert re-applies the same latest-per-key rows.
         m["txn"] = {}
-        # the source marks go with them: a re-seeded table holds none of
-        # the rows a mark says were applied
-        m.pop("marks", None)
         # ...and the retained history must follow the txn reset: a restarted
         # stream reuses batch ids from 0, so pre-overwrite (writer, batch)
         # tags would let snapshot_at_batch silently answer a NEW-epoch probe

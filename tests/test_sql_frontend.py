@@ -1095,53 +1095,59 @@ def _view_matches_oracle(eng) -> bool:
 
 
 def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
-    """The replication stream and the view stream both merge each staging
-    table's micro-batch; the per-source sequence mark makes the second of
-    the two free. So one reference-volume round (one changelog epoch per
-    source, every script re-executed as a deployment does) commits exactly
-    one version per staging table, and a view stream whose staging merge
-    the replication stream already applied writes nothing there. Also
-    pins the view stream's per-micro-batch Spark job count (its query's
-    job group) and checks that a replayed view refresh runs no job."""
+    """One stream per changelog source. A reference-volume round (one
+    changelog epoch per source, every script re-executed as a deployment
+    does) starts one replication query per source and none for the revenue
+    script: the view refreshes inside the movies and tickets micro-batches.
+    Each staging table commits exactly one version, and each micro-batch
+    reads its epoch once. Also pins each source's per-micro-batch Spark job
+    count (its query's job group) and checks that a replayed view refresh
+    runs no job."""
+    import os
+
+    import pyarrow.parquet as pq
+
     eng, expose = _engine_over_epochs(spark, tmp_path, epochs=5)
-    scripts = [(FIXTURES / f"{n}.sql").read_text()
-               for n in ("users-cdc", "movies-cdc", "tickets-cdc", "revenue-analytics")]
-    staging = ("movies_staging", "tickets_staging")
+    names = ("users-cdc", "movies-cdc", "tickets-cdc", "revenue-analytics")
+    scripts = {n: (FIXTURES / f"{n}.sql").read_text() for n in names}
+    staging = ("users_staging", "movies_staging", "tickets_staging")
 
     def versions():
         return {n: eng.store_for(n).current_version() for n in staging}
 
-    def run(texts):
-        for text in texts:
-            eng.execute(text)
-        started = list(eng.queries)
-        eng.await_all()
-        return started
+    def run(name):
+        n = len(eng.queries)
+        eng.execute(scripts[name])
+        return eng.queries[n:]
 
     expose(0, 3)
-    run(scripts)
+    for name in names:
+        run(name)
+    eng.await_all()
     assert _view_matches_oracle(eng)
 
     before = versions()
     expose(3, 4)
-    run(scripts)
+    started = [len(run(name)) for name in names]
+    eng.await_all()
+    assert started == [1, 1, 1, 0]
     assert versions() == {n: v + 1 for n, v in before.items()}
     assert _view_matches_oracle(eng)
 
-    # replication first, then the view: the view streams' staging merges
-    # are replays of applied rows -- no version -- and the view stream's
-    # micro-batch cost is deterministic
+    # one script at a time: each source's micro-batch cost is deterministic
     expose(4, 5)
-    run(scripts[:3])
-    before = versions()
-    view_queries = run(scripts[3:])
-    assert versions() == before
-    assert _view_matches_oracle(eng)
     tracker = spark.sparkContext.statusTracker()
-    for q in view_queries:
-        assert [p["numInputRows"] > 0 for p in q.recentProgress] == [True]
+    for name, src, budget in (("users-cdc", "users", 5), ("movies-cdc", "movies", 20),
+                              ("tickets-cdc", "tickets", 20)):
+        (q,) = run(name)
+        eng.await_all()
+        epoch = os.path.join(eng.bound_sources[f"pg_osb_{src}"][0], "epoch_0004.parquet")
+        assert [p["numInputRows"] for p in q.recentProgress] == [
+            pq.read_metadata(epoch).num_rows]
         n = len(tracker.getJobIdsForGroup(str(q.runId)))
-        assert n <= 17, f"a view-stream micro-batch ran {n} Spark jobs"
+        assert n <= budget, f"a {src} micro-batch ran {n} Spark jobs"
+    assert run("revenue-analytics") == []
+    assert _view_matches_oracle(eng)
 
     view = eng.views["movie_revenue_realtime"]
     last = view.refresh_stats[-1]

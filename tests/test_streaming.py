@@ -6,6 +6,8 @@ snapshots -- the invariant Flink's retraction machinery guarantees."""
 
 from __future__ import annotations
 
+import os
+import threading
 from datetime import datetime
 from decimal import Decimal
 
@@ -242,6 +244,10 @@ def test_revenue_view_recovers_from_checkpoint_restart(spark, tmp_path):
         restarted.bind_source(name, path, schema)
     expose(3, 6)
     final = run(restarted)
+    # the view is refreshed inside the replication streams: only their
+    # checkpoints exist
+    assert sorted(os.listdir(os.path.join(eng.warehouse, "_ckpt"))) == [
+        "movies_staging_from_pg_osb_movies", "tickets_staging_from_pg_osb_tickets"]
 
     # the resumed process actually advanced the view (epochs 4-6 carry new
     # tickets and at least one exchange), it did not just re-serve half one
@@ -251,6 +257,64 @@ def test_revenue_view_recovers_from_checkpoint_restart(spark, tmp_path):
     assert any("director's cut" in r.movie_title for r in _served(restarted).values())
     statuses = {r.status for r in restarted.snapshot("tickets_staging").collect()}
     assert {"live", "finished"} <= statuses
+
+
+def test_view_registered_mid_stream_converges(spark, tmp_path, monkeypatch):
+    """A view registered while the replication streams run misses no batch.
+    The revenue script runs inside the tickets stream's last micro-batch,
+    after its staging commit and before it looks the views up. While the
+    view's initial refresh commits, a movies micro-batch carrying a title
+    edit merges and looks the views up: it must already find the view, or
+    nothing refreshes the edited group (the initial refresh was built
+    before the edit). Re-executing the script on the maintained view then
+    runs no Spark job and no refresh."""
+    eng, dirs = _revenue_engine(spark, tmp_path)
+    movies = [[{"op": "I", "seq": i, **_movie(i)} for i in (1, 2)],
+              [{"op": "I", "seq": 3, **_movie(3)}],
+              [{"op": "U", "seq": 6, **_movie(1, "Movie 1 (edited)"), "before": _movie(1)}]]
+    tickets = [[{"op": "I", "seq": 4, **_ticket(1, movie_id=1)}],
+               [{"op": "I", "seq": 5, **_ticket(2, movie_id=2)}]]
+    for epoch, rows in enumerate(movies):
+        osb.write_epoch(dirs["movies"], epoch, rows, osb.MOVIES_SCHEMA)
+    for epoch, rows in enumerate(tickets):
+        osb.write_epoch(dirs["tickets"], epoch, rows, osb.TICKETS_SCHEMA)
+    revenue = (FIXTURES / "revenue-analytics.sql").read_text()
+    initial_commit, edit_merged, edit_looked_up = (threading.Event() for _ in range(3))
+    merge, lookup = PKTable.merge, eng._view_refreshes
+
+    def staged_merge(store, changes, batch_id=None, writer_id="default", **kw):
+        table = os.path.basename(store.path)
+        edit = table == "movies_staging" and batch_id == len(movies) - 1
+        if edit:
+            initial_commit.wait(300)
+        elif writer_id.endswith("-init"):
+            initial_commit.set()
+            edit_looked_up.wait(300)
+        merge(store, changes, batch_id, writer_id, **kw)
+        if edit:
+            edit_merged.set()
+        if table == "tickets_staging" and batch_id == len(tickets) - 1:
+            eng.execute(revenue)
+
+    def watched_lookup(staging, src):
+        out = lookup(staging, src)
+        if staging == "movies_staging" and edit_merged.is_set():
+            edit_looked_up.set()
+        return out
+
+    monkeypatch.setattr(PKTable, "merge", staged_merge)
+    monkeypatch.setattr(eng, "_view_refreshes", watched_lookup)
+    for name in ("movies-cdc", "tickets-cdc"):
+        eng.execute((FIXTURES / f"{name}.sql").read_text())
+    eng.await_all()
+    assert edit_looked_up.is_set(), "the edit did not merge during the initial refresh"
+    assert _view_matches_oracle(eng)
+    assert _served(eng)[1].movie_title == "Movie 1 (edited)"
+
+    view = eng.views["movie_revenue_realtime"]
+    n_stats = len(view.refresh_stats)
+    _, n_jobs = count_jobs(spark, lambda: eng.execute(revenue))
+    assert (n_jobs, len(view.refresh_stats), eng.queries) == (0, n_stats, [])
 
 
 def test_revenue_view_invariants(spark, workload, tmp_path):
@@ -332,30 +396,14 @@ def test_overwrite_resets_txn_watermarks(spark, tmp_path):
         batch_id=57,
         writer_id="cdc",
     )
-    # ... and so must the per-source sequence marks: the restarted source's
-    # seqs may sit below the mark the pre-seed stream left
-    t.merge(
-        spark.createDataFrame([("U", 100, 2, "x")], "op string, seq long, k long, v string"),
-        batch_id=0,
-        writer_id="src-writer",
-        source="src",
-    )
-    assert t._read_manifest()["marks"] == {"src": 100}
     t.overwrite(spark.createDataFrame([(1, "seeded", 0)], "k long, v string, seq long"))
-    assert "marks" not in t._read_manifest()
     t.merge(
         spark.createDataFrame([("U", 2, 1, "post-seed")], "op string, seq long, k long, v string"),
         batch_id=0,
         writer_id="cdc",
     )
-    t.merge(
-        spark.createDataFrame([("I", 3, 2, "post-seed")], "op string, seq long, k long, v string"),
-        batch_id=0,
-        writer_id="src-writer",
-        source="src",
-    )
     got = {r["k"]: r["v"] for r in t.snapshot().collect()}
-    assert got == {1: "post-seed", 2: "post-seed"}  # both post-seed batches applied
+    assert got == {1: "post-seed"}  # the post-seed batch applied
 
 
 def test_merge_default_batch_id_auto_increments(spark, tmp_path):
