@@ -46,7 +46,7 @@ from datetime import datetime
 from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from flink_cdc_fluss_quickstart_spark.sources.osb import changelog_stream
@@ -462,35 +462,29 @@ class IncrementalAggView:
         """`affected` carries one column: the anchor table's key values the
         source micro-batch touched (pre-renamed by the caller). Commits
         through `commit_refresh`, so two source streams refresh the view
-        concurrently and only the view merges serialize."""
+        concurrently and only the view merges serialize. Each committed
+        refresh records its key count and whether it was rebuilt under the
+        view's commit lock."""
         eng = self.engine
-        target = eng.stores[self.target_name]
-        stat: dict = {}
-
-        def build() -> DataFrame:
-            changes, stat["n_affected"] = self._changes(affected, batch_id)
-            return changes
-
         inputs = [eng.stores[t] for t in self.shape.tables.values()]
-        if commit_refresh(target, inputs, build, batch_id, writer_id):
-            self.refresh_stats.append(
-                {"writer": writer_id, "batch_id": batch_id, **stat}
-            )
+        committed = commit_refresh(eng.stores[self.target_name], inputs,
+                                   lambda: self._changes(affected, batch_id),
+                                   batch_id, writer_id)
+        if committed is not None:
+            pinned, rebuilt = committed
+            # one U or D row per distinct affected key: the pin's row count
+            self.refresh_stats.append({"writer": writer_id, "batch_id": batch_id,
+                                       "n_affected": pinned.n_rows, "rebuilt": rebuilt})
 
-    def _changes(self, affected: DataFrame, batch_id: int) -> tuple[DataFrame, int]:
+    def _changes(self, affected: DataFrame, batch_id: int) -> DataFrame:
         """The U/D changes re-aggregating the affected group keys from the
-        staging tables' current snapshots, and the number of keys."""
+        staging tables' current snapshots: a U row per group the keys still
+        hold, a D row per key whose group vanished -- one row per distinct
+        key."""
         eng, shape = self.engine, self.shape
         spec = eng.tables[self.target_name]
         anchor_key = shape.key_by_table[shape.anchor_table]
-        # the pinning job also counts the keys (one row per distinct group
-        # key in the micro-batch): no second job for the stat
-        obs = Observation()
-        affected = (
-            affected.distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
+        affected = affected.distinct()
         frames = {}
         for tbl, arg in shape.view_names.items():
             snap = eng.stores[tbl].snapshot()
@@ -507,10 +501,9 @@ class IncrementalAggView:
         gone = affected.toDF(shape.pk_col).join(
             aligned.select(shape.pk_col), shape.pk_col, "left_anti"
         )
-        changes = _refresh_changes(
+        return _refresh_changes(
             eng.stores[self.target_name].keys, spec, aligned, gone, batch_id
         )
-        return changes, obs.get["n"]
 
 
 class Engine:
@@ -1010,8 +1003,10 @@ class Engine:
         committed before the registration is read by that initial refresh;
         a micro-batch that looks the views up after it refreshes its own
         keys, since the lookup follows the batch's merge. The refreshes
-        commit through `commit_refresh`, which rebuilds under the view's
-        commit lock when a staging table moved since the build, so a
+        commit through `commit_refresh`: a build that missed a staging
+        merge is rebuilt under the view's commit lock when a refresh that
+        read that merge already committed; otherwise it commits first and
+        that merge's own refresh overwrites its groups after it. So a
         refresh built from an older staging state never lands after one
         that saw a newer state. Refreshing before registering would lose a
         batch merged between the two."""

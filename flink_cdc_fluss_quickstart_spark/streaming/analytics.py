@@ -16,7 +16,8 @@ This module holds what that view's per-micro-batch refresh shares:
   the old group too;
 - `commit_refresh`: the commit discipline that lets the two source streams
   (tickets, movies) refresh one view concurrently and serializes only the
-  view merge;
+  view merge: one build and one pin per commit, rebuilt under the lock
+  only when both a staging input and the view moved during the build;
 - `revenue_aggregate`: the batch form of the analytics query, the tests'
   reference oracle.
 """
@@ -28,7 +29,11 @@ from collections.abc import Callable, Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from flink_cdc_fluss_quickstart_spark.streaming.pk_table import PKTable, _commit_lock
+from flink_cdc_fluss_quickstart_spark.streaming.pk_table import (
+    PinnedBatch,
+    PKTable,
+    _commit_lock,
+)
 
 # movie_revenue_realtime schema (revenue-analytics.sql:23-43)
 REVENUE_STATUSES = ("scheduled", "live", "finished")
@@ -57,41 +62,47 @@ def affected_keys(batch_df: DataFrame, key: str, out_key: str | None = None) -> 
 
 
 def commit_refresh(target: PKTable, inputs: Sequence[PKTable],
-                   build: Callable[[], DataFrame | None],
-                   batch_id: int, writer_id: str) -> bool:
+                   build: Callable[[], DataFrame],
+                   batch_id: int, writer_id: str) -> tuple[PinnedBatch, bool] | None:
     """Commit one refresh of a view maintained from the staging tables
     ``inputs`` into ``target``, serializing only the commit.
 
     ``build`` reads the inputs' current snapshots and returns the view's
-    U/D changes (None: nothing to merge). Each input's manifest version is
-    recorded first; the changes are then built and pinned outside the
-    target's commit lock. Under the lock, if any input's version moved
-    meanwhile, they are rebuilt there; then they merge.
+    U/D changes, at most one row per view key. The target's manifest
+    version is recorded first, then each input's; the changes are then
+    built and pinned (`PKTable.pin`) outside the target's commit lock.
+    Under the lock they are rebuilt only if an input moved AND the target
+    moved since; either way the one pinned batch merges.
 
-    Invariant: every committed refresh was built from staging state that
-    was current at some moment after its own batch's staging merge, and
-    any later staging merge is followed by its own refresh, which reads at
-    least that merge's state and commits after this one. So a refresh
-    built from an older snapshot -- a stale movie title -- never commits
-    after one that saw a newer state.
+    Why committing a build that missed a staging merge M is sound: M
+    committed after the inputs' versions were recorded, and M's own
+    refresh starts after M and covers every group M touched. If that
+    refresh has already committed, the target's version moved, so this
+    refresh rebuilds from a state that includes M. If it has not, it
+    commits after this one and overwrites every group this build could
+    have got wrong; groups M did not touch have the same inputs in both
+    states. So a build never lands after a refresh that read a staging
+    state the build missed: that refresh committed after the target's
+    version was recorded. Recording the target first matters: a refresh
+    committing between the two reads would otherwise go unseen. A
+    data-free txn commit does not move the version, but it happens only
+    when a refresh has no affected keys, and then it covers no group.
 
     A (writer_id, batch_id) the target already applied (a replayed batch)
-    returns before building. Returns whether a refresh was committed."""
+    returns None before building. Otherwise returns the committed pinned
+    changes and whether they were rebuilt under the lock."""
     if target.last_batch_id(writer_id) >= batch_id:
-        return False
-
-    def pinned() -> DataFrame | None:
-        changes = build()
-        return None if changes is None else changes.localCheckpoint(eager=True)
-
-    seen = [t.current_version() for t in inputs]
-    changes = pinned()
+        return None
+    seen_target = target.current_version()
+    seen_inputs = [t.current_version() for t in inputs]
+    changes = target.pin(build())
     with _commit_lock(target.path):
-        if [t.current_version() for t in inputs] != seen:
-            changes = pinned()
-        if changes is not None:
-            target.merge(changes, batch_id=batch_id, writer_id=writer_id)
-    return True
+        rebuilt = (target.current_version() != seen_target
+                   and [t.current_version() for t in inputs] != seen_inputs)
+        if rebuilt:
+            changes = target.pin(build())
+        target.merge(changes, batch_id=batch_id, writer_id=writer_id)
+    return changes, rebuilt
 
 
 def revenue_aggregate(tickets: DataFrame, movies: DataFrame) -> DataFrame:

@@ -65,7 +65,9 @@ ingested into has no composite keys and reads as a plain pruned scan.
 **Metadata costs no Spark job.** Writers pin their input with one eager
 `localCheckpoint` whose job also reports, through an observation, the set
 of touched buckets and the row count (bounded by n_buckets, never per
-row).
+row). A writer that must pin before it takes the commit lock (the view
+refresh) pins through `pin` and hands `merge` that `PinnedBatch`, so its
+batch is pinned once.
 """
 
 from __future__ import annotations
@@ -78,6 +80,7 @@ import tempfile
 import threading
 import time
 from collections.abc import Sequence
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -102,6 +105,17 @@ MANIFEST = "manifest.json"
 # readable floor advances -- Iceberg's expire_snapshots. Reading a pruned or
 # GC-expired version raises instead of silently returning a wrong state.
 HISTORY_KEEP = 512
+
+
+class PinnedBatch(NamedTuple):
+    """A batch `PKTable.pin` tagged and pinned for one table: the frame
+    (its rows' ``__bucket`` hashed under ``n_buckets``), the touched bucket
+    ids and the row count the pinning job observed."""
+
+    frame: DataFrame
+    buckets: list[int]
+    n_rows: int
+    n_buckets: int
 
 
 class StaleWriterError(RuntimeError):
@@ -721,23 +735,29 @@ class PKTable:
 
     # -- write ------------------------------------------------------------
 
-    def _pin_batch(self, changes: DataFrame) -> tuple[DataFrame, list[int], int]:
-        """Collapse a changelog batch to its latest row per key (a batch
-        may touch a key twice), tag each row's bucket and pin it -- the
-        source micro-batch is transient, so every later read must see the
-        same rows. The pinning job also reports the touched buckets and the
-        row count through an observation: no extra job, and the set is
-        bounded by n_buckets (one int per DISTINCT bucket, never per row)."""
+    def pin(self, changes: DataFrame) -> PinnedBatch:
+        """Tag each row of a batch that holds at most one row per key with
+        its bucket and pin it -- the source micro-batch is transient, so
+        every later read must see the same rows. The pinning job also
+        reports the touched buckets and the row count through an
+        observation: no extra job, and the set is bounded by n_buckets (one
+        int per DISTINCT bucket, never per row). `merge` takes the result
+        as it is, without collapsing or pinning it again."""
         obs = Observation()
-        pinned = (
-            latest_by_key(changes, self.keys, self.order_by)
-            .withColumn("__bucket", _bucket_expr(self.keys, self.n_buckets))
+        n_buckets = self.n_buckets
+        frame = (
+            changes.withColumn("__bucket", _bucket_expr(self.keys, n_buckets))
             .observe(obs, F.collect_set("__bucket").alias("b"),
                      F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
         seen = obs.get
-        return pinned, sorted(seen["b"]), seen["n"]
+        return PinnedBatch(frame, sorted(seen["b"]), seen["n"], n_buckets)
+
+    def _pin_batch(self, changes: DataFrame) -> PinnedBatch:
+        """`pin` a changelog batch collapsed to its latest row per key (a
+        batch may touch a key twice)."""
+        return self.pin(latest_by_key(changes, self.keys, self.order_by))
 
     def _write_version(self, df: DataFrame, version: int, n_buckets: int,
                        n_parts: int) -> dict[int, str]:
@@ -802,9 +822,11 @@ class PKTable:
         m["gc"] = keep
         return expired
 
-    def merge(self, changes: DataFrame, batch_id: int | None = None,
+    def merge(self, changes: DataFrame | PinnedBatch, batch_id: int | None = None,
               writer_id: str = "default", op_col: str = "op") -> None:
         """Apply a changelog micro-batch: upsert I/U rows, drop D keys.
+        ``changes`` is a changelog frame, or a batch this table already
+        `pin`ned (its bucket count is checked: a rescale since re-tags it).
 
         Idempotent per (writer_id, batch_id): replays of an already-applied
         batch are no-ops, giving exactly-once results over at-least-once
@@ -820,7 +842,7 @@ class PKTable:
         with _commit_lock(self.path):
             self._merge_locked(changes, batch_id, writer_id, op_col)
 
-    def _merge_locked(self, changes: DataFrame, batch_id: int | None,
+    def _merge_locked(self, changes: DataFrame | PinnedBatch, batch_id: int | None,
                       writer_id: str, op_col: str) -> None:
         self._fence()
         m = self._read_manifest()
@@ -834,7 +856,11 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        batch_latest, affected, n_rows = self._pin_batch(changes)
+        if not isinstance(changes, PinnedBatch):
+            changes = self._pin_batch(changes)
+        elif changes.n_buckets != self.n_buckets:
+            changes = self.pin(changes.frame.drop("__bucket"))
+        batch_latest, affected, n_rows, _ = changes
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)
@@ -916,7 +942,7 @@ class PKTable:
         if m["txn"].get(writer_id, -1) >= batch_id:
             return
 
-        batch_latest, affected, _ = self._pin_batch(changes)
+        batch_latest, affected, _, _ = self._pin_batch(changes)
         if not affected:
             m["txn"][writer_id] = batch_id
             self._write_manifest(m)

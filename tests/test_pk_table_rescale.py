@@ -83,6 +83,20 @@ def test_rescale_same_count_is_noop(spark, tmp_path):
     assert t._read_manifest()["version"] == v
 
 
+def test_batch_pinned_before_a_rescale_merges_under_the_new_count(spark, tmp_path):
+    """A batch pinned under the old bucket count and merged after a rescale
+    is re-tagged under the new one: every key keeps one row, and the batch's
+    upserts and deletes land."""
+    t = _seeded(spark, tmp_path)
+    batch = t.pin(_rows(spark, [(1, k, f"upd{k}") for k in range(0, 64, 3)]
+                       + [(1, 1, None), (1, 200, "new")]))
+    t.rescale(8)
+    t.merge(batch, batch_id=0)
+    want = {k: f"upd{k}" if k % 3 == 0 else f"base{k}" for k in range(64) if k != 1}
+    assert _snap(t) == {**want, 200: "new"}
+    assert t.snapshot().count() == len(want) + 1
+
+
 def test_lookup_prunes_with_new_count_and_time_travels_with_old(spark, tmp_path):
     """After a 4 -> 32 rescale a point read prunes against 32 buckets (the
     whole point: finer serving fractions); a versioned lookup at the

@@ -1101,8 +1101,8 @@ def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
     script: the view refreshes inside the movies and tickets micro-batches.
     Each staging table commits exactly one version, and each micro-batch
     reads its epoch once. Also pins each source's per-micro-batch Spark job
-    count (its query's job group) and checks that a replayed view refresh
-    runs no job."""
+    count (its query's job group) and a 4-key view refresh's, and checks
+    that a replayed view refresh runs no job."""
     import os
 
     import pyarrow.parquet as pq
@@ -1137,8 +1137,8 @@ def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
     # one script at a time: each source's micro-batch cost is deterministic
     expose(4, 5)
     tracker = spark.sparkContext.statusTracker()
-    for name, src, budget in (("users-cdc", "users", 5), ("movies-cdc", "movies", 20),
-                              ("tickets-cdc", "tickets", 20)):
+    for name, src, budget in (("users-cdc", "users", 5), ("movies-cdc", "movies", 16),
+                              ("tickets-cdc", "tickets", 18)):
         (q,) = run(name)
         eng.await_all()
         epoch = os.path.join(eng.bound_sources[f"pg_osb_{src}"][0], "epoch_0004.parquet")
@@ -1156,6 +1156,14 @@ def test_engine_round_merges_each_staging_table_once(spark, tmp_path):
         last["batch_id"], last["writer"]))
     assert n == 0, f"a replayed view refresh ran {n} Spark jobs"
     assert view.refresh_stats[-1] is last
+
+    # a refresh of 4 keys on its own: one build, one pin, one merge
+    keys = spark.createDataFrame([(k,) for k in (1, 2, 3, 4)], "movie_id long")
+    _, n = count_jobs(spark, lambda: view.refresh(keys, 0, "view-job-guard"))
+    assert n <= 12, f"a 4-key view refresh ran {n} Spark jobs"
+    assert {k: view.refresh_stats[-1][k] for k in ("n_affected", "rebuilt")} == {
+        "n_affected": 4, "rebuilt": False}
+    assert _view_matches_oracle(eng)
 
 
 def test_await_all_keeps_unfinished_handles_when_a_query_fails(spark, tmp_path):

@@ -498,65 +498,119 @@ def test_group_key_moving_update_refreshes_both_groups(spark, tmp_path):
     assert served[2].total_revenue == Decimal("10.00")
 
 
-def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
-    """The optimistic view commit, with a deterministic interleaving on the
-    view the Engine built from revenue-analytics.sql: a tickets refresh
-    builds its changes from the old movie title; before that build returns,
-    a title edit and the edit's own refresh commit. The tickets refresh
-    must notice the moved movies version under the view's commit lock and
-    rebuild there -- committing the first build would put the stale title
-    back after the newer one. A replayed (writer, batch) then returns
-    before building: no Spark job at all."""
+def _refresh_around(spark, tmp_path, mid_build):
+    """A deterministic interleaving on the view the Engine built from
+    revenue-analytics.sql. Movie 1 ("Old") and ticket 1 are merged and
+    refreshed; ticket 2 is merged, and its refresh (writer
+    rev-from-tickets, batch 1) runs ``mid_build(eng, view)`` once, after
+    its first build is pinned and before it takes the view's commit lock.
+    Returns the engine, the view and the movie titles each of that
+    refresh's builds read."""
     eng, _ = _revenue_engine(spark, tmp_path)
     _run_scripts(eng)
     view = eng.views["movie_revenue_realtime"]
     tickets, movies = eng.store_for("tickets_staging"), eng.store_for("movies_staging")
-    affected = spark.createDataFrame([(1,)], "movie_id long")
+    movies.merge(_title_edit(spark, 1, "Old"), batch_id=0, writer_id="movies-cdc")
+    tickets.merge(_new_ticket(spark, 2, 1), batch_id=0, writer_id="tickets-cdc")
+    view.refresh(_movie_one(spark), 0, "rev-from-tickets")
+    assert _titles_and_counts(eng) == {1: ("Old", 1)}
+    tickets.merge(_new_ticket(spark, 3, 2), batch_id=1, writer_id="tickets-cdc")
 
-    def movie(seq, title):
-        return _staging_batch(spark, osb.MOVIES_SCHEMA,
-                              [{"op": "U", "seq": seq, **_movie(1, title)}])
-
-    def ticket(seq, tid):
-        return _staging_batch(spark, osb.TICKETS_SCHEMA,
-                              [{"op": "I", "seq": seq, **_ticket(tid, movie_id=1)}])
-
-    def served():
-        return {m: (r.movie_title, r.ticket_count) for m, r in _served(eng).items()}
-
-    movies.merge(movie(1, "Old"), batch_id=0, writer_id="movies-cdc")
-    tickets.merge(ticket(2, 1), batch_id=0, writer_id="tickets-cdc")
-    view.refresh(affected, 0, "rev-from-tickets")
-    assert served() == {1: ("Old", 1)}
-
-    tickets.merge(ticket(3, 2), batch_id=1, writer_id="tickets-cdc")
-    build, built, editing = view._changes, [], []
+    build, built, nested = view._changes, [], []
 
     def interleaved(keys, batch_id):
-        changes, n = build(keys, batch_id)
-        changes = changes.localCheckpoint(eager=True)
-        if not editing:
+        changes = build(keys, batch_id).localCheckpoint(eager=True)
+        if not nested:
             built.append({r.movie_title for r in changes.collect()})
             if len(built) == 1:
-                # the edit and its refresh land while the first build is out
-                editing.append(True)
-                movies.merge(movie(4, "New"), batch_id=1, writer_id="movies-cdc")
-                view.refresh(affected, 1, "rev-from-movies")
-                editing.clear()
-                assert served() == {1: ("New", 2)}
-        return changes, n
+                nested.append(True)
+                mid_build(eng, view)
+                nested.clear()
+        return changes
 
     view._changes = interleaved
-    view.refresh(affected, 1, "rev-from-tickets")
-    assert built == [{"Old"}, {"New"}], "the first build must be rebuilt under the lock"
-    assert served() == {1: ("New", 2)}
+    view.refresh(_movie_one(spark), 1, "rev-from-tickets")
+    del view._changes
+    assert view.refresh_stats[-1]["writer"] == "rev-from-tickets"
+    return eng, view, built
 
-    n_built, n_stats = len(built), len(view.refresh_stats)
+
+def _title_edit(spark, seq, title):
+    return _staging_batch(spark, osb.MOVIES_SCHEMA,
+                          [{"op": "U", "seq": seq, **_movie(1, title)}])
+
+
+def _new_ticket(spark, seq, tid):
+    return _staging_batch(spark, osb.TICKETS_SCHEMA,
+                          [{"op": "I", "seq": seq, **_ticket(tid, movie_id=1)}])
+
+
+def _movie_one(spark):
+    return spark.createDataFrame([(1,)], "movie_id long")
+
+
+def _titles_and_counts(eng):
+    return {m: (r.movie_title, r.ticket_count) for m, r in _served(eng).items()}
+
+
+def test_commit_refresh_rebuilds_when_a_staging_input_moved(spark, tmp_path):
+    """A title edit and the edit's own refresh commit while a tickets
+    refresh's build (from the old title) is out. Both a staging input and
+    the view moved, so the tickets refresh must rebuild under the view's
+    commit lock -- committing the first build would put the stale title
+    back after the newer one. A replayed (writer, batch) then returns
+    before building: no Spark job at all."""
+    def edit_and_refresh(eng, view):
+        eng.store_for("movies_staging").merge(
+            _title_edit(spark, 4, "New"), batch_id=1, writer_id="movies-cdc")
+        view.refresh(_movie_one(spark), 1, "rev-from-movies")
+        assert _titles_and_counts(eng) == {1: ("New", 2)}
+
+    eng, view, built = _refresh_around(spark, tmp_path, edit_and_refresh)
+    assert built == [{"Old"}, {"New"}], "the first build must be rebuilt under the lock"
+    assert view.refresh_stats[-1]["rebuilt"] is True
+    assert _titles_and_counts(eng) == {1: ("New", 2)}
+
+    n_stats = len(view.refresh_stats)
     for writer in ("rev-from-tickets", "rev-from-movies"):
-        _, n = count_jobs(spark, lambda w=writer: view.refresh(affected, 1, w))
+        _, n = count_jobs(spark, lambda w=writer: view.refresh(_movie_one(spark), 1, w))
         assert n == 0, f"a replayed refresh ran {n} jobs"
-    assert len(built) == n_built and len(view.refresh_stats) == n_stats
-    assert served() == {1: ("New", 2)}
+    assert len(view.refresh_stats) == n_stats
+    assert _titles_and_counts(eng) == {1: ("New", 2)}
+
+
+def test_commit_refresh_keeps_its_build_when_only_a_staging_input_moved(spark, tmp_path):
+    """A title edit merges while a tickets refresh's build (from the old
+    title) is out, but the edit's own refresh has not committed. The view
+    did not move, so the build commits as it is: one build. The edit's
+    refresh then commits after it and fixes the group both touched."""
+    def edit_only(eng, view):
+        eng.store_for("movies_staging").merge(
+            _title_edit(spark, 4, "New"), batch_id=1, writer_id="movies-cdc")
+
+    eng, view, built = _refresh_around(spark, tmp_path, edit_only)
+    assert built == [{"Old"}], "a build no later refresh saw the edit of was rebuilt"
+    assert view.refresh_stats[-1]["rebuilt"] is False
+    assert _titles_and_counts(eng) == {1: ("Old", 2)}
+
+    view.refresh(_movie_one(spark), 1, "rev-from-movies")
+    assert _titles_and_counts(eng) == {1: ("New", 2)}
+    assert _view_matches_oracle(eng)
+
+
+def test_commit_refresh_keeps_its_build_when_only_the_view_moved(spark, tmp_path):
+    """Another writer's refresh commits to the view while a tickets
+    refresh's build is out, and no staging input moves: the build read the
+    current staging state, so it commits without a rebuild."""
+    def other_refresh(eng, view):
+        view.refresh(_movie_one(spark), 0, "rev-other")
+
+    eng, view, built = _refresh_around(spark, tmp_path, other_refresh)
+    assert built == [{"Old"}], "a build of the current staging state was rebuilt"
+    assert view.refresh_stats[-1]["rebuilt"] is False
+    assert view.refresh_stats[-2]["writer"] == "rev-other"
+    assert _titles_and_counts(eng) == {1: ("Old", 2)}
+    assert _view_matches_oracle(eng)
 
 
 def test_concurrent_refreshes_converge_under_stress(spark, tmp_path):
